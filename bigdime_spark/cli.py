@@ -22,50 +22,164 @@ import sys
 import time
 
 
-def _parse_grouped_bound(token: str):
-    """TARGET:GROUP:METRIC:LO~HI[:MINSUP] → GroupedBound (shared by
-    `run --grouped-bound` and `stream --grouped-bound`)."""
-    from bigdime_spark.operators.grouped import GroupedBound
+def _bound(flag: str, text: str) -> tuple[float | None, float | None]:
+    """LO~HI, either side empty = open."""
+    sides = text.split("~")
+    if len(sides) != 2:
+        raise ValueError(f"{flag}: bound must be LO~HI, got {text!r}")
+    try:
+        return tuple(float(v) if v else None for v in sides)
+    except ValueError as exc:
+        raise ValueError(f"{flag}: {exc}")
 
+
+def _grouped_bound_entry(token: str) -> dict:
+    """TARGET:GROUP:METRIC:LO~HI[:MINSUP] → a `grouped_bounds` config
+    entry (its keys are GroupedBound's arguments)."""
     sides = token.split(":")
     if len(sides) not in (4, 5) or not all(sides[:3]):
         raise ValueError(
             "--grouped-bound: expected "
             f"TARGET:GROUP:METRIC:LO~HI[:MINSUP], got {token!r}"
         )
-    bound = sides[3].split("~")
-    if len(bound) != 2:
-        raise ValueError(
-            f"--grouped-bound: bound must be LO~HI, got {sides[3]!r}"
-        )
+    lo, hi = _bound("--grouped-bound", sides[3])
     try:
-        return GroupedBound(
-            sides[0],
-            sides[1],
-            metric=sides[2],
-            lo=float(bound[0]) if bound[0] else None,
-            hi=float(bound[1]) if bound[1] else None,
-            min_support=int(sides[4]) if len(sides) == 5 else 1,
-        )
+        min_support = int(sides[4]) if len(sides) == 5 else 1
+    except ValueError as exc:
+        raise ValueError(f"--grouped-bound: {exc}")
+    return {"target": sides[0], "group_by": sides[1], "metric": sides[2],
+            "lo": lo, "hi": hi, "min_support": min_support}
+
+
+def _parse_grouped_bound(token: str):
+    """`stream --grouped-bound` token → GroupedBound."""
+    from bigdime_spark.operators.grouped import GroupedBound
+
+    entry = _grouped_bound_entry(token)
+    try:
+        return GroupedBound(**entry)
     except ValueError as exc:
         raise ValueError(f"--grouped-bound: {exc}")
 
 
-def _parse_name_bound(flag: str, token: str, ctor):
-    """NAME:LO~HI (either side empty = open) → ctor(name, lo=…, hi=…)
-    — shared by --caption-quality and --caption-lang."""
+def _name_bound_entry(flag: str, key: str, token: str) -> dict:
+    """NAME:LO~HI (either side empty = open) → {key: NAME, lo, hi} —
+    a `caption_quality_bounds` / `caption_lang_bounds` entry."""
     sides = token.split(":")
     if len(sides) != 2 or not sides[0] or "~" not in sides[1]:
         raise ValueError(f"{flag}: expected NAME:LO~HI, got {token!r}")
-    lo_txt, hi_txt = sides[1].split("~", 1)
-    try:
-        return ctor(
-            sides[0],
-            lo=float(lo_txt) if lo_txt else None,
-            hi=float(hi_txt) if hi_txt else None,
+    lo, hi = _bound(flag, sides[1])
+    return {key: sides[0], "lo": lo, "hi": hi}
+
+
+def _seq_continuity_entries(value: str, args) -> dict:
+    sides = value.split(":")
+    if len(sides) > 2 or not sides[0]:
+        raise ValueError(
+            f"--seq-continuity: expected COL or COL:MAX_GAPS, got {value!r}"
         )
-    except ValueError as exc:
-        raise ValueError(f"{flag}: {exc}")
+    entry = {"id_col": sides[0]}
+    if len(sides) == 2:
+        try:
+            entry["max_gaps"] = int(sides[1])
+        except ValueError as exc:
+            raise ValueError(f"--seq-continuity: {exc}")
+    return {"sequence_continuity": [entry]}
+
+
+def _fd_entries(value: str, args) -> dict:
+    entries = []
+    for token in _cols(value):
+        sides = token.split(":")
+        if len(sides) != 2 or not all(sides):
+            raise ValueError(f"--fd: expected DET:DEP, got {token!r}")
+        entries.append({"det": sides[0], "dep": sides[1]})
+    return {"functional_dependencies": entries}
+
+
+def _quality_mean_range(value: str, args) -> dict:
+    lo, hi = _bound("--quality-mean-range", value)
+    if lo is None or hi is None:
+        raise ValueError(f"--quality-mean-range: expected LO~HI, got {value!r}")
+    return {"decode_quality_mean_lo": lo, "decode_quality_mean_hi": hi}
+
+
+def _cols(value: str) -> list[str]:
+    return [c.strip() for c in value.split(",") if c.strip()]
+
+
+#: `run`'s suite-SHAPE flags → the config document (plans/config.py
+#: keys and sections) each stands for: a key name when the flag's
+#: value passes through unchanged, else a function (value, args) →
+#: entries. A flag at its argparse default adds nothing; `--config`
+#: refuses any flag moved off its default.
+_SHAPE_FLAGS = {
+    "--decode": "check_decode",
+    "--decode-seed": "decode_seed",
+    "--decode-sample": "decode_sample_rate",
+    "--decode-sample-by": "decode_sample_stratify",
+    "--decode-sample-min": "decode_sample_min_n",
+    "--decode-max-bad-rate": lambda v, a: {"decode_rate_gate": [v, a.decode_rate_z]},
+    # the gate's confidence, read by --decode-max-bad-rate above
+    "--decode-rate-z": lambda v, a: {},
+    "--pixel-drift": "decode_pixel_drift",
+    "--quality-min-std": "decode_quality_min_std",
+    "--quality-mean-range": _quality_mean_range,
+    "--quality-max-flagged": "decode_quality_max_flagged",
+    "--phash-dedup": "check_phash_dedup",
+    "--phash-k": "phash_k",
+    "--profile-outliers": "check_profile_outliers",
+    "--bit-balance": "check_bit_balance",
+    "--payload-conformance": "check_payload_conformance",
+    "--seq-continuity": _seq_continuity_entries,
+    "--fd": _fd_entries,
+    "--grouped-bound": lambda v, a: {
+        "grouped_bounds": [_grouped_bound_entry(t) for t in v]
+    },
+    "--caption-quality": lambda v, a: {
+        "caption_quality_bounds": [
+            _name_bound_entry("--caption-quality", "metric", t) for t in v
+        ]
+    },
+    "--caption-lang": lambda v, a: {
+        "caption_lang_bounds": [
+            _name_bound_entry("--caption-lang", "lang", t) for t in v
+        ]
+    },
+    "--referential-bloom": lambda v, a: {"referential_mode": "bloom"},
+    "--cat-drift": lambda v, a: {"categorical_drift_cols": _cols(v)},
+    "--mask-drift": lambda v, a: {"mask_drift_cols": _cols(v)},
+    "--zone-clustering": lambda v, a: {"zone_clustering_cols": _cols(v)},
+    "--zone-max-overlap": "zone_max_overlap",
+    "--content-diff": "check_content",
+    "--content-cols": lambda v, a: {"content_cols": _cols(v)},
+    "--topk-violations": "topk_violations",
+}
+
+#: the not-null columns a `run` without --config checks
+_FLAG_NOT_NULL = ["image_id", "caption", "w", "h", "fmt"]
+
+
+def _flag_value(args, flag: str):
+    return getattr(args, flag[2:].replace("-", "_"))
+
+
+def _moved_shape_flags(args) -> list[str]:
+    """The shape flags ``args`` holds at other than their defaults."""
+    defaults = _build_parser().parse_args(["run", "--raw", "", "--out", ""])
+    return [
+        f for f in _SHAPE_FLAGS
+        if _flag_value(args, f) != _flag_value(defaults, f)
+    ]
+
+
+def _suite_config_from_flags(args) -> dict:
+    """The config document `run`'s shape flags stand for."""
+    cfg: dict = {"not_null": list(_FLAG_NOT_NULL)}
+    for flag in _moved_shape_flags(args):
+        spec, value = _SHAPE_FLAGS[flag], _flag_value(args, flag)
+        cfg.update({spec: value} if isinstance(spec, str) else spec(value, args))
+    return cfg
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -92,11 +206,13 @@ def _build_parser() -> argparse.ArgumentParser:
         "--config",
         default=None,
         help="declarative suite config (JSON; keys = ValidationSuite "
-        "fields + domain_checks/type_conformance/freshness/"
-        "correlation_bounds sections — plans/config.py). The config is "
-        "authoritative for suite SHAPE: combining it with a shape flag "
-        "(--decode, --phash-dedup, ...) is an error; input/runtime "
-        "flags (--raw, --parts, --lineage, ...) still apply",
+        "fields plus the constraint sections listed in the "
+        "plans/config.py docstring). It starts from the suite defaults "
+        "(not_null: image_id only; a flag run checks five columns). "
+        "The config is authoritative for suite SHAPE: combining it "
+        "with a shape flag (--decode, --phash-dedup, ...) is an error; "
+        "input/runtime flags (--raw, --parts, --lineage, ...) still "
+        "apply",
     )
     r.add_argument("--raw", required=True, help="raw snapshot (Iceberg table id or parquet dir)")
     r.add_argument("--curated", default=None)
@@ -2521,66 +2637,33 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
-    from bigdime_spark.plans.suite import ValidationSuite
+    from bigdime_spark.plans.config import load_suite_config, suite_from_config
 
-    if args.config is not None:
-        # shape flags conflict with a declarative config — the config
-        # is the reviewed contract; a flag silently overriding it is
-        # exactly the drift checks-as-config exists to prevent
-        shape_flags = [
-            ("--decode", args.decode),
-            ("--decode-seed", args.decode_seed is not None),
-            ("--decode-sample", args.decode_sample != 1.0),
-            ("--decode-sample-by", args.decode_sample_by is not None),
-            ("--decode-sample-min", args.decode_sample_min != 0),
-            ("--decode-max-bad-rate", args.decode_max_bad_rate is not None),
-            ("--decode-rate-z", args.decode_rate_z != 1.96),
-            ("--pixel-drift", args.pixel_drift),
-            ("--quality-min-std", args.quality_min_std is not None),
-            ("--quality-mean-range", args.quality_mean_range is not None),
-            ("--quality-max-flagged", args.quality_max_flagged != 0),
-            ("--phash-dedup", args.phash_dedup),
-            ("--phash-k", args.phash_k != 2),
-            ("--profile-outliers", args.profile_outliers),
-            ("--bit-balance", args.bit_balance),
-            ("--payload-conformance", args.payload_conformance),
-            ("--seq-continuity", bool(args.seq_continuity)),
-            ("--fd", bool(args.fd)),
-            ("--grouped-bound", bool(args.grouped_bound)),
-            ("--caption-quality", bool(args.caption_quality)),
-            ("--caption-lang", bool(args.caption_lang)),
-            ("--referential-bloom", args.referential_bloom),
-            ("--cat-drift", bool(args.cat_drift)),
-            ("--mask-drift", bool(args.mask_drift)),
-            ("--zone-clustering", bool(args.zone_clustering)),
-            ("--zone-max-overlap", args.zone_max_overlap != 0.5),
-            ("--content-diff", args.content_diff),
-            ("--content-cols", args.content_cols != "w,h,fmt,phash"),
-            ("--topk-violations", args.topk_violations is not None),
-        ]
-        passed = [flag for flag, on in shape_flags if on]
-        if passed:
-            print(
-                "run: --config is authoritative for suite shape; drop "
-                + ", ".join(passed) + " (edit the config instead)",
-                file=sys.stderr,
+    try:
+        if args.config is None:
+            cfg = _suite_config_from_flags(args)
+        elif moved := _moved_shape_flags(args):
+            # the config is the reviewed contract; a flag silently
+            # overriding it is exactly the drift checks-as-config
+            # exists to prevent
+            raise ValueError(
+                "--config is authoritative for suite shape; drop "
+                + ", ".join(moved) + " (edit the config instead)"
             )
-            return 2
+        else:
+            cfg = load_suite_config(args.config)
+    except ValueError as exc:
+        print(f"run: {exc}", file=sys.stderr)
+        return 2
 
     spark = get_spark("bigdime-validate", master=args.master)
-
-    if args.config is not None:
-        from bigdime_spark.plans.config import load_suite_config, suite_from_config
-
-        try:
-            # after get_spark: domain_checks predicates compile via
-            # F.expr, which needs the live session
-            config_suite = suite_from_config(load_suite_config(args.config))
-        except ValueError as exc:
-            print(f"run: {exc}", file=sys.stderr)
-            return 2
-    else:
-        config_suite = None
+    try:
+        # after get_spark: domain_checks predicates compile via F.expr,
+        # which needs the live session
+        suite = suite_from_config(cfg)
+    except ValueError as exc:
+        print(f"run: {exc}", file=sys.stderr)
+        return 2
 
     t0 = time.monotonic()
     raw = read_table(spark, args.raw)
@@ -2593,8 +2676,6 @@ def main(argv: list[str] | None = None) -> int:
             curated = curated.filter(F.col("part").isin(sel))
         if manifest is not None:
             manifest = manifest.filter(F.col("part").isin(sel))
-    extra_tcs: list = []
-    extra_aggs: list = []
     slice_dims: list[str] = []
     try:
         if args.slice_dims is not None:
@@ -2610,168 +2691,10 @@ def main(argv: list[str] | None = None) -> int:
                 raise ValueError(
                     f"--slice-min-support must be >= 1, got {args.slice_min_support}"
                 )
-        if not 0.0 < args.decode_sample <= 1.0:
-            raise ValueError(
-                f"--decode-sample: rate must be in (0, 1], got {args.decode_sample}"
-            )
-        if args.decode_sample != 1.0 and not args.decode:
-            # silently ignoring the rate would let an operator believe
-            # a sampled decode screen ran when zero images were decoded
-            raise ValueError("--decode-sample requires --decode")
-        if args.decode_sample_by is not None:
-            if not args.decode or args.decode_sample >= 1.0:
-                raise ValueError(
-                    "--decode-sample-by requires --decode and "
-                    "--decode-sample < 1 (stratification is a sampling "
-                    "strategy)"
-                )
-            if args.decode_sample_by not in raw.columns:
-                raise ValueError(
-                    f"--decode-sample-by: {args.decode_sample_by!r} not "
-                    "in the raw schema"
-                )
-            if args.decode_sample_min < 0:
-                raise ValueError(
-                    f"--decode-sample-min must be >= 0, got "
-                    f"{args.decode_sample_min}"
-                )
-        elif args.decode_sample_min != 0:
-            raise ValueError(
-                "--decode-sample-min is a per-stratum floor — it "
-                "requires --decode-sample-by (silently ignoring it "
-                "would fake a coverage guarantee)"
-            )
-        if args.decode_max_bad_rate is not None:
-            if not args.decode:
-                raise ValueError(
-                    "--decode-max-bad-rate requires --decode (it "
-                    "certifies the sampled decode pass)"
-                )
-            if not 0.0 < args.decode_max_bad_rate < 1.0:
-                raise ValueError(
-                    "--decode-max-bad-rate: must be in (0, 1) — a zero "
-                    "tolerance is unsatisfiable from a sample (use "
-                    "--decode-sample 1.0 and the exact decode verdict); "
-                    f"got {args.decode_max_bad_rate}"
-                )
-            if args.decode_rate_z <= 0:
-                raise ValueError(
-                    f"--decode-rate-z must be > 0, got {args.decode_rate_z}"
-                )
-        if args.pixel_drift and not args.decode:
-            raise ValueError(
-                "--pixel-drift requires --decode (the pixel histograms "
-                "ride the decode pass)"
-            )
-        if args.pixel_drift and not args.curated:
-            raise ValueError(
-                "--pixel-drift requires --curated (it compares raw vs "
-                "curated pixel distributions)"
-            )
-        q_mean_lo = q_mean_hi = None
-        if args.quality_mean_range is not None:
-            sides = args.quality_mean_range.split("~")
-            if len(sides) != 2:
-                raise ValueError(
-                    f"--quality-mean-range: expected LO~HI, got "
-                    f"{args.quality_mean_range!r}"
-                )
-            q_mean_lo, q_mean_hi = float(sides[0]), float(sides[1])
-        if (
-            args.quality_min_std is not None
-            or args.quality_mean_range is not None
-        ) and not args.decode:
-            raise ValueError(
-                "--quality-min-std/--quality-mean-range require --decode "
-                "(the image-quality gate rides the decode pass)"
-            )
-        if args.seq_continuity:
-            from bigdime_spark.operators.completeness import SequenceContinuity
-
-            sides = args.seq_continuity.split(":")
-            if len(sides) > 2 or not sides[0]:
-                raise ValueError(
-                    f"--seq-continuity: expected COL or COL:MAX_GAPS, "
-                    f"got {args.seq_continuity!r}"
-                )
-            max_gaps = int(sides[1]) if len(sides) == 2 else 0
-            extra_tcs.append(SequenceContinuity(sides[0], max_gaps=max_gaps))
-        if args.fd:
-            from bigdime_spark.operators.completeness import FunctionalDependency
-
-            for token in (t.strip() for t in args.fd.split(",") if t.strip()):
-                sides = token.split(":")
-                if len(sides) != 2 or not sides[0] or not sides[1]:
-                    raise ValueError(f"--fd: expected DET:DEP, got {token!r}")
-                extra_tcs.append(FunctionalDependency(sides[0], sides[1]))
-        from bigdime_spark.operators.caption import (
-            CaptionLangShareBound,
-            CaptionQualityBound,
-        )
-
-        for token in args.caption_quality or ():
-            extra_aggs.append(
-                _parse_name_bound("--caption-quality", token, CaptionQualityBound)
-            )
-        for token in args.caption_lang or ():
-            extra_aggs.append(
-                _parse_name_bound("--caption-lang", token, CaptionLangShareBound)
-            )
-        for token in args.grouped_bound or ():
-            gb_tc = _parse_grouped_bound(token)
-            missing = [
-                c for c in (gb_tc.target, gb_tc.group_by) if c not in raw.columns
-            ]
-            if missing:
-                raise ValueError(
-                    f"--grouped-bound: not in the raw schema: {', '.join(missing)}"
-                )
-            extra_tcs.append(gb_tc)
     except ValueError as exc:
         print(f"run: {exc}", file=sys.stderr)
         return 2
 
-    suite = config_suite if config_suite is not None else ValidationSuite(
-        not_null=("image_id", "caption", "w", "h", "fmt"),
-        extra_table_constraints=extra_tcs,
-        extra_agg_constraints=extra_aggs,
-        check_decode=args.decode,
-        decode_seed=args.decode_seed,
-        decode_sample_rate=args.decode_sample,
-        decode_pixel_drift=args.pixel_drift,
-        decode_quality_min_std=args.quality_min_std,
-        decode_quality_mean_lo=q_mean_lo,
-        decode_quality_mean_hi=q_mean_hi,
-        decode_quality_max_flagged=args.quality_max_flagged,
-        decode_rate_gate=(
-            (args.decode_max_bad_rate, args.decode_rate_z)
-            if args.decode_max_bad_rate is not None
-            else None
-        ),
-        decode_sample_stratify=args.decode_sample_by,
-        decode_sample_min_n=args.decode_sample_min,
-        topk_violations=args.topk_violations,
-        check_phash_dedup=args.phash_dedup,
-        phash_k=args.phash_k,
-        check_profile_outliers=args.profile_outliers,
-        check_bit_balance=args.bit_balance,
-        check_payload_conformance=args.payload_conformance,
-        referential_mode="bloom" if args.referential_bloom else "exact",
-        categorical_drift_cols=tuple(
-            c.strip() for c in args.cat_drift.split(",") if c.strip()
-        ),
-        mask_drift_cols=tuple(
-            c.strip() for c in args.mask_drift.split(",") if c.strip()
-        ),
-        zone_clustering_cols=tuple(
-            c.strip() for c in args.zone_clustering.split(",") if c.strip()
-        ),
-        zone_max_overlap=args.zone_max_overlap,
-        check_content=args.content_diff,
-        content_cols=tuple(
-            c.strip() for c in args.content_cols.split(",") if c.strip()
-        ),
-    )
     try:
         res = suite.run(
             spark,
@@ -2788,169 +2711,174 @@ def main(argv: list[str] | None = None) -> int:
         # config file) — the operator-error contract, not a traceback
         print(f"run: {exc}", file=sys.stderr)
         return 2
-    # run_id-stamped so many runs' verdicts union into the exact shape
-    # `history` (plans/lineage.verdict_history) consumes
-    write_table(
-        res.verdicts.withColumn("run_id", F.lit(res.run_id)),
-        f"{args.out}/verdicts",
-        partition_by=None,
-    )
-    write_table(res.violations, f"{args.out}/violations", partition_by=None)
-    # the binary __hll sketch columns are persisted ON PURPOSE: they are
-    # what makes `rollup` a metadata-sized aggregation instead of a
-    # rescan (B6 mergeable-sketch requirement); run_id-stamped so many
-    # runs' stats union into the `trend` (metric_trend) history shape
-    write_table(
-        res.stats.withColumn("run_id", F.lit(res.run_id)),
-        f"{args.out}/stats",
-        partition_by=None,
-    )
-    # observed-schema fingerprint (C59): run_id-stamped so many runs'
-    # frames union into the `history --schemas` evolution shape
-    from bigdime_spark.schema import schema_fingerprint
-
-    write_table(
-        schema_fingerprint(raw).withColumn("run_id", F.lit(res.run_id)),
-        f"{args.out}/schema",
-        partition_by=None,
-    )
-    if res.grouped_profiles:
-        # cross-run GROUPED history surface (C73): each GroupedBound's
-        # per-(part, group) profile — already computed and persisted by
-        # the run, zero extra scans — lands run_id-stamped in
-        # <out>/grouped with part composed as "part|dim=value" and
-        # metrics as stat__<target>__<metric> columns. Many runs' frames
-        # union straight into `trend --history` / `outliers --stats`,
-        # so every cross-run baseline (step, zscore, ewma, hw, cusum)
-        # gates SEGMENT metrics with no new scoring code.
-        from bigdime_spark.operators.grouped import composed_grouped_frame
-
-        stamped = None
-        for (target, group_by), prof in sorted(res.grouped_profiles.items()):
-            frame = composed_grouped_frame(prof, target, group_by)
-            stamped = (
-                frame
-                if stamped is None
-                else stamped.unionByName(frame, allowMissingColumns=True)
-            )
+    # every read of the run's persisted frames happens inside the try;
+    # an in-process caller must not keep them (SuiteResult.release)
+    try:
+        # run_id-stamped so many runs' verdicts union into the exact shape
+        # `history` (plans/lineage.verdict_history) consumes
         write_table(
-            stamped.withColumn("run_id", F.lit(res.run_id)),
-            f"{args.out}/grouped",
+            res.verdicts.withColumn("run_id", F.lit(res.run_id)),
+            f"{args.out}/verdicts",
             partition_by=None,
         )
-
-    if args.kmv_keys:
-        # per-part bottom-k key sketches (C68): run_id-stamped so many
-        # runs' frames union into the `history --kmv` churn shape
-        from bigdime_spark.operators.kmv import kmv_stamp
-
-        try:
-            stamped = kmv_stamp(
-                raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
-            )
-        except ValueError as exc:
-            print(f"run: {exc}", file=sys.stderr)
-            return 2
+        write_table(res.violations, f"{args.out}/violations", partition_by=None)
+        # the binary __hll sketch columns are persisted ON PURPOSE: they are
+        # what makes `rollup` a metadata-sized aggregation instead of a
+        # rescan (B6 mergeable-sketch requirement); run_id-stamped so many
+        # runs' stats union into the `trend` (metric_trend) history shape
         write_table(
-            stamped.withColumn("run_id", F.lit(res.run_id)),
-            f"{args.out}/kmv",
+            res.stats.withColumn("run_id", F.lit(res.run_id)),
+            f"{args.out}/stats",
             partition_by=None,
         )
+        # observed-schema fingerprint (C59): run_id-stamped so many runs'
+        # frames union into the `history --schemas` evolution shape
+        from bigdime_spark.schema import schema_fingerprint
 
-    # one row per partition can be 10^6+ at scale — the four summary
-    # numbers are a single aggregate, never a full-frame collect
-    summary = res.lineage.agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.coalesce(F.sum("rows_scanned"), F.lit(0)).alias("rows_scanned"),
-        F.count_if(F.col("status") == "FAILED").alias("n_failed"),
-    ).collect()[0]
-    n_parts = summary["n_parts"]
-    rows_scanned = summary["rows_scanned"]
-    n_failed = summary["n_failed"]
-    n_violations = res.violations.count()
-
-    # violation-slice triage (C69): WHICH value segments concentrate
-    # the run's row violations. The violating-id set is bounded
-    # (--topk-violations at scale) and broadcast back onto the raw
-    # snapshot, so the corpus never shuffles; the slices frame is
-    # metadata-scale (Σ dim cardinalities) and persisted only across
-    # its write + the 1-row top-lift collect.
-    slice_top = None
-    if slice_dims:
-        from bigdime_spark.operators.slices import violation_slices
-
-        viol_ids = (
-            res.violations.filter(F.col("image_id").isNotNull())
-            .select("image_id")
-            .distinct()
-            .withColumn("_viol", F.lit(True))
-        )
-        flagged = raw.join(F.broadcast(viol_ids), "image_id", "left")
-        slices = violation_slices(
-            flagged,
-            F.col("_viol"),
-            slice_dims,
-            min_support=args.slice_min_support,
-            include_pairs=args.slice_pairs,
-        ).persist()
         write_table(
-            slices.withColumn("run_id", F.lit(res.run_id)),
-            f"{args.out}/slices",
+            schema_fingerprint(raw).withColumn("run_id", F.lit(res.run_id)),
+            f"{args.out}/schema",
             partition_by=None,
         )
-        top = (
-            slices.filter(F.col("lift").isNotNull())
-            .orderBy(
-                F.desc("lift"), F.desc("n_viol"), F.asc("dim"), F.asc("value")
+        if res.grouped_profiles:
+            # cross-run GROUPED history surface (C73): each GroupedBound's
+            # per-(part, group) profile — already computed and persisted by
+            # the run, zero extra scans — lands run_id-stamped in
+            # <out>/grouped with part composed as "part|dim=value" and
+            # metrics as stat__<target>__<metric> columns. Many runs' frames
+            # union straight into `trend --history` / `outliers --stats`,
+            # so every cross-run baseline (step, zscore, ewma, hw, cusum)
+            # gates SEGMENT metrics with no new scoring code.
+            from bigdime_spark.operators.grouped import composed_grouped_frame
+
+            stamped = None
+            for (target, group_by), prof in sorted(res.grouped_profiles.items()):
+                frame = composed_grouped_frame(prof, target, group_by)
+                stamped = (
+                    frame
+                    if stamped is None
+                    else stamped.unionByName(frame, allowMissingColumns=True)
+                )
+            write_table(
+                stamped.withColumn("run_id", F.lit(res.run_id)),
+                f"{args.out}/grouped",
+                partition_by=None,
             )
-            .limit(1)
-            .collect()
-        )
-        slices.unpersist()
-        if top:
-            slice_top = {
-                "dim": top[0]["dim"],
-                "value": top[0]["value"],
-                "lift": top[0]["lift"],
-                "n_viol": top[0]["n_viol"],
-            }
 
-    # reference lifecycle parity: a FAILED validation quarantines the
-    # offending input unit [PK, SURVEY A10/A14]. The engine's analogue
-    # is a machine-readable quarantine manifest — one row per failed
-    # partition with the constraints that failed it — NOT a data copy
-    # (at 10^12 rows quarantine-by-copy is its own outage; consumers
-    # prune the listed partitions instead).
-    quarantined = 0
-    if n_failed and not args.no_quarantine:
-        q = (
-            res.verdicts.filter((F.col("verdict") == "FAIL") & (F.col("part") != "*"))
-            .groupBy("part")
-            .agg(F.sort_array(F.collect_set("constraint")).alias("failed_constraints"))
-            .select(F.lit(res.run_id).alias("run_id"), "part", "failed_constraints")
-        )
-        write_table(q, f"{args.out}/quarantine", partition_by=None)
-        quarantined = n_failed
+        if args.kmv_keys:
+            # per-part bottom-k key sketches (C68): run_id-stamped so many
+            # runs' frames union into the `history --kmv` churn shape
+            from bigdime_spark.operators.kmv import kmv_stamp
 
-    wall = time.monotonic() - t0
-    print(
-        json.dumps(
-            {
-                "cmd": "run",
-                "run_id": res.run_id,
-                "parts_validated": n_parts,
-                "parts_failed": n_failed,
-                "rows_scanned": rows_scanned,
-                "violations": n_violations,
-                "schema_mismatches": len(res.schema_violations),
-                "parts_quarantined": quarantined,
-                **({"slice_top": slice_top} if slice_dims else {}),
-                "images_per_sec": round(rows_scanned / wall, 1) if wall > 0 else None,
-                "wall_sec": round(wall, 2),
-            }
+            try:
+                stamped = kmv_stamp(
+                    raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
+                )
+            except ValueError as exc:
+                print(f"run: {exc}", file=sys.stderr)
+                return 2
+            write_table(
+                stamped.withColumn("run_id", F.lit(res.run_id)),
+                f"{args.out}/kmv",
+                partition_by=None,
+            )
+
+        # one row per partition can be 10^6+ at scale — the four summary
+        # numbers are a single aggregate, never a full-frame collect
+        summary = res.lineage.agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.coalesce(F.sum("rows_scanned"), F.lit(0)).alias("rows_scanned"),
+            F.count_if(F.col("status") == "FAILED").alias("n_failed"),
+        ).collect()[0]
+        n_parts = summary["n_parts"]
+        rows_scanned = summary["rows_scanned"]
+        n_failed = summary["n_failed"]
+        n_violations = res.violations.count()
+
+        # violation-slice triage (C69): WHICH value segments concentrate
+        # the run's row violations. The violating-id set is bounded
+        # (--topk-violations at scale) and broadcast back onto the raw
+        # snapshot, so the corpus never shuffles; the slices frame is
+        # metadata-scale (Σ dim cardinalities) and persisted only across
+        # its write + the 1-row top-lift collect.
+        slice_top = None
+        if slice_dims:
+            from bigdime_spark.operators.slices import violation_slices
+
+            viol_ids = (
+                res.violations.filter(F.col("image_id").isNotNull())
+                .select("image_id")
+                .distinct()
+                .withColumn("_viol", F.lit(True))
+            )
+            flagged = raw.join(F.broadcast(viol_ids), "image_id", "left")
+            slices = violation_slices(
+                flagged,
+                F.col("_viol"),
+                slice_dims,
+                min_support=args.slice_min_support,
+                include_pairs=args.slice_pairs,
+            ).persist()
+            write_table(
+                slices.withColumn("run_id", F.lit(res.run_id)),
+                f"{args.out}/slices",
+                partition_by=None,
+            )
+            top = (
+                slices.filter(F.col("lift").isNotNull())
+                .orderBy(
+                    F.desc("lift"), F.desc("n_viol"), F.asc("dim"), F.asc("value")
+                )
+                .limit(1)
+                .collect()
+            )
+            slices.unpersist()
+            if top:
+                slice_top = {
+                    "dim": top[0]["dim"],
+                    "value": top[0]["value"],
+                    "lift": top[0]["lift"],
+                    "n_viol": top[0]["n_viol"],
+                }
+
+        # reference lifecycle parity: a FAILED validation quarantines the
+        # offending input unit [PK, SURVEY A10/A14]. The engine's analogue
+        # is a machine-readable quarantine manifest — one row per failed
+        # partition with the constraints that failed it — NOT a data copy
+        # (at 10^12 rows quarantine-by-copy is its own outage; consumers
+        # prune the listed partitions instead).
+        quarantined = 0
+        if n_failed and not args.no_quarantine:
+            q = (
+                res.verdicts.filter((F.col("verdict") == "FAIL") & (F.col("part") != "*"))
+                .groupBy("part")
+                .agg(F.sort_array(F.collect_set("constraint")).alias("failed_constraints"))
+                .select(F.lit(res.run_id).alias("run_id"), "part", "failed_constraints")
+            )
+            write_table(q, f"{args.out}/quarantine", partition_by=None)
+            quarantined = n_failed
+
+        wall = time.monotonic() - t0
+        print(
+            json.dumps(
+                {
+                    "cmd": "run",
+                    "run_id": res.run_id,
+                    "parts_validated": n_parts,
+                    "parts_failed": n_failed,
+                    "rows_scanned": rows_scanned,
+                    "violations": n_violations,
+                    "schema_mismatches": len(res.schema_violations),
+                    "parts_quarantined": quarantined,
+                    **({"slice_top": slice_top} if slice_dims else {}),
+                    "images_per_sec": round(rows_scanned / wall, 1) if wall > 0 else None,
+                    "wall_sec": round(wall, 2),
+                }
+            )
         )
-    )
-    return 1 if (n_failed or res.schema_violations) else 0
+        return 1 if (n_failed or res.schema_violations) else 0
+    finally:
+        res.release()
 
 
 if __name__ == "__main__":

@@ -11,8 +11,15 @@ who own the Spark job. ``suite_from_config`` closes that gap without
 inventing a new vocabulary: **top-level keys ARE**
 :class:`~bigdime_spark.plans.suite.ValidationSuite` **field names**
 (``check_checksum``, ``phash_k``, ...), so the config surface can
-never drift from the programmatic API, plus four structured sections
-that build fusable extra constraints:
+never drift from the programmatic API, plus the structured sections
+below. A document starts from the ``ValidationSuite`` defaults — in
+particular ``not_null=("image_id",)``, where a `run` without
+``--config`` checks five not-null columns (image_id, caption, w, h,
+fmt); a document that wants those lists them.
+
+Sections that land in ``extra_agg_constraints`` and ride the suite's
+single stats aggregation (a config with ten of them still scans the
+table ONCE):
 
 ``domain_checks``        [{name, column, predicate, detail?}] — the
                          predicate is a SQL BOOLEAN expression
@@ -25,41 +32,61 @@ that build fusable extra constraints:
                          and decode), so a predicate naming ``bytes``
                          fails with an unresolved-column error under
                          decode-fused runs
+``compliance``           [{name, column, predicate, min_fraction,
+                         detail?}] — a part FAILs when the fraction of
+                         rows satisfying the predicate drops below
+                         min_fraction (no row violations by design)
 ``type_conformance``     [{column, dtype}]
 ``freshness``            {ts_col, as_of, max_lag_seconds} — as_of is
                          an EXPLICIT instant (never now(): verdicts
                          must be deterministic under retry/resume)
 ``correlation_bounds``   [{x, y, lo?, hi?}]
+``caption_quality_bounds`` [{metric, lo?, hi?, column?}] — per-part
+                         mean of a caption text-quality metric (C75)
+``caption_lang_bounds``  [{lang, lo?, hi?, column?}] — per-part share
+                         of captions in a predicted language (C76)
+
+Sections that build TABLE constraints (each needs its own
+aggregation and cannot ride the fused pass):
+
 ``mutual_info_bounds``   [{x, y, lo?, hi?}] — normalized MI of a
-                         categorical pair per part (the one section
-                         that builds a TABLE constraint: MI needs its
-                         own (part,x,y) aggregation and cannot ride
-                         the fused pass)
+                         categorical pair per part
 ``distinctness_bounds``  [{column, lo?, hi?, metric?}] — exact
                          distinctness / uniqueness / unique_value_ratio
                          of a column per part (deequ's hasUniqueness
-                         family); a table constraint for the same
-                         reason as MI (needs a value-level agg)
+                         family)
+``categorical_bounds``   [{column, metric?, lo?, hi?}] — entropy |
+                         top_frac | n_distinct of a categorical column
+                         per part
+``grouped_bounds``       [{target, group_by, metric?, lo?, hi?,
+                         min_support?}] — a metric of ``target`` gated
+                         per (part, ``group_by`` value) (C72); both
+                         columns must exist in the raw schema
 ``benford_bounds``       [{column, max_mad?, min_eligible?}] — Nigrini
                          first-digit MAD of a magnitude column per
-                         part (C46); a table constraint for the same
-                         reason as MI (needs a digit-level agg)
+                         part (C46)
 ``sequence_continuity``  [{id_col, max_gaps?}] — dense-id continuity
-                         (B30) as a table constraint (exact distinct
-                         needs its own keyed aggregation)
+                         (B30; exact distinct needs its own keyed
+                         aggregation)
 ``functional_dependencies`` [{det, dep, max_violations?}] — declared
-                         FDs (C41), table constraints for the same
-                         reason
+                         FDs (C41)
+
+Sections that set a structured suite field:
+
 ``schema``               [{name, type, nullable?}] — the declared
                          contract StructType for the suite's pass-1
                          schema validators; types are Spark DDL
                          strings validated at config load
+``drift_specs``          [{column, lo, hi, nbins?}] — the numeric
+                         histogram drift columns
+``bit_balance_bounds``   [lo, hi] — per-bit set-fraction bounds of the
+                         bit-balance detector
 
-The first four land in ``extra_agg_constraints`` → ride the suite's
-single stats aggregation: a config with ten such checks still scans
-the table ONCE. Unknown keys and wrong types raise ``ValueError``
-immediately (a typo'd ``check_checksum`` that silently validated
-nothing is the worst failure mode a validation engine can have).
+Unknown keys and wrong types raise ``ValueError`` immediately (a
+typo'd ``check_checksum`` that silently validated nothing is the
+worst failure mode a validation engine can have); the suite's
+cross-field rules (``ValidationSuite.check_config``) run on every
+built suite.
 
 Programmatic-only fields (``declared_schema``, ``stats``,
 ``extra_*_constraints``) are rejected by name with a pointer to the
@@ -529,39 +556,13 @@ def suite_from_config(cfg: dict) -> ValidationSuite:
             except ValueError as exc:
                 raise _fail("benford_bounds", str(exc))
 
-    if "decode_sample_rate" in kwargs and not (
-        0.0 < kwargs["decode_sample_rate"] <= 1.0
-    ):
-        raise _fail("decode_sample_rate", "must be in (0, 1]")
-    if "decode_pixel_bins" in kwargs and (
-        kwargs["decode_pixel_bins"] <= 0 or 256 % kwargs["decode_pixel_bins"]
-    ):
-        raise _fail("decode_pixel_bins", "must be a positive divisor of 256")
-    if kwargs.get("decode_pixel_drift") and not kwargs.get("check_decode"):
-        raise _fail(
-            "decode_pixel_drift",
-            "requires check_decode: true (the pixel histograms ride "
-            "the decode pass)",
-        )
-    if any(
-        kwargs.get(k) is not None
-        for k in (
-            "decode_quality_min_std",
-            "decode_quality_mean_lo",
-            "decode_quality_mean_hi",
-        )
-    ) and not kwargs.get("check_decode"):
-        raise _fail(
-            "decode_quality_min_std",
-            "quality thresholds require check_decode: true (the "
-            "image-quality gate rides the decode pass)",
-        )
-
     if extras:
         kwargs["extra_agg_constraints"] = extras
     if table_extras:
         kwargs["extra_table_constraints"] = table_extras
-    return ValidationSuite(**kwargs)
+    suite = ValidationSuite(**kwargs)
+    suite.check_config()
+    return suite
 
 
 def load_suite_config(path: str) -> dict:

@@ -254,6 +254,68 @@ class ValidationSuite:
     extra_agg_constraints: list = field(default_factory=list)
     extra_table_constraints: list = field(default_factory=list)
 
+    # ------------------------------------------------------------ rules
+
+    def check_config(self, raw_columns: list[str] | None = None) -> None:
+        """The suite's cross-field rules, in one place: ValueError on
+        a combination that would validate less than it claims.
+        ``suite_from_config`` calls it on every built suite; ``run``
+        calls it first, with ``raw_columns``, which adds the checks of
+        the columns the suite names against the raw schema. Messages
+        name the field and its `run` flag."""
+        if not 0.0 < self.decode_sample_rate <= 1.0:
+            raise ValueError(
+                "decode_sample_rate (--decode-sample) must be in (0, 1], "
+                f"got {self.decode_sample_rate}"
+            )
+        if self.decode_pixel_bins <= 0 or 256 % self.decode_pixel_bins:
+            raise ValueError(
+                "decode_pixel_bins must be a positive divisor of 256, "
+                f"got {self.decode_pixel_bins}"
+            )
+        quality = (self.decode_quality_min_std, self.decode_quality_mean_lo,
+                   self.decode_quality_mean_hi)
+        rides = (  # (field, its flag, set?) — each rides the decode pass
+            ("decode_pixel_drift", "--pixel-drift", self.decode_pixel_drift),
+            ("decode_quality_* thresholds",
+             "--quality-min-std/--quality-mean-range",
+             any(v is not None for v in quality)),
+            ("decode_rate_gate", "--decode-max-bad-rate",
+             self.decode_rate_gate is not None),
+            ("decode_sample_rate < 1", "--decode-sample",
+             self.decode_sample_rate < 1.0),
+            ("decode_sample_stratify", "--decode-sample-by",
+             self.decode_sample_stratify is not None),
+            ("decode_sample_min_n", "--decode-sample-min",
+             self.decode_sample_min_n != 0),
+        )
+        for name, flag, on in rides:
+            # silently ignoring one would let an operator believe a
+            # decode-side gate ran when zero images were decoded
+            if on and not self.check_decode:
+                raise ValueError(
+                    f"{name} requires check_decode=True ({flag} requires "
+                    "--decode): it rides the decode pass"
+                )
+        if raw_columns is None:
+            return
+        from bigdime_spark.operators.grouped import GroupedBound
+
+        named = [
+            ("grouped_bounds (--grouped-bound)", (tc.target, tc.group_by))
+            for tc in self.extra_table_constraints
+            if isinstance(tc, GroupedBound)
+        ]
+        if self.decode_sample_stratify is not None:
+            named.append(("decode_sample_stratify (--decode-sample-by)",
+                          (self.decode_sample_stratify,)))
+        for name, cols in named:
+            missing = [c for c in cols if c not in raw_columns]
+            if missing:
+                raise ValueError(
+                    f"{name}: not in the raw schema: {', '.join(missing)}"
+                )
+
     # ------------------------------------------------------------ wiring
 
     def _agg_constraints(self) -> list[AggConstraint]:
@@ -365,6 +427,7 @@ class ValidationSuite:
         lineage_path: str | None = None,
         resume: bool = True,
     ) -> SuiteResult:
+        self.check_config(raw.columns)
         t0 = time.monotonic()
         mark = _profiler(t0)
         run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
@@ -453,26 +516,6 @@ class ValidationSuite:
         decode_tc = None
         decode_found = None
         decode_viol = None
-        if self.decode_pixel_drift and not self.check_decode:
-            raise ValueError(
-                "decode_pixel_drift requires check_decode=True — the "
-                "pixel histograms ride the decode pass"
-            )
-        quality_on = (
-            self.decode_quality_min_std is not None
-            or self.decode_quality_mean_lo is not None
-            or self.decode_quality_mean_hi is not None
-        )
-        if quality_on and not self.check_decode:
-            raise ValueError(
-                "decode_quality_* thresholds require check_decode=True — "
-                "the image-quality gate rides the decode pass"
-            )
-        if self.decode_rate_gate is not None and not self.check_decode:
-            raise ValueError(
-                "decode_rate_gate requires check_decode=True — the "
-                "sampled-rate certification gates the decode pass"
-            )
         if decode_snaps:
             decode_tc = DecodeIntegrity(
                 seed=self.decode_seed,

@@ -154,6 +154,17 @@ def test_suite_and_cli_end_to_end(spark, tmp_path_factory, capsys):
     )
     err = capsys.readouterr().err
     assert rc3 == 2 and "captoin" in err and "Traceback" not in err
+    # ...and its --config form gets the same contract
+    cfg = tmp_path_factory.mktemp("gbcfg") / "suite.json"
+    cfg.write_text(json.dumps({"grouped_bounds": [
+        {"target": "captoin", "group_by": "fmt", "hi": 0.3}
+    ]}))
+    rc4 = cli.main(
+        ["run", "--raw", f"{d}/raw", "--out", str(tmp_path_factory.mktemp("o4")),
+         "--config", str(cfg)]
+    )
+    err = capsys.readouterr().err
+    assert rc4 == 2 and "captoin" in err and "Traceback" not in err
 
     # the run also stamped the C73 grouped history surface
     grouped = spark.read.parquet(f"{out}/grouped")

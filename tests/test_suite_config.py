@@ -261,6 +261,10 @@ def test_completeness_sections_build_table_constraints(spark):
         ({"caption_quality_bounds": [{"metric": "n_tokens"}]},
          "lo, hi, or both"),
         ([], "must be an object"),
+        # decode-riding fields with decode off would decode nothing
+        ({"decode_sample_rate": 0.5}, "requires check_decode"),
+        ({"decode_sample_stratify": "fmt"}, "requires check_decode"),
+        ({"decode_sample_min_n": 5}, "requires check_decode"),
     ],
 )
 def test_bad_configs_raise(cfg, frag):
@@ -347,6 +351,112 @@ def test_run_config_conflicts_with_shape_flags(tmp_path_factory, capsys):
     )
     assert rc == 2
     assert "--decode" in err and "authoritative" in err
+
+
+#: a non-default value for every `run` shape flag (store_true flags
+#: take none)
+_SHAPE_FLAG_VALUES = {
+    "--decode": [], "--decode-seed": ["7"], "--decode-sample": ["0.5"],
+    "--decode-sample-by": ["fmt"], "--decode-sample-min": ["5"],
+    "--decode-max-bad-rate": ["0.1"], "--decode-rate-z": ["2.5"],
+    "--pixel-drift": [], "--quality-min-std": ["8"],
+    "--quality-mean-range": ["16~240"], "--quality-max-flagged": ["1"],
+    "--phash-dedup": [], "--phash-k": ["3"], "--profile-outliers": [],
+    "--bit-balance": [], "--payload-conformance": [],
+    "--seq-continuity": ["phash"], "--fd": ["image_id:phash"],
+    "--grouped-bound": ["caption:fmt:null_rate:~1"],
+    "--caption-quality": ["n_tokens:1~"], "--caption-lang": ["en:0~1"],
+    "--referential-bloom": [], "--cat-drift": ["fmt"],
+    "--mask-drift": ["image_id"], "--zone-clustering": ["w"],
+    "--zone-max-overlap": ["0.9"], "--content-diff": [],
+    "--content-cols": ["w,h"], "--topk-violations": ["5"],
+}
+
+
+@pytest.mark.parametrize("flag", sorted(cli._SHAPE_FLAGS))
+def test_run_config_conflicts_with_every_shape_flag(
+    flag, tmp_path_factory, capsys
+):
+    """Every entry of the shape-flag table is refused beside --config
+    (before any Spark session starts)."""
+    cfg_path = tmp_path_factory.mktemp("cfgflag") / "suite.json"
+    cfg_path.write_text("{}")
+    rc, _, err = _run_cli(
+        capsys,
+        ["run", "--raw", "x", "--out", "y", "--config", str(cfg_path),
+         flag, *_SHAPE_FLAG_VALUES[flag]],
+    )
+    assert rc == 2
+    assert f"drop {flag} (" in err and "authoritative" in err
+
+
+def test_every_run_flag_is_shape_or_runtime():
+    """A `run` flag added without a shape-table entry must be declared
+    here as an input/runtime flag instead — otherwise --config would
+    silently let it change the suite."""
+    runtime = {
+        "cmd", "config", "raw", "curated", "manifest", "out", "lineage",
+        "run_id", "no_resume", "kmv_keys", "kmv_k", "slice_dims",
+        "slice_pairs", "slice_min_support", "parts", "no_quarantine",
+        "master",
+    }
+    args = cli._build_parser().parse_args(["run", "--raw", "x", "--out", "y"])
+    shape = {f[2:].replace("-", "_") for f in cli._SHAPE_FLAGS}
+    assert set(vars(args)) - runtime == shape
+    assert set(_SHAPE_FLAG_VALUES) == set(cli._SHAPE_FLAGS)
+
+
+def test_flag_translation_builds_the_flag_suite(spark):
+    """The benchmark's `run --decode --decode-seed N` argv translates
+    to today's flag suite: five not-null columns, decode on, nothing
+    else moved off the ValidationSuite defaults."""
+    from bigdime_spark.plans.suite import ValidationSuite
+
+    args = cli._build_parser().parse_args(
+        ["run", "--raw", "x", "--out", "y", "--decode", "--decode-seed", "3"]
+    )
+    assert suite_from_config(cli._suite_config_from_flags(args)) == ValidationSuite(
+        not_null=("image_id", "caption", "w", "h", "fmt"),
+        check_decode=True,
+        decode_seed=3,
+    )
+
+
+def test_flag_run_equals_config_run_on_translated_document(
+    spark, tmp_path_factory, capsys
+):
+    """A flag run and a --config run on the document the translator
+    emits for those flags write the same verdict rows."""
+    fx = str(tmp_path_factory.mktemp("eqfx"))
+    rc, _, _ = _run_cli(
+        capsys, ["synth", "--rows", "96", "--parts", "3", "--out", fx]
+    )
+    assert rc == 0
+    inputs = ["--raw", f"{fx}/raw", "--curated", f"{fx}/curated",
+              "--manifest", f"{fx}/manifest"]
+    flags = ["--decode", "--pixel-drift", "--cat-drift", "fmt",
+             "--fd", "image_id:phash",
+             "--grouped-bound", "caption:fmt:null_rate:~1",
+             "--caption-quality", "n_tokens:1~"]
+    doc = cli._suite_config_from_flags(
+        cli._build_parser().parse_args(["run", *inputs, "--out", "x", *flags])
+    )
+    cfg_path = tmp_path_factory.mktemp("eqcfg") / "suite.json"
+    cfg_path.write_text(json.dumps(doc))
+
+    rows = []
+    for shape in (flags, ["--config", str(cfg_path)]):
+        out = str(tmp_path_factory.mktemp("eqout"))
+        rc, _, err = _run_cli(capsys, ["run", *inputs, "--out", out, *shape])
+        assert rc == 0, err
+        rows.append(sorted(
+            tuple(r) for r in spark.read.parquet(f"{out}/verdicts")
+            .drop("run_id").collect()
+        ))
+    assert rows[0] == rows[1]
+    families = {r[1] for r in rows[0]}
+    assert {"drift_ks.pixels", "drift_cat.fmt", "fd.image_id->phash",
+            "grouped_null_rate.caption@fmt", "not_null.fmt"} <= families
 
 
 def test_run_config_parse_error_exits_2(spark, tmp_path_factory, capsys):
