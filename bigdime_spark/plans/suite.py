@@ -103,15 +103,6 @@ class SuiteResult:
             except Exception:
                 pass
 
-    def failed_parts(self) -> list[str]:
-        return [
-            r["part"]
-            for r in self.verdicts.filter(F.col("verdict") == FAIL)
-            .select("part")
-            .distinct()
-            .collect()
-        ]
-
 
 @dataclass
 class ValidationSuite:

@@ -24,6 +24,18 @@ ENGINE_CONFS: dict[str, str] = {
     # at production shuffle sizes the advisory size (64m default)
     # governs and this floor never binds.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "4k",
+    # let AQE coalesce the shuffle reads of plans that fill persist()/
+    # cache() frames (Spark's default is false). Without it every
+    # cached frame keeps one partition per shuffle partition per union
+    # branch: a 200-row incremental suite run persisted fused stats in
+    # 32 partitions for 1 row, verdicts in 68 and violations in 200 for
+    # 0 rows, so each later read (materializing count, table writes,
+    # summary) launched ~1,650 tasks that each deserialized the whole
+    # union lineage, ~51 CPU s against ~10 s of task CPU. With it those
+    # frames hold 1, 6 and 26 partitions and the run ~210 tasks; large
+    # cached frames stay at least core-count parallel (parallelismFirst
+    # and the 4k floor above).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # mapInArrow/pandas_udf batch size: big enough to amortize the Arrow

@@ -469,3 +469,41 @@ def test_ivfpq_index_one_corpus_shuffle_search_none(spark, tmp_path):
     assert not re.findall(r"hashpartitioning\((?:vec_)?id#", search), search
     hp = set(re.findall(r"hashpartitioning\((\w+)#", search))
     assert hp <= {"query_id", "neighbor_id"}, search
+
+
+def test_cached_frames_coalesce_on_one_part_run(spark, tmp_path):
+    """A one-part run must not persist one partition per shuffle
+    partition: every later read of a cached frame launches a task per
+    partition, and each task deserializes the frame's whole lineage.
+    AQE coalesces the plans that fill the caches, so the fused stats
+    (one row) hold one partition and the verdict union fewer than the
+    shuffle-partition count."""
+    from bigdime_spark.sources.tables import read_table, write_table
+
+    fx = build_fixture(spark, n_rows=200, n_parts=1)
+    write_table(fx.raw, str(tmp_path / "raw"))
+    write_table(fx.curated, str(tmp_path / "curated"))
+    write_table(fx.manifest, str(tmp_path / "manifest"), partition_by=None)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        res = ValidationSuite().run(
+            spark,
+            read_table(spark, str(tmp_path / "raw")),
+            read_table(spark, str(tmp_path / "curated")),
+            read_table(spark, str(tmp_path / "manifest")),
+            run_id="coalesce1",
+        )
+        try:
+            fused = [
+                df for df in res.persisted
+                if any(c.startswith("stat__") for c in df.columns)
+            ]
+            assert len(fused) == 1, [df.columns for df in res.persisted]
+            assert fused[0].rdd.getNumPartitions() == 1
+            assert res.verdicts.rdd.getNumPartitions() < 32
+        finally:
+            res.release()
+    finally:
+        spark.conf.set(key, before)
