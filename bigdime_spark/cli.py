@@ -2202,8 +2202,10 @@ def main(argv: list[str] | None = None) -> int:
         except ValueError as e:
             print(f"curate: {e}", file=sys.stderr)
             return 2
-        write_table(result.curated, f"{args.out}/curated", partition_by=None)
-        result.release()
+        try:
+            write_table(result.curated, f"{args.out}/curated", partition_by=None)
+        finally:
+            result.release()
         print(json.dumps({"cmd": "curate", **result.counts}))
         return 0
 

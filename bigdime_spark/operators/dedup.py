@@ -240,13 +240,33 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → minhash → band →
     bucket-join → exact-Jaccard verify → threshold filter.
-    → (id1, id2, jaccard) with jaccard ≥ threshold."""
+    → (id1, id2, jaccard) with jaccard ≥ threshold.
+
+    Eager: the pair plan reads the signature aggregation about ten
+    times (bucket sizes, both sides of the band join, the Jaccard
+    sizes) and exchange reuse does not fold the aliased copies, so the
+    signatures are persisted for this call only. The verified pairs
+    (rare by construction) are persisted and counted before the
+    signatures are released, and returned persisted: the caller
+    ``.unpersist()``s them when done (the ``near_dup_clusters``
+    convention)."""
     shingles = word_ngram_shingles(df, id_col, text_col, ngram)
-    sigs = minhash_signatures(shingles, num_hashes, hash_mode)
-    pairs = lsh_candidate_pairs(sigs, num_hashes, bands)
+    sigs = minhash_signatures(shingles, num_hashes, hash_mode).persist()
     sizes = sigs.select("id", F.col("set_size").alias("sz"))
-    scored = jaccard_for_pairs(pairs, shingles, sizes=sizes)
-    return scored.filter(F.col("jaccard") >= threshold).select("id1", "id2", "jaccard")
+    pairs = (
+        jaccard_for_pairs(lsh_candidate_pairs(sigs, num_hashes, bands), shingles, sizes=sizes)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id1", "id2", "jaccard")
+        .persist()
+    )
+    try:
+        pairs.count()  # materialize BEFORE dropping the signatures it reads
+    except BaseException:
+        pairs.unpersist()
+        raise
+    finally:
+        sigs.unpersist()
+    return pairs
 
 
 # ------------------------------------------------------------- simhash
@@ -806,9 +826,18 @@ def connected_components(
     # driver). Checkpointing truncates edges to a LogicalRDD leaf so
     # rounds compound over a few-byte plan; blocks are reclaimed by
     # the ContextCleaner once the frame goes out of scope.
+    # both orientations from ONE projection of pairs: a lazy pair plan
+    # is evaluated once, not once per union branch
     edges = (
-        pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
-        .unionByName(pairs.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(id1).alias("src"), F.col(id2).alias("dst")),
+                    F.struct(F.col(id2).alias("src"), F.col(id1).alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -890,18 +919,16 @@ def connected_components_star(
     hash(u) clustering; ``localCheckpoint`` truncates lineage per
     round (snapshots are reclaimed by the ContextCleaner as the loop
     drops references, ≤3 live at a time)."""
-    nodes = (
-        pairs.select(F.col(id1).alias("id"))
-        .unionByName(pairs.select(F.col(id2).alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
+    # ONE read of pairs: the canonical projection (self-pairs kept, so
+    # their ids stay nodes) is checkpointed; nodes and edges derive
+    # from the snapshot
+    canon = (
         pairs.select(F.least(id1, id2).alias("a"), F.greatest(id1, id2).alias("b"))
-        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
+    nodes = canon.select(F.explode(F.array("a", "b")).alias("id")).distinct()
+    edges = canon.filter(F.col("a") != F.col("b"))
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(

@@ -20,9 +20,13 @@ stage-drop accounting comes from a single fused ``count_if``
 aggregate — no per-stage rescans of the raw input); each surviving
 frame is persisted once, counted with a cheap aggregate, and released
 as soon as the next stage materializes, so at most one intermediate
-snapshot is live at a time. Dedup/sampling stages reuse the bounded
-operators (banded joins, broadcast plans) — nothing here is all-pairs
-or driver-side.
+snapshot is live at a time (a failed stage releases it too). The
+near-dup stage reads its MinHash signatures once and its verified
+pairs once: ``minhash_lsh_dedup`` persists the signatures for its own
+call and returns the pairs persisted, released here once the stage
+has materialized. Dedup/sampling stages reuse the bounded operators
+(banded joins, broadcast plans) — nothing here is all-pairs or
+driver-side.
 """
 
 from __future__ import annotations
@@ -179,133 +183,144 @@ def curate(df: DataFrame, cfg: CurateConfig) -> CurateResult:
 
     cur = df.filter(keep_all) if preds else df
     cur = cur.persist()
-    counts["after_gates"] = cur.count()
-
     prev = cur
 
     def _advance(nxt: DataFrame, stage: str) -> DataFrame:
         nonlocal prev
         nxt = nxt.persist()
-        counts[stage] = nxt.count()  # materializes nxt before the release
+        try:
+            counts[stage] = nxt.count()  # materializes nxt before the release
+        except BaseException:
+            nxt.unpersist()
+            raise
         prev.unpersist()
         prev = nxt
         return nxt
 
-    if cfg.exact_dedup:
-        cur = _advance(
-            drop_exact_dups(cur, [cfg.text_col], cfg.id_col), "after_exact_dedup"
-        )
+    try:
+        counts["after_gates"] = cur.count()
 
-    if cfg.minhash_dedup:
-        pairs = minhash_lsh_dedup(
-            cur,
-            cfg.id_col,
-            cfg.text_col,
-            ngram=cfg.minhash_ngram,
-            threshold=cfg.minhash_threshold,
-        )
-        cur = _advance(
-            drop_near_dups(cur, cfg.id_col, pairs), "after_neardup"
-        )
+        if cfg.exact_dedup:
+            cur = _advance(
+                drop_exact_dups(cur, [cfg.text_col], cfg.id_col), "after_exact_dedup"
+            )
 
-    if cfg.containment_dedup:
-        cpairs = containment_pairs(
-            cur,
-            cfg.id_col,
-            cfg.text_col,
-            ngram=cfg.minhash_ngram,
-            threshold=cfg.containment_threshold,
-        )
-        cur = _advance(
-            drop_contained(cur, cfg.id_col, cpairs), "after_containment"
-        )
-
-    if cfg.max_hot_fraction is not None:
-        from bigdime_spark.operators.decontam import duplicated_gram_scan
-
-        flagged = duplicated_gram_scan(
-            cur,
-            id_col=cfg.id_col,
-            text_col=cfg.text_col,
-            n=cfg.hot_gram_n,
-            min_docs=cfg.hot_gram_min_docs,
-        ).filter(F.col("hot_fraction") > cfg.max_hot_fraction)
-        # flagged is boilerplate-only (report-sized); AQE broadcasts
-        # the anti-join, so the corpus side stays shuffle-free.
-        cur = _advance(
-            cur.join(flagged.select(cfg.id_col), cfg.id_col, "left_anti"),
-            "after_boilerplate",
-        )
-
-    if cfg.max_span_coverage is not None:
-        from bigdime_spark.operators.decontam import span_coverage
-
-        # hash_grams: the production 8-byte-key shuffle — coverage is a
-        # threshold gate, so a 2^-64 over-flag cannot flip a keep into
-        # a drop unless the doc already sat on the boundary.
-        dropped = span_coverage(
-            cur,
-            id_col=cfg.id_col,
-            text_col=cfg.text_col,
-            n=cfg.span_n,
-            min_docs=cfg.span_min_docs,
-            hash_grams=True,
-        ).filter(F.col("dup_fraction") > cfg.max_span_coverage)
-        # dropped is boilerplate-heavy docs only; AQE broadcasts the
-        # anti-join when it is small, co-keyed join otherwise.
-        cur = _advance(
-            cur.join(dropped.select(cfg.id_col), cfg.id_col, "left_anti"),
-            "after_span_coverage",
-        )
-
-    if cfg.mix_weights is not None:
-        cur = _advance(
-            stratified_sample(
+        if cfg.minhash_dedup:
+            pairs = minhash_lsh_dedup(
                 cur,
-                cfg.domain_col,
                 cfg.id_col,
-                cfg.mix_weights,
-                cfg.target_rows,
-                cfg.seed,
-            ),
-            "after_sample",
-        )
-    elif cfg.sample_rate is not None:
-        cur = _advance(
-            uniform_sample(cur, cfg.id_col, cfg.sample_rate, cfg.seed),
-            "after_sample",
-        )
-    elif cfg.quality_weighted_rate is not None:
-        from bigdime_spark.functions.text import quality_metrics
-        from bigdime_spark.operators.sampling import weighted_sample
+                cfg.text_col,
+                ngram=cfg.minhash_ngram,
+                threshold=cfg.minhash_threshold,
+            )
+            try:
+                cur = _advance(
+                    drop_near_dups(cur, cfg.id_col, pairs), "after_neardup"
+                )
+            finally:
+                pairs.unpersist()  # persisted by minhash_lsh_dedup
 
-        # per-row keep probability = quality_score × rate: higher-
-        # quality docs survive at a higher rate instead of a hard
-        # score gate. The score is a row-local Column — the decision
-        # stays one scan-local predicate, zero shuffles.
-        wgt = quality_metrics(F.col(cfg.text_col))["quality_score"]
-        cur = _advance(
-            weighted_sample(
-                cur.withColumn("_q_wgt", wgt),
+        if cfg.containment_dedup:
+            cpairs = containment_pairs(
+                cur,
                 cfg.id_col,
-                "_q_wgt",
-                cfg.seed,
-                rate=cfg.quality_weighted_rate,
-            ).drop("_q_wgt"),
-            "after_sample",
-        )
+                cfg.text_col,
+                ngram=cfg.minhash_ngram,
+                threshold=cfg.containment_threshold,
+            )
+            cur = _advance(
+                drop_contained(cur, cfg.id_col, cpairs), "after_containment"
+            )
 
-    if cfg.shard_budget is not None:
-        shards = shard_pack(
-            cur,
-            cfg.id_col,
-            ws_token_count(F.col(cfg.text_col)),
-            cfg.shard_budget,
-            n_buckets=cfg.shard_buckets,
-        ).select(cfg.id_col, "shard_id")
-        # slim (id, shard_id) frame joins back; at mixture-sized outputs
-        # it broadcasts, at corpus-sized outputs it is a co-keyed join
-        cur = _advance(cur.join(shards, cfg.id_col), "after_shards")
+        if cfg.max_hot_fraction is not None:
+            from bigdime_spark.operators.decontam import duplicated_gram_scan
+
+            flagged = duplicated_gram_scan(
+                cur,
+                id_col=cfg.id_col,
+                text_col=cfg.text_col,
+                n=cfg.hot_gram_n,
+                min_docs=cfg.hot_gram_min_docs,
+            ).filter(F.col("hot_fraction") > cfg.max_hot_fraction)
+            # flagged is boilerplate-only (report-sized); AQE broadcasts
+            # the anti-join, so the corpus side stays shuffle-free.
+            cur = _advance(
+                cur.join(flagged.select(cfg.id_col), cfg.id_col, "left_anti"),
+                "after_boilerplate",
+            )
+
+        if cfg.max_span_coverage is not None:
+            from bigdime_spark.operators.decontam import span_coverage
+
+            # hash_grams: the production 8-byte-key shuffle — coverage is a
+            # threshold gate, so a 2^-64 over-flag cannot flip a keep into
+            # a drop unless the doc already sat on the boundary.
+            dropped = span_coverage(
+                cur,
+                id_col=cfg.id_col,
+                text_col=cfg.text_col,
+                n=cfg.span_n,
+                min_docs=cfg.span_min_docs,
+                hash_grams=True,
+            ).filter(F.col("dup_fraction") > cfg.max_span_coverage)
+            # dropped is boilerplate-heavy docs only; AQE broadcasts the
+            # anti-join when it is small, co-keyed join otherwise.
+            cur = _advance(
+                cur.join(dropped.select(cfg.id_col), cfg.id_col, "left_anti"),
+                "after_span_coverage",
+            )
+
+        if cfg.mix_weights is not None:
+            cur = _advance(
+                stratified_sample(
+                    cur,
+                    cfg.domain_col,
+                    cfg.id_col,
+                    cfg.mix_weights,
+                    cfg.target_rows,
+                    cfg.seed,
+                ),
+                "after_sample",
+            )
+        elif cfg.sample_rate is not None:
+            cur = _advance(
+                uniform_sample(cur, cfg.id_col, cfg.sample_rate, cfg.seed),
+                "after_sample",
+            )
+        elif cfg.quality_weighted_rate is not None:
+            from bigdime_spark.functions.text import quality_metrics
+            from bigdime_spark.operators.sampling import weighted_sample
+
+            # per-row keep probability = quality_score × rate: higher-
+            # quality docs survive at a higher rate instead of a hard
+            # score gate. The score is a row-local Column — the decision
+            # stays one scan-local predicate, zero shuffles.
+            wgt = quality_metrics(F.col(cfg.text_col))["quality_score"]
+            cur = _advance(
+                weighted_sample(
+                    cur.withColumn("_q_wgt", wgt),
+                    cfg.id_col,
+                    "_q_wgt",
+                    cfg.seed,
+                    rate=cfg.quality_weighted_rate,
+                ).drop("_q_wgt"),
+                "after_sample",
+            )
+
+        if cfg.shard_budget is not None:
+            shards = shard_pack(
+                cur,
+                cfg.id_col,
+                ws_token_count(F.col(cfg.text_col)),
+                cfg.shard_budget,
+                n_buckets=cfg.shard_buckets,
+            ).select(cfg.id_col, "shard_id")
+            # slim (id, shard_id) frame joins back; at mixture-sized outputs
+            # it broadcasts, at corpus-sized outputs it is a co-keyed join
+            cur = _advance(cur.join(shards, cfg.id_col), "after_shards")
+    except BaseException:
+        prev.unpersist()
+        raise
 
     for stage in (
         "after_shards", "after_sample", "after_span_coverage",

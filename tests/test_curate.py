@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdime_spark import cli
+from bigdime_spark.plans import curate as curate_mod
 from bigdime_spark.plans.curate import CurateConfig, CurateResult, curate
 
 
@@ -336,3 +337,38 @@ def test_cli_curate_span_coverage_flag(spark, corpus, tmp_path_factory, capsys):
     assert summary["after_span_coverage"] == summary["input"] - 4
     written = spark.read.parquet(f"{base}/out/curated")
     assert written.filter(F.col("doc_id") == 131).count() == 0
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def test_release_leaves_no_cached_frame(spark, corpus):
+    """curate caches only the returned snapshot: the near-dup pairs and
+    every earlier intermediate are gone once it returns."""
+    spark.catalog.clearCache()
+    res = curate(corpus, FULL)
+    assert res.counts["after_neardup"] == 25
+    res.release()
+    assert _cache_manager(spark).isEmpty()
+
+
+def test_failed_stage_releases_cached_frames(
+    spark, corpus, tmp_path_factory, capsys, monkeypatch
+):
+    """A stage that raises after the near-dup pairs are cached exits 2
+    and leaves nothing cached: neither the pairs nor the live
+    intermediate."""
+    def boom(*args, **kwargs):
+        raise ValueError("planted stage failure")
+
+    monkeypatch.setattr(curate_mod, "drop_near_dups", boom)
+    base = str(tmp_path_factory.mktemp("curate_fail"))
+    corpus.write.parquet(f"{base}/docs")
+    spark.catalog.clearCache()
+    rc, _, err = _run_cli(capsys, [
+        "curate", "--input", f"{base}/docs", "--out", f"{base}/out",
+        "--exact-dedup", "--minhash-dedup",
+    ])
+    assert rc == 2 and "planted stage failure" in err
+    assert _cache_manager(spark).isEmpty()

@@ -61,6 +61,31 @@ def test_minhash_modes_agree_on_candidates(docs):
     assert pa == pb
 
 
+def test_minhash_lsh_dedup_materializes_once_and_cleans_up(spark, docs):
+    """The pipeline is eager: its rows equal the lazy composition's,
+    and afterwards the session caches exactly the returned pairs (the
+    signatures were released inside the call) — after the caller's
+    unpersist, nothing."""
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    shingles = dedup.word_ngram_shingles(docs, "doc_id", "text", 2)
+    lazy = (
+        dedup.jaccard_for_pairs(
+            dedup.lsh_candidate_pairs(dedup.minhash_signatures(shingles)), shingles
+        )
+        .filter(F.col("jaccard") >= 0.5)
+        .select("id1", "id2", "jaccard")
+    )
+    expected = sorted(tuple(r) for r in lazy.collect())  # before anything is cached
+    pairs = dedup.minhash_lsh_dedup(docs, "doc_id", "text", ngram=2, threshold=0.5)
+    cached = cm.lookupCachedData(pairs._jdf)
+    assert cached.isDefined()
+    assert cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    assert sorted(tuple(r) for r in pairs.collect()) == expected
+    pairs.unpersist()
+    assert cm.isEmpty()
+
+
 def test_simhash_identical_texts_equal_and_deterministic(docs):
     out = {r["id"]: r["simhash"] for r in dedup.simhash(docs, "doc_id", "text", bits=16).collect()}
     out2 = {r["id"]: r["simhash"] for r in dedup.simhash(docs, "doc_id", "text", bits=16).collect()}
