@@ -147,6 +147,21 @@ def violation_rows(
     )
 
 
+def release_frame(df: DataFrame) -> None:
+    """Free the executor storage behind ``df`` once nothing reads it.
+
+    ``unpersist()`` drops a persisted frame's CacheManager entry but
+    does not touch a ``localCheckpoint`` snapshot: the snapshot is a
+    one-node ``LogicalRDD`` plan whose RDD holds the blocks, and
+    without this they live until a driver GC lets the ContextCleaner
+    reclaim them. Reading a released snapshot fails, so release it
+    only after every frame built on it has materialized."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], VIOLATION_SCHEMA)
 

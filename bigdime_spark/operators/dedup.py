@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdime_spark.functions.text import tokens_col, word_ngram_array
+from bigdime_spark.operators.base import release_frame
 
 HEX = "0123456789abcdef"
 
@@ -576,8 +577,12 @@ def containment_pairs(
     wash at sf0.1), ruinous at 100 TB. localCheckpoint snapshots it
     once (the ``connected_components``/``drop_near_dups`` house
     style; lineage truncation is the documented tradeoff — an
-    executor loss costs the job, same as there). Pass False to keep
-    the fully-lazy plan for tiny inputs or plan-inspection callers."""
+    executor loss costs the job, same as there). The call is then
+    eager, like ``minhash_lsh_dedup``: the scored pairs (rare by
+    construction) are persisted and counted, the shingle snapshot is
+    released, and the pairs are returned persisted for the caller to
+    ``.unpersist()``. Pass False to keep the fully-lazy plan for tiny
+    inputs or plan-inspection callers."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(
             f"threshold must be in (0, 1], got {threshold} — containment "
@@ -630,7 +635,7 @@ def containment_pairs(
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
+    scored = (
         inter.join(
             sizes.select(F.col("id").alias("id1"), F.col("sz").alias("size1")),
             "id1",
@@ -656,6 +661,17 @@ def containment_pairs(
         )
         .filter(F.col("containment") >= threshold)
     )
+    if not materialize:
+        return scored
+    scored = scored.persist()
+    try:
+        scored.count()  # materialize BEFORE dropping the snapshot it reads
+    except BaseException:
+        scored.unpersist()
+        raise
+    finally:
+        release_frame(sh)
+    return scored
 
 
 # ------------------------------------------- image phash near-dup constraint
@@ -824,8 +840,8 @@ def connected_components(
     # the driver heap when AQE rebuilds its explain string (observed:
     # OOM in QueryExecution.explainString under spark-submit's 1g
     # driver). Checkpointing truncates edges to a LogicalRDD leaf so
-    # rounds compound over a few-byte plan; blocks are reclaimed by
-    # the ContextCleaner once the frame goes out of scope.
+    # rounds compound over a few-byte plan; its blocks are released
+    # once the labels have materialized.
     # both orientations from ONE projection of pairs: a lazy pair plan
     # is evaluated once, not once per union branch
     edges = (
@@ -849,39 +865,42 @@ def connected_components(
     )
     labels.count()  # eager, so the loop below reuses one materialization
     converged = False
-    for it in range(max_iter):
-        prop = edges.join(
-            labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "component")
-        new_labels = labels.unionByName(prop).groupBy("id").agg(
-            F.min("component").alias("component")
-        )
-        # memory discipline: persist each round and UNPERSIST the
-        # previous round once the new one has materialized, so the
-        # loop holds at most two label snapshots in executor storage;
-        # every 4th round a localCheckpoint truncates the lineage
-        # (the plan otherwise deepens per iteration)
-        if (it + 1) % 4 == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist()
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("component", "old"), "id"
+    try:
+        for it in range(max_iter):
+            prop = edges.join(
+                labels.withColumnRenamed("id", "src"), "src"
+            ).select(F.col("dst").alias("id"), "component")
+            new_labels = labels.unionByName(prop).groupBy("id").agg(
+                F.min("component").alias("component")
             )
-            .filter(F.col("component") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    # edges is localCheckpointed — unpersist() is a no-op there; its
-    # blocks are dropped by the ContextCleaner when the reference dies
+            # memory discipline: persist each round and UNPERSIST the
+            # previous round once the new one has materialized, so the
+            # loop holds at most two label snapshots in executor storage;
+            # every 4th round a localCheckpoint truncates the lineage
+            # (the plan otherwise deepens per iteration)
+            if (it + 1) % 4 == 0:
+                new_labels = new_labels.localCheckpoint(eager=True)
+            else:
+                new_labels = new_labels.persist()
+            changed = (
+                new_labels.join(
+                    labels.withColumnRenamed("component", "old"), "id"
+                )
+                .filter(F.col("component") != F.col("old"))
+                .limit(1)
+                .count()
+            )
+            release_frame(labels)
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
+    finally:
+        # every round's labels are materialized (the change count reads
+        # all their partitions), so nothing reads edges any more
+        release_frame(edges)
     if not converged:
-        labels.unpersist()
+        release_frame(labels)
         raise ValueError(
             f"connected_components did not converge in {max_iter} "
             "iterations — the pair graph has a longer path than any "
@@ -1041,9 +1060,7 @@ def near_dup_clusters(
         .persist()
     )
     out.count()  # materialize BEFORE dropping the labels the plan reads
-    cc.unpersist()  # persisted labels free now; a localCheckpointed
-    # final round's blocks are reclaimed by the ContextCleaner once the
-    # frame reference is dropped (unpersist is a no-op on those)
+    release_frame(cc)
     return out
 
 
@@ -1053,6 +1070,7 @@ def drop_near_dups(
     pairs: DataFrame,
     max_iter: int = 25,
     algo: str = "label",
+    snapshots: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Keep ONE row per near-dup cluster (the min-id keeper) plus every
     row not in any cluster. The components frame is pairs-sized (rare
@@ -1060,17 +1078,20 @@ def drop_near_dups(
 
     The CC labels frame is released after the (smaller) losers set
     materializes; the returned plan reads only the checkpointed losers
-    — localCheckpoint, not persist, so the snapshot is reclaimed by
-    the ContextCleaner once the returned frame goes out of scope (a
-    persist() here would pin one CacheManager entry per call with no
-    handle for the caller to release)."""
+    (localCheckpoint, not persist: a persist() here would pin one
+    CacheManager entry per call). The losers snapshot is appended to
+    ``snapshots`` when given, for the caller to ``release_frame`` once
+    the returned frame has materialized; without it the snapshot lives
+    until a driver GC lets the ContextCleaner reclaim it."""
     cc = CC_ALGOS[algo](pairs, max_iter=max_iter)
     losers = (
         cc.filter(F.col("id") != F.col("component"))
         .select(F.col("id").alias(id_col))
         .localCheckpoint(eager=True)
     )
-    cc.unpersist()
+    release_frame(cc)
+    if snapshots is not None:
+        snapshots.append(losers)
     return df.join(losers, id_col, "left_anti")
 
 

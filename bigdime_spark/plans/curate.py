@@ -17,14 +17,23 @@ built entirely from this engine's operators (SURVEY §2.C):
 
 Scale posture: the row-local gates are ONE scan-local predicate (all
 stage-drop accounting comes from a single fused ``count_if``
-aggregate — no per-stage rescans of the raw input); each surviving
-frame is persisted once, counted with a cheap aggregate, and released
-as soon as the next stage materializes, so at most one intermediate
-snapshot is live at a time (a failed stage releases it too). The
-near-dup stage reads its MinHash signatures once and its verified
-pairs once: ``minhash_lsh_dedup`` persists the signatures for its own
-call and returns the pairs persisted, released here once the stage
-has materialized. Dedup/sampling stages reuse the bounded operators
+aggregate — no per-stage rescans of the raw input). Each surviving
+frame is a ``localCheckpoint`` snapshot, a plan LEAF: the stage count
+that materializes it reads a one-node ``LogicalRDD``, and the next
+stage's plan starts from that leaf instead of embedding every earlier
+stage. A chain of persisted frames would instead carry the whole
+pipeline in every later plan, once per reference, for the driver to
+re-plan and re-explain on each action. A snapshot is released
+explicitly (``release_frame``) as soon as the next one has
+materialized, so at most one is live at a time; a failed stage
+releases it too. The tradeoff is the one
+``containment_pairs`` documents: lineage is truncated, so an executor
+loss costs the job. The near-dup stage reads its MinHash signatures
+once and its verified pairs once: ``minhash_lsh_dedup`` persists the
+signatures for its own call and returns the pairs persisted, and
+``drop_near_dups`` hands back its losers snapshot; containment is
+eager the same way. All are released here once their stage has
+materialized. Dedup/sampling stages reuse the bounded operators
 (banded joins, broadcast plans) — nothing here is all-pairs or
 driver-side.
 """
@@ -42,6 +51,7 @@ from bigdime_spark.functions.text import (
     repetition_metrics,
     ws_token_count,
 )
+from bigdime_spark.operators.base import release_frame
 from bigdime_spark.operators.dedup import (
     containment_pairs,
     drop_contained,
@@ -131,17 +141,20 @@ class CurateConfig:
 class CurateResult:
     """Curated frame + per-stage row accounting.
 
-    ``counts`` maps stage → rows SURVIVING that stage (monotone
-    non-increasing), plus ``drop_*`` entries for each row-local gate
-    (how many the gate would reject on its own — overlaps allowed, so
-    they need not sum to the filtered total)."""
+    ``curated`` is the last stage's ``localCheckpoint`` snapshot: a
+    materialized plan leaf that is read, not recomputed. ``counts``
+    maps stage → rows SURVIVING that stage (monotone non-increasing),
+    plus ``drop_*`` entries for each row-local gate (how many the gate
+    would reject on its own — overlaps allowed, so they need not sum
+    to the filtered total)."""
 
     curated: DataFrame
     counts: dict[str, int] = field(default_factory=dict)
 
     def release(self) -> None:
-        """Unpersist the curated frame's cached snapshot."""
-        self.curated.unpersist()
+        """Drop the curated snapshot's blocks (``unpersist()`` is a
+        no-op on a checkpoint); ``curated`` is unreadable after."""
+        release_frame(self.curated)
 
 
 def _gate_predicates(cfg: CurateConfig) -> dict[str, Column]:
@@ -163,8 +176,9 @@ def _gate_predicates(cfg: CurateConfig) -> dict[str, Column]:
 def curate(df: DataFrame, cfg: CurateConfig) -> CurateResult:
     """Run the configured pipeline; see module docstring for stages.
 
-    The returned ``curated`` frame is persisted (callers read or write
-    it more than once — call :meth:`CurateResult.release` when done).
+    The returned ``curated`` frame is a materialized snapshot (callers
+    read or write it more than once — call :meth:`CurateResult.release`
+    when done).
     """
     counts: dict[str, int] = {}
     preds = _gate_predicates(cfg)
@@ -181,24 +195,26 @@ def curate(df: DataFrame, cfg: CurateConfig) -> CurateResult:
     for name in preds:
         counts[f"drop_{name}"] = int(row[f"drop_{name}"])
 
-    cur = df.filter(keep_all) if preds else df
-    cur = cur.persist()
-    prev = cur
+    prev: DataFrame | None = None
 
     def _advance(nxt: DataFrame, stage: str) -> DataFrame:
         nonlocal prev
-        nxt = nxt.persist()
+        # lazy: the stage count is the one pass that fills the snapshot
+        # (eager=True would add a job per stage); after it, every
+        # partition is in the snapshot's blocks
+        nxt = nxt.localCheckpoint(eager=False)
         try:
             counts[stage] = nxt.count()  # materializes nxt before the release
         except BaseException:
-            nxt.unpersist()
+            release_frame(nxt)
             raise
-        prev.unpersist()
+        if prev is not None:
+            release_frame(prev)
         prev = nxt
         return nxt
 
     try:
-        counts["after_gates"] = cur.count()
+        cur = _advance(df.filter(keep_all) if preds else df, "after_gates")
 
         if cfg.exact_dedup:
             cur = _advance(
@@ -213,12 +229,16 @@ def curate(df: DataFrame, cfg: CurateConfig) -> CurateResult:
                 ngram=cfg.minhash_ngram,
                 threshold=cfg.minhash_threshold,
             )
+            losers: list[DataFrame] = []
             try:
                 cur = _advance(
-                    drop_near_dups(cur, cfg.id_col, pairs), "after_neardup"
+                    drop_near_dups(cur, cfg.id_col, pairs, snapshots=losers),
+                    "after_neardup",
                 )
             finally:
                 pairs.unpersist()  # persisted by minhash_lsh_dedup
+                for snap in losers:
+                    release_frame(snap)
 
         if cfg.containment_dedup:
             cpairs = containment_pairs(
@@ -228,9 +248,12 @@ def curate(df: DataFrame, cfg: CurateConfig) -> CurateResult:
                 ngram=cfg.minhash_ngram,
                 threshold=cfg.containment_threshold,
             )
-            cur = _advance(
-                drop_contained(cur, cfg.id_col, cpairs), "after_containment"
-            )
+            try:
+                cur = _advance(
+                    drop_contained(cur, cfg.id_col, cpairs), "after_containment"
+                )
+            finally:
+                cpairs.unpersist()  # persisted by containment_pairs
 
         if cfg.max_hot_fraction is not None:
             from bigdime_spark.operators.decontam import duplicated_gram_scan
@@ -319,7 +342,8 @@ def curate(df: DataFrame, cfg: CurateConfig) -> CurateResult:
             # it broadcasts, at corpus-sized outputs it is a co-keyed join
             cur = _advance(cur.join(shards, cfg.id_col), "after_shards")
     except BaseException:
-        prev.unpersist()
+        if prev is not None:
+            release_frame(prev)
         raise
 
     for stage in (

@@ -9,6 +9,7 @@ the per-stage accounting must say so.
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -372,3 +373,45 @@ def test_failed_stage_releases_cached_frames(
     ])
     assert rc == 2 and "planted stage failure" in err
     assert _cache_manager(spark).isEmpty()
+
+
+def test_curated_frame_is_a_plan_leaf(corpus):
+    """Each stage is materialized as a snapshot, so the curated frame's
+    plan is one LogicalRDD node, not the join tree of every stage."""
+    res = curate(corpus, FULL)
+    plan = res.curated._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert plan.children().isEmpty()
+    res.release()
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_release_frees_every_persisted_rdd(
+    spark, corpus, tmp_path_factory, capsys, monkeypatch
+):
+    """Snapshots never enter the CacheManager, so this looks at the
+    context's persisted RDDs: after release(), and after a stage that
+    raises, none that curate made is left. Compared as sets, because
+    earlier tests in the shared session leave RDDs behind."""
+    before = _persisted_rdd_ids(spark)
+    res = curate(corpus, replace(FULL, containment_dedup=True))
+    assert res.counts["after_containment"] == 25
+    res.release()
+    assert _persisted_rdd_ids(spark) - before == set()
+
+    def boom(*args, **kwargs):
+        raise ValueError("planted stage failure")
+
+    monkeypatch.setattr(curate_mod, "drop_contained", boom)
+    base = str(tmp_path_factory.mktemp("curate_fail_rdds"))
+    corpus.write.parquet(f"{base}/docs")
+    before = _persisted_rdd_ids(spark)
+    rc, _, err = _run_cli(capsys, [
+        "curate", "--input", f"{base}/docs", "--out", f"{base}/out",
+        "--exact-dedup", "--minhash-dedup", "--containment-dedup",
+    ])
+    assert rc == 2 and "planted stage failure" in err
+    assert _persisted_rdd_ids(spark) - before == set()
