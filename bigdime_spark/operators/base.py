@@ -21,10 +21,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from bigdime_spark.schema import VIOLATION_SCHEMA
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 @dataclass
@@ -162,8 +163,25 @@ def release_frame(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
-def empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A driver-built constant (``rows``: a list of tuples in ``schema``
+    order; ``schema``: a ``StructType`` or a DDL string) as a JVM
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    Python RDD, so every action that reads the frame starts Python
+    workers to unpickle it. An Arrow table is shipped to the JVM once
+    and planned as a ``LocalTableScan``, with the schema's nullability
+    kept; reading it needs no Python worker."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def fill_pass_for_missing_parts(verdicts: DataFrame, parts: DataFrame, constraint: str) -> DataFrame:

@@ -936,8 +936,9 @@ def connected_components_star(
     detected as exact edge-set stability on the canonical undirected
     form. Per round: two symmetrize+groupBy+join passes, each on the
     hash(u) clustering; ``localCheckpoint`` truncates lineage per
-    round (snapshots are reclaimed by the ContextCleaner as the loop
-    drops references, ≤3 live at a time)."""
+    round, and each round releases its large-star snapshot and the
+    superseded edge snapshot once nothing reads them (≤4 live at a
+    time: canon, the edges and the round's two new snapshots)."""
     # ONE read of pairs: the canonical projection (self-pairs kept, so
     # their ids stay nodes) is checkpointed; nodes and edges derive
     # from the snapshot
@@ -983,6 +984,7 @@ def connected_components_star(
             .unionByName(mins2.select(F.col("u").alias("a"), F.col("m").alias("b")))
         )
         new_edges = _canon(small).localCheckpoint(eager=True)
+        release_frame(ls)
 
         changed = (
             new_edges.exceptAll(edges)
@@ -990,6 +992,9 @@ def connected_components_star(
             .limit(1)
             .count()
         )
+        # the first round's edges are a filter over canon, which
+        # nodes still reads: release_frame leaves a non-snapshot alone
+        release_frame(edges)
         edges = new_edges
         if changed == 0:
             converged = True

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdime_spark.operators.base import local_frame
+
 #: files smaller than this are "small" by default (the usual HDFS /
 #: object-store guidance is ≥ 64-128 MB targets; 32 MB is a lenient
 #: floor that still catches per-record committers cold)
@@ -91,7 +93,7 @@ def file_layout_profile(
     files = list_data_files(spark, path)
     if not files:
         raise ValueError(f"file_layout_profile: no data files under {path!r}")
-    listing = spark.createDataFrame(files, "file string, size_bytes long").select(
+    listing = local_frame(spark, files, "file string, size_bytes long").select(
         _strip_scheme(F.col("file")).alias("file"), "size_bytes"
     )
     df = spark.read.parquet(path)

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from bigdime_spark.operators.base import TableConstraint
+from bigdime_spark.operators.base import TableConstraint, local_frame
 from bigdime_spark.schema import FAIL, NOT_READY
 
 
@@ -98,7 +98,7 @@ def _rank_counts(
     for i in range(n_buckets):
         offsets.append((i, acc))
         acc += totals.get(i, 0)
-    off = values.sparkSession.createDataFrame(offsets, "_bucket bigint, _offset bigint")
+    off = local_frame(values.sparkSession, offsets, "_bucket bigint, _offset bigint")
     w = (
         Window.partitionBy("_bucket")
         .orderBy("val", "tb")

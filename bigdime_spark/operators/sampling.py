@@ -37,6 +37,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdime_spark.operators.base import local_frame
+
 #: 40-bit sample space: first 10 hex chars of md5 (matches the
 #: checksum operator's oracle-portable width — fits a signed 64-bit
 #: integer with headroom, and DuckDB can rebuild it digit-by-digit).
@@ -164,7 +166,8 @@ def mix_plan(
         raise ValueError(f"target_rows must be >= 0, got {target_rows}")
     norm = normalized_weights(weights)
     spark = df.sparkSession
-    quotas = spark.createDataFrame(
+    quotas = local_frame(
+        spark,
         [(d, int(target_rows * p)) for d, p in sorted(norm.items())],
         f"{domain_col} string, quota bigint",
     )
@@ -282,7 +285,7 @@ def shard_pack(
         offsets.append((b, acc))
         acc += totals.get(b, 0)
     spark = df.sparkSession
-    off = spark.createDataFrame(offsets, "_bucket bigint, _offset bigint")
+    off = local_frame(spark, offsets, "_bucket bigint, _offset bigint")
 
     w = Window.partitionBy("_bucket").orderBy(key)
     cum_excl = (

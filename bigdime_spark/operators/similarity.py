@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdime_spark.operators.base import local_frame
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -624,8 +626,8 @@ def ivf_train_centroids(
     dim = len(cents[0])
 
     def _cdf(c: list[list[float]]) -> DataFrame:
-        return spark.createDataFrame(
-            [(i, row) for i, row in enumerate(c)], "cid int, cvec array<double>"
+        return local_frame(
+            spark, [(i, row) for i, row in enumerate(c)], "cid int, cvec array<double>"
         )
 
     for _ in range(iters):
@@ -885,7 +887,7 @@ def ivf_recall_curve(
         .groupBy("nprobe")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    spine = df.sparkSession.createDataFrame([(p,) for p in nps], "nprobe int")
+    spine = local_frame(df.sparkSession, [(p,) for p in nps], "nprobe int")
     nq = qs.agg(F.count(F.lit(1)).alias("n_queries"))
     return (
         spine.join(hits, "nprobe", "left")

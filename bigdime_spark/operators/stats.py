@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bigdime_spark.operators.base import AggConstraint, TableConstraint
+from bigdime_spark.operators.base import AggConstraint, TableConstraint, local_frame
 
 
 @dataclass
@@ -237,8 +237,8 @@ def quantiles_from_stats(
         (c, float(s.split(":")[0]), float(s.split(":")[1]), int(s.split(":")[2]))
         for c, s in sorted(specs.items())
     ]
-    spec_df = h.sparkSession.createDataFrame(
-        spec_rows, ["column", "lo", "hi", "nbins"]
+    spec_df = local_frame(
+        h.sparkSession, spec_rows, "column string, lo double, hi double, nbins bigint"
     )
     h = h.join(F.broadcast(spec_df), "column")
 

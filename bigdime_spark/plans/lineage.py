@@ -21,6 +21,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdime_spark.operators.base import local_frame
 from bigdime_spark.schema import LINEAGE_SCHEMA
 
 VALIDATED = "VALIDATED"
@@ -36,11 +37,11 @@ class LineageStore:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not os.path.isdir(self.path):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(spark, [], LINEAGE_SCHEMA)
         try:
             return spark.read.parquet(self.path)
         except Exception:
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(spark, [], LINEAGE_SCHEMA)
 
     def append(self, lineage: DataFrame) -> None:
         (

@@ -86,6 +86,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdime_spark.operators.base import local_frame
+
 #: source dtypes the profiler refuses to melt (lossy/meaningless as
 #: string group keys)
 _SKIP_DTYPE_PREFIXES = ("binary", "array", "map", "struct")
@@ -434,7 +436,7 @@ def suggestions_frame(spark: SparkSession, suggestions: list[dict]) -> DataFrame
         )
         for s in suggestions
     ]
-    return spark.createDataFrame(rows, SUGGESTION_SCHEMA)
+    return local_frame(spark, rows, SUGGESTION_SCHEMA)
 
 
 def to_config(suggestions: list[dict]) -> dict:

@@ -35,7 +35,7 @@ from bigdime_spark.operators.base import (
     AggConstraint,
     SuiteContext,
     TableConstraint,
-    empty_violations,
+    local_frame,
 )
 from bigdime_spark.operators.bitbalance import BitBalance
 from bigdime_spark.operators.caption import CaptionEquality
@@ -426,15 +426,13 @@ class ValidationSuite:
 
         # pass 1 — schema validators (driver-side, no job)
         schema_viol = diff_schema(declared, raw.schema)
-        schema_viol_df = (
-            spark.createDataFrame(
-                [(f"schema.{v.kind}", "*", None, v.column, v.detail, "raw") for v in schema_viol],
-                VIOLATION_SCHEMA,
-            )
-            if schema_viol
-            else empty_violations(spark)
+        schema_viol_df = local_frame(
+            spark,
+            [(f"schema.{v.kind}", "*", None, v.column, v.detail, "raw") for v in schema_viol],
+            VIOLATION_SCHEMA,
         )
-        schema_verdict_df = spark.createDataFrame(
+        schema_verdict_df = local_frame(
+            spark,
             [
                 (
                     "*",
@@ -636,7 +634,8 @@ class ValidationSuite:
                 "part", "constraint", "verdict", "observed", "expected"
             )
             if structs
-            else spark.createDataFrame(
+            else local_frame(
+                spark,
                 [],
                 "part string, constraint string, verdict string,"
                 " observed string, expected string",
@@ -763,7 +762,7 @@ class ValidationSuite:
             for fdf in partial_frames[1:]:
                 found = found.unionByName(fdf)
             grid = parts.crossJoin(
-                spark.createDataFrame([(n,) for n in partial_names], "constraint string")
+                local_frame(spark, [(n,) for n in partial_names], "constraint string")
             )
             # FULL outer: the grid is built from raw-side parts, but
             # curated-side checks (decode.curated, spurious_curated)

@@ -174,11 +174,11 @@ def schema_fingerprint(df):
     stats/verdicts history surfaces."""
     from pyspark.sql import SparkSession
 
+    from bigdime_spark.operators.base import local_frame
+
     spark = SparkSession.getActiveSession() or df.sparkSession
     rows = [(i, f, t) for i, (f, t) in enumerate(df.dtypes)]
-    return spark.createDataFrame(
-        rows, "ordinal int, column string, dtype string"
-    )
+    return local_frame(spark, rows, "ordinal int, column string, dtype string")
 
 
 def schema_history(history):

@@ -353,6 +353,31 @@ def test_cc_star_converges_on_long_chains_where_label_cannot(spark):
     assert sgot == {f"img{i:04d}": "img0000" for i in range(41)}
 
 
+def test_cc_star_holds_no_snapshot_per_round(spark):
+    """Each star round snapshots two edge sets; the round releases them
+    once the next round's edges have materialized, so what the call
+    leaves persisted (canon, the final edges, the returned labels)
+    does not grow with the number of rounds a chain needs."""
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    def left_behind(n_hops):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n_hops)], "id1 long, id2 long"
+        )
+        before = persisted_ids()
+        labels = dedup.connected_components_star(pairs, max_iter=12)
+        try:
+            assert labels.select("component").distinct().collect() == [(0,)]
+            return len(persisted_ids() - before)
+        finally:
+            labels.unpersist()
+
+    short, long = left_behind(2), left_behind(40)
+    assert short == long <= 3, (short, long)
+
+
 # ----------------------------------------- containment near-dup (C61)
 
 

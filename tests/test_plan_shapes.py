@@ -507,3 +507,69 @@ def test_cached_frames_coalesce_on_one_part_run(spark, tmp_path):
             res.release()
     finally:
         spark.conf.set(key, before)
+
+
+#: physical-plan nodes that start Python workers: a pickled Python RDD
+#: (what ``createDataFrame(list)`` plans) and the Python UDF operators.
+#: ``ExistingRDD`` is also the scan of a ``localCheckpoint`` snapshot,
+#: which ``run`` does not plan; a ``run`` that adopts one must drop it
+#: here and rely on ``PythonRDD``
+_PYTHON_NODES = (
+    "PythonRDD",
+    "ExistingRDD",
+    "PythonMapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+def test_decode_off_run_plans_no_python_node(spark, tmp_path):
+    """With decode off, nothing in a ``run`` needs Python on the
+    executors: the driver-built constants (schema verdicts, the
+    partial-verdict grid, the empty lineage, the schema fingerprint)
+    are ``LocalRelation``s, so no SQL execution of a resumed nightly
+    run may plan a Python RDD or a Python UDF node."""
+    from bigdime_spark import cli
+    from bigdime_spark.operators.base import local_frame
+    from bigdime_spark.plans.lineage import VALIDATED, LineageStore
+    from bigdime_spark.schema import LINEAGE_SCHEMA
+    from bigdime_spark.sources.tables import write_table
+
+    fx = build_fixture(spark, n_rows=200, n_parts=2)
+    write_table(fx.raw, str(tmp_path / "raw"))
+    write_table(fx.curated, str(tmp_path / "curated"))
+    write_table(fx.manifest, str(tmp_path / "manifest"), partition_by=None)
+    lineage = str(tmp_path / "lineage")
+    LineageStore(lineage).append(
+        local_frame(spark, [("nightly-0", "p0000", VALIDATED, 100, 0, 0)], LINEAGE_SCHEMA)
+    )
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+
+    def executions():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = {e.executionId() for e in executions()}
+    rc = cli.main(
+        [
+            "run",
+            "--raw", str(tmp_path / "raw"),
+            "--curated", str(tmp_path / "curated"),
+            "--manifest", str(tmp_path / "manifest"),
+            "--out", str(tmp_path / "out"),
+            "--lineage", lineage,
+            "--run-id", "nightly-1",
+        ]
+    )
+    assert rc == 0
+    ran = [e for e in executions() if e.executionId() not in before]
+    assert ran
+    python_backed = [
+        (e.description(), [n for n in _PYTHON_NODES if n in e.physicalPlanDescription()])
+        for e in ran
+        if any(n in e.physicalPlanDescription() for n in _PYTHON_NODES)
+    ]
+    assert python_backed == [], python_backed
