@@ -17,9 +17,19 @@ Prints ONE summary JSON line on stdout; all tables land as parquet
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 import time
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
+
+from bigdime_spark.session import get_spark
+
+# looked up at call time (tables.read_table), so a caller that wraps
+# the module's functions (perfbench --trace 1) sees every read and write
+from bigdime_spark.sources import tables
 
 
 def _bound(flag: str, text: str) -> tuple[float | None, float | None]:
@@ -489,7 +499,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="skip writing <out>/quarantine on failure (reference "
         "semantics: FAILED units are quarantined by default)",
     )
-    r.add_argument("--master", default=None)
 
     rep = sub.add_parser("report", help="summarize a run's output dir (no Spark — DuckDB)")
     rep.add_argument("--out", required=True, help="dir holding verdicts/ violations/ [lineage/]")
@@ -518,7 +527,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "ranges overlap each part's (1 = perfectly clustered, n_parts = "
         "scattered, pruning dead); requires exactly one stats dir",
     )
-    ru.add_argument("--master", default=None)
 
     dd = sub.add_parser(
         "dedup",
@@ -555,7 +563,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "(O(log^2 n) rounds regardless of diameter — for pair graphs "
         "that legitimately chain)",
     )
-    dd.add_argument("--master", default=None)
 
     an = sub.add_parser(
         "ann",
@@ -625,7 +632,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "2 on any defect instead of silently computing cosines over "
         "poisoned vectors",
     )
-    an.add_argument("--master", default=None)
 
     st = sub.add_parser(
         "stream",
@@ -678,7 +684,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "(n_distinct needs unbounded state — batch only)",
     )
     st.add_argument("--max-files-per-trigger", type=int, default=None)
-    st.add_argument("--master", default=None)
 
     dr = sub.add_parser(
         "drift",
@@ -705,7 +710,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "triage reads the same persisted arrays. Incompatible with "
         "--table-level (bounds come from the per-part spec rows)",
     )
-    dr.add_argument("--master", default=None)
 
     ed = sub.add_parser(
         "edrift",
@@ -719,7 +723,6 @@ def _build_parser() -> argparse.ArgumentParser:
     ed.add_argument("--nproj", type=int, default=8)
     ed.add_argument("--nbins", type=int, default=32)
     ed.add_argument("--seed", type=int, default=42)
-    ed.add_argument("--master", default=None)
 
     ol = sub.add_parser(
         "outliers",
@@ -742,7 +745,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="|modified z| cutoff (Iglewicz-Hoaglin recommend 3.5)",
     )
     ol.add_argument("--out", default=None, help="optionally write full scores here")
-    ol.add_argument("--master", default=None)
 
     pr = sub.add_parser(
         "profile",
@@ -817,7 +819,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "most 20 rows per profile (bounded diagnostic, not the data "
         "path)",
     )
-    pr.add_argument("--master", default=None)
 
     sg = sub.add_parser(
         "suggest",
@@ -858,7 +859,6 @@ def _build_parser() -> argparse.ArgumentParser:
     sg.add_argument(
         "--out", default=None, help="also write the config JSON here"
     )
-    sg.add_argument("--master", default=None)
 
     pl = sub.add_parser(
         "plan",
@@ -876,7 +876,6 @@ def _build_parser() -> argparse.ArgumentParser:
         default=None,
         help="comma-separated metric columns (default: all shared columns)",
     )
-    pl.add_argument("--master", default=None)
 
     hi = sub.add_parser(
         "history",
@@ -921,7 +920,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="worst rows printed (flaky first, then regressed; "
         "counts are always exact)",
     )
-    hi.add_argument("--master", default=None)
 
     fl = sub.add_parser(
         "files",
@@ -956,7 +954,6 @@ def _build_parser() -> argparse.ArgumentParser:
         default=256.0,
         help="target file size for --plan-compaction (default 256 MB)",
     )
-    fl.add_argument("--master", default=None)
 
     tr = sub.add_parser(
         "trend",
@@ -1061,7 +1058,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="non-null leading runs fixed as the CUSUM reference "
         "window (default 3, minimum 2)",
     )
-    tr.add_argument("--master", default=None)
 
     cu = sub.add_parser(
         "curate",
@@ -1138,7 +1134,6 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     cu.add_argument("--seed", default="curate")
     cu.add_argument("--shard-budget", type=int, default=None)
-    cu.add_argument("--master", default=None)
 
     dc = sub.add_parser(
         "decontam",
@@ -1159,7 +1154,14 @@ def _build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="also write the decontaminated corpus to <out>/clean",
     )
-    dc.add_argument("--master", default=None)
+    for name, parser in sub.choices.items():
+        if name != "report":  # report reads its parquet with DuckDB
+            parser.add_argument(
+                "--master",
+                default=None,
+                help="Spark master URL (default: spark-submit's --master, "
+                "else local[$SPARK_GRAFT_CPUS] or local[*])",
+            )
     return p
 
 
@@ -1210,1534 +1212,1285 @@ def _committed_sink_files(sink_dir: str) -> list[str]:
     return sorted({p for p in committed if _os.path.exists(p)})
 
 
-def main(argv: list[str] | None = None) -> int:
-    args = _build_parser().parse_args(argv)
-    if args.cmd == "report":
-        import duckdb
+@contextlib.contextmanager
+def _cached(frame):
+    """Yield the persisted ``frame``; unpersist it when the block exits,
+    by return or by error, so no cached frame outlives its command."""
+    try:
+        yield frame
+    finally:
+        frame.unpersist()
 
-        con = duckdb.connect()
-        verdicts = f"{args.out}/verdicts/*.parquet"
-        summary = {
-            "verdict_counts": dict(
-                con.execute(
-                    f"SELECT verdict, count(*) FROM read_parquet('{verdicts}') GROUP BY 1 ORDER BY 1"
-                ).fetchall()
+
+def _pick(row, *cols) -> dict:
+    """``row``'s ``cols``, in that order, for a JSON summary."""
+    return {c: row[c] for c in cols}
+
+
+def _value_counts(frame, col: str) -> dict:
+    """Rows per ``col`` value of a small frame (statuses, verdicts)."""
+    return {
+        r[col]: r["n"]
+        for r in frame.groupBy(col).agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
+def _round6(v):
+    return None if v is None else round(v, 6)
+
+
+def _ks_psi(r, psi_fail: float) -> dict:
+    """The KS/PSI fields of a drift score row."""
+    return {
+        "ks_d": _round6(r["ks_d"]),
+        "ks_exceeds": (
+            None
+            if r["ks_d"] is None or r["ks_threshold"] is None
+            else bool(r["ks_d"] > r["ks_threshold"])
+        ),
+        "psi": _round6(r["psi"]),
+        "psi_fail": None if r["psi"] is None else bool(r["psi"] >= psi_fail),
+    }
+
+
+def _pairs(spec: str, flag: str) -> list[tuple[str, str]]:
+    out = []
+    for token in _cols(spec):
+        sides = token.split("~")
+        if len(sides) != 2 or not sides[0] or not sides[1]:
+            raise ValueError(f"{flag}: expected x~y, got {token!r}")
+        out.append((sides[0], sides[1]))
+    return out
+
+
+def _cmd_report(args) -> int:
+    import duckdb
+
+    con = duckdb.connect()
+    verdicts = f"{args.out}/verdicts/*.parquet"
+    summary = {
+        "verdict_counts": dict(
+            con.execute(
+                f"SELECT verdict, count(*) FROM read_parquet('{verdicts}') GROUP BY 1 ORDER BY 1"
+            ).fetchall()
+        ),
+        "failed": [
+            {"part": p, "constraint": c, "observed": o, "expected": e}
+            for p, c, o, e in con.execute(
+                f"SELECT part, \"constraint\", observed, expected FROM read_parquet('{verdicts}') "
+                f"WHERE verdict = 'FAIL' ORDER BY part, \"constraint\" LIMIT {args.top}"
+            ).fetchall()
+        ],
+    }
+    try:
+        summary["violations_by_constraint"] = dict(
+            con.execute(
+                f"SELECT \"constraint\", count(*) FROM read_parquet('{args.out}/violations/*.parquet') GROUP BY 1 ORDER BY 2 DESC"
+            ).fetchall()
+        )
+    except Exception:
+        summary["violations_by_constraint"] = {}
+    try:
+        committed = _committed_sink_files(f"{args.out}/dup_keys")
+        if committed:
+            summary["stream_dup_keys"] = con.execute(
+                "SELECT count(DISTINCT image_id) FROM read_parquet(?)",
+                [committed],
+            ).fetchone()[0]
+    except Exception:
+        pass  # not a stream output dir / no duplicates ever emitted
+    try:
+        summary["lineage"] = [
+            {"part": p, "status": st, "rows_scanned": rs, "violations": v}
+            for p, st, rs, v in con.execute(
+                f"SELECT part, status, rows_scanned, violations FROM read_parquet('{args.out}/lineage/*.parquet') ORDER BY part LIMIT {args.top}"
+            ).fetchall()
+        ]
+    except Exception:
+        pass
+    try:
+        # C69 slice triage when the run was asked for it: the
+        # highest-lift segments, the "where the fix starts" readout
+        summary["top_slices"] = [
+            {"dim": d, "value": v, "n_viol": nv, "lift": lf}
+            for d, v, nv, lf in con.execute(
+                f"SELECT dim, value, n_viol, lift "
+                f"FROM read_parquet('{args.out}/slices/*.parquet') "
+                f"WHERE lift IS NOT NULL "
+                f"ORDER BY lift DESC, n_viol DESC, dim, value LIMIT {args.top}"
+            ).fetchall()
+        ]
+    except Exception:
+        pass  # run did not use --slice-dims
+    try:
+        summary["quarantined_parts"] = [
+            r[0]
+            for r in con.execute(
+                f"SELECT DISTINCT part FROM read_parquet('{args.out}/quarantine/*.parquet') ORDER BY 1"
+            ).fetchall()
+        ]
+    except Exception:
+        pass  # clean run / quarantine disabled
+    print(json.dumps({"cmd": "report", **summary}))
+    return 0
+
+
+def _cmd_rollup(args) -> int:
+    from bigdime_spark.operators.stats import rollup_distinct
+
+    if args.ratios and len(args.stats) != 1:
+        raise ValueError(
+            "--ratios needs exactly one stats dir — unioning runs of the "
+            "SAME table would double-count the row/null denominators "
+            "against a deduplicating sketch union"
+        )
+    if args.zone_overlap and len(args.stats) != 1:
+        raise ValueError(
+            "--zone-overlap needs exactly one stats dir — ranges are a "
+            "property of one run's layout"
+        )
+    spark = get_spark(master=args.master)
+    frames = [spark.read.parquet(d) for d in args.stats]
+    summary = {"cmd": "rollup", "sources": args.stats}
+    # --zone-overlap alone needs only min/max columns: don't gate it
+    # on HLL sketches, and don't pay the distinct rollup for it
+    if args.ratios or not args.zone_overlap:
+        missing = [
+            d for d, f in zip(args.stats, frames)
+            if not any(c.endswith("__hll") for c in f.columns)
+        ]
+        if missing:
+            raise ValueError(
+                "no __hll sketch columns in: " + ", ".join(missing)
+                + " (was the profile run with distinct=True columns?)"
+            )
+        rows = rollup_distinct(frames).collect()
+        if not rows:
+            raise ValueError("stats dirs contain no rows")
+        summary["distincts"] = {k: int(v) for k, v in rows[0].asDict().items()}
+    if args.ratios:
+        from bigdime_spark.operators.stats import distinctness_from_stats
+
+        ratios = distinctness_from_stats(frames[0], table_level=True).collect()
+        summary["ratios"] = {
+            r["column"]: {
+                "n_nonnull": int(r["n_nonnull"]),
+                "distinct_est": float(r["distinct_est"]),
+                "distinctness_est": _round6(r["distinctness_est"]),
+            }
+            for r in ratios
+        }
+    if args.zone_overlap:
+        from bigdime_spark.operators.layout import zone_overlap_from_stats
+
+        # parts-sized collect: bounded by partition count, same
+        # contract as the rollup/ratios collects above
+        prof = zone_overlap_from_stats(frames[0], args.zone_overlap).collect()
+        ranged = [r for r in prof if r["overlap_depth"] is not None]
+        worst = sorted(
+            ranged, key=lambda r: (-r["overlap_depth"], str(r["part"]))
+        )[:20]
+        summary["zone_overlap"] = {
+            "column": args.zone_overlap,
+            "n_parts": len(prof),
+            "n_ranged": len(ranged),
+            "max_depth": max(
+                (int(r["overlap_depth"]) for r in ranged), default=None
             ),
-            "failed": [
-                {"part": p, "constraint": c, "observed": o, "expected": e}
-                for p, c, o, e in con.execute(
-                    f"SELECT part, \"constraint\", observed, expected FROM read_parquet('{verdicts}') "
-                    f"WHERE verdict = 'FAIL' ORDER BY part, \"constraint\" LIMIT {args.top}"
-                ).fetchall()
+            "mean_fraction": (
+                round(sum(r["overlap_fraction"] for r in ranged) / len(ranged), 6)
+                if ranged
+                else None
+            ),
+            "worst": [
+                {
+                    "part": str(r["part"]),
+                    "depth": int(r["overlap_depth"]),
+                    "fraction": r["overlap_fraction"],
+                }
+                for r in worst
             ],
         }
-        try:
-            summary["violations_by_constraint"] = dict(
-                con.execute(
-                    f"SELECT \"constraint\", count(*) FROM read_parquet('{args.out}/violations/*.parquet') GROUP BY 1 ORDER BY 2 DESC"
-                ).fetchall()
+    print(json.dumps(summary))
+    return 0
+
+
+def _cmd_drift(args) -> int:
+    from bigdime_spark.operators.drift import PSI_FAIL, drift_from_stats
+
+    if args.buckets_out and args.table_level:
+        raise ValueError(
+            "--buckets-out is per-part triage — it cannot combine with "
+            "--table-level"
+        )
+    spark = get_spark(master=args.master)
+    stats_a = _collapse_streaming_sink(spark.read.parquet(args.stats_a))
+    stats_b = _collapse_streaming_sink(spark.read.parquet(args.stats_b))
+    scores = drift_from_stats(stats_a, stats_b, table_level=args.table_level)
+    bucket_top: dict[tuple, dict] = {}
+    if args.buckets_out:
+        from bigdime_spark.operators.drift import (
+            drift_contributions_from_stats,
+            top_drift_buckets,
+        )
+
+        contrib = drift_contributions_from_stats(stats_a, stats_b)
+        ranked = top_drift_buckets(contrib, k=1_000_000)
+        tables.write_table(ranked, args.buckets_out, partition_by=None)
+        # worst bucket per (part, column): bounded parts×columns.
+        # A (part, column) present in only ONE frame has NULL
+        # shares/gaps (n or m is 0) — surface null, don't crash
+        for r in ranked.filter(F.col("rank") == 1).collect():
+            bucket_top[(r["part"], r["column"])] = {
+                "bucket": r["bucket"],
+                "lo": r["lo"],
+                "hi": r["hi"],
+                "share_r": _round6(r["share_r"]),
+                "share_c": _round6(r["share_c"]),
+                "psi_term": _round6(r["psi_term"]),
+            }
+    rows = [
+        {
+            "part": r["part"],
+            "column": r["column"],
+            **_ks_psi(r, PSI_FAIL),
+            **(
+                {"bucket_top": bucket_top.get((r["part"], r["column"]))}
+                if args.buckets_out
+                else {}
+            ),
+        }
+        for r in scores.collect()  # tiny: parts × columns rows
+    ]
+    print(json.dumps({"cmd": "drift", "a": args.stats_a, "b": args.stats_b,
+                      "scores": rows}))
+    # same exit contract as edrift/outliers/history: 1 when any
+    # score crosses its gate, so the nightly wrapper can page
+    return 1 if any(r["ks_exceeds"] or r["psi_fail"] for r in rows) else 0
+
+
+def _cmd_edrift(args) -> int:
+    from bigdime_spark.operators.drift import PSI_FAIL, embedding_drift
+
+    spark = get_spark(master=args.master)
+    raw = spark.read.parquet(args.raw).withColumn("part", F.lit("*"))
+    cur = spark.read.parquet(args.curated).withColumn("part", F.lit("*"))
+    scores = embedding_drift(
+        raw, cur, vec_col=args.vec_col, dim=args.dim,
+        nproj=args.nproj, nbins=args.nbins, seed=args.seed,
+    )
+    rows = [
+        {
+            "proj": r["column"],
+            **_ks_psi(r, PSI_FAIL),
+            "w1": _round6(r["w1"]),
+            "js": _round6(r["js"]),
+        }
+        for r in scores.collect()  # tiny: nproj rows
+    ]
+    drifted = any(x["ks_exceeds"] or x["psi_fail"] for x in rows)
+    print(json.dumps({"cmd": "edrift", "raw": args.raw, "curated": args.curated,
+                      "scores": rows, "drifted": drifted}))
+    return 1 if drifted else 0
+
+
+def _cmd_profile(args) -> int:
+    from functools import reduce
+
+    from bigdime_spark.operators.stats import (
+        categorical_profile,
+        mutual_information,
+        numeric_correlation,
+    )
+
+    cats = _cols(args.categorical)
+    corr_pairs = _pairs(args.corr, "--corr")
+    mi_pairs = _pairs(args.mi, "--mi")
+    infer_cols = _cols(args.infer_types)
+    np_cols = _cols(args.null_patterns)
+    dv_cols = _cols(args.distinctness)
+    bf_cols = _cols(args.benford)
+    mask_cols = _cols(args.masks)
+    if not (cats or corr_pairs or mi_pairs or infer_cols or np_cols
+            or dv_cols or bf_cols or mask_cols):
+        raise ValueError(
+            "nothing to profile: pass --categorical, --corr, --mi, "
+            "--infer-types, --null-patterns, --distinctness, "
+            "--benford, or --masks"
+        )
+
+    spark = get_spark(master=args.master)
+    summary: dict[str, object] = {"cmd": "profile", "input": args.input}
+    frames: dict[str, object] = {}
+    try:  # analysis is eager — a missing column raises at build time
+        df = tables.read_table(spark, args.input)
+        if cats:
+            frames["categorical"] = categorical_profile(
+                df, tuple(cats), part_col=args.part_col
             )
-        except Exception:
-            summary["violations_by_constraint"] = {}
-        try:
-            committed = _committed_sink_files(f"{args.out}/dup_keys")
-            if committed:
-                summary["stream_dup_keys"] = con.execute(
-                    "SELECT count(DISTINCT image_id) FROM read_parquet(?)",
-                    [committed],
-                ).fetchone()[0]
-        except Exception:
-            pass  # not a stream output dir / no duplicates ever emitted
-        try:
-            summary["lineage"] = [
-                {"part": p, "status": st, "rows_scanned": rs, "violations": v}
-                for p, st, rs, v in con.execute(
-                    f"SELECT part, status, rows_scanned, violations FROM read_parquet('{args.out}/lineage/*.parquet') ORDER BY part LIMIT {args.top}"
-                ).fetchall()
+        if corr_pairs:
+            frames["correlation"] = numeric_correlation(
+                df, corr_pairs, part_col=args.part_col
+            )
+        if mi_pairs:
+            # one scan per pair (each has its own joint-count shape);
+            # tag rows so several pairs union into one frame
+            mis = [
+                mutual_information(df, x, y, part_col=args.part_col)
+                .withColumn("pair", F.lit(f"{x}~{y}"))
+                for x, y in mi_pairs
             ]
-        except Exception:
-            pass
-        try:
-            # C69 slice triage when the run was asked for it: the
-            # highest-lift segments, the "where the fix starts" readout
-            summary["top_slices"] = [
-                {"dim": d, "value": v, "n_viol": nv, "lift": lf}
-                for d, v, nv, lf in con.execute(
-                    f"SELECT dim, value, n_viol, lift "
-                    f"FROM read_parquet('{args.out}/slices/*.parquet') "
-                    f"WHERE lift IS NOT NULL "
-                    f"ORDER BY lift DESC, n_viol DESC, dim, value LIMIT {args.top}"
-                ).fetchall()
-            ]
-        except Exception:
-            pass  # run did not use --slice-dims
-        try:
-            summary["quarantined_parts"] = [
-                r[0]
-                for r in con.execute(
-                    f"SELECT DISTINCT part FROM read_parquet('{args.out}/quarantine/*.parquet') ORDER BY 1"
-                ).fetchall()
-            ]
-        except Exception:
-            pass  # clean run / quarantine disabled
-        print(json.dumps({"cmd": "report", **summary}))
-        return 0
+            frames["mutual_info"] = reduce(lambda a, b: a.unionByName(b), mis)
+        if infer_cols:
+            from bigdime_spark.operators.stats import type_inference_profile
 
-    from bigdime_spark.session import get_spark
-    from bigdime_spark.sources.tables import read_table, write_table
+            frames["type_inference"] = type_inference_profile(
+                df, tuple(infer_cols), part_col=args.part_col
+            )
+        if np_cols:
+            from bigdime_spark.operators.completeness import (
+                null_pattern_profile,
+            )
 
-    if args.cmd == "rollup":
-        from bigdime_spark.operators.stats import rollup_distinct
+            frames["null_patterns"] = null_pattern_profile(
+                df, tuple(np_cols), part_col=args.part_col
+            )
+        if dv_cols:
+            from bigdime_spark.operators.stats import distinct_value_profile
 
-        spark = get_spark("bigdime-rollup", master=args.master)
-        frames = [spark.read.parquet(d) for d in args.stats]
-        summary = {"cmd": "rollup", "sources": args.stats}
-        # --zone-overlap alone needs only min/max columns: don't gate it
-        # on HLL sketches, and don't pay the distinct rollup for it
-        need_distinct = args.ratios or not args.zone_overlap
-        if need_distinct:
-            missing = [
-                d for d, f in zip(args.stats, frames)
-                if not any(c.endswith("__hll") for c in f.columns)
-            ]
-            if missing:
-                print(
-                    "rollup: no __hll sketch columns in: "
-                    + ", ".join(missing)
-                    + " (was the profile run with distinct=True columns?)",
-                    file=sys.stderr,
-                )
-                return 2
-            rows = rollup_distinct(frames).collect()
-            if not rows:
-                print("rollup: stats dirs contain no rows", file=sys.stderr)
-                return 2
-            row = rows[0].asDict()
-            summary["distincts"] = {k: int(v) for k, v in row.items()}
-        if args.ratios:
-            from bigdime_spark.operators.stats import distinctness_from_stats
+            frames["distinctness"] = distinct_value_profile(
+                df, tuple(dv_cols), part_col=args.part_col
+            )
+        if bf_cols:
+            from bigdime_spark.operators.stats import (
+                benford_mad,
+                benford_profile,
+            )
 
-            if len(frames) != 1:
-                print(
-                    "rollup: --ratios needs exactly one stats dir — "
-                    "unioning runs of the SAME table would double-count "
-                    "the row/null denominators against a deduplicating "
-                    "sketch union",
-                    file=sys.stderr,
-                )
-                return 2
-            try:
-                ratios = distinctness_from_stats(
-                    frames[0], table_level=True
-                ).collect()
-            except ValueError as e:
-                print(f"rollup: {e}", file=sys.stderr)
-                return 2
-            summary["ratios"] = {
-                r["column"]: {
-                    "n_nonnull": int(r["n_nonnull"]),
-                    "distinct_est": float(r["distinct_est"]),
-                    "distinctness_est": (
-                        None if r["distinctness_est"] is None
-                        else round(float(r["distinctness_est"]), 6)
-                    ),
+            # persist: benford_mad, the write and the count below all
+            # reuse one scan of the input instead of re-melting it
+            bf = benford_profile(
+                df, tuple(bf_cols), part_col=args.part_col
+            ).persist()
+            frames["benford"] = bf
+            frames["benford_mad"] = benford_mad(bf)
+        if mask_cols:
+            from bigdime_spark.operators.stats import mask_profile
+
+            frames["masks"] = mask_profile(
+                df, tuple(mask_cols), part_col=args.part_col
+            )
+
+        for name, frame in frames.items():
+            if args.out:
+                tables.write_table(frame, f"{args.out}/{name}", partition_by=None)
+                # count the WRITTEN parquet (footer metadata, no
+                # recompute) instead of re-running the profile plan
+                n = spark.read.parquet(f"{args.out}/{name}").count()
+                summary[name] = {"rows": n, "out": f"{args.out}/{name}"}
+            else:
+                rows = frame.limit(21).collect()
+                summary[name] = {
+                    "rows_shown": min(len(rows), 20),
+                    "truncated": len(rows) > 20,
+                    "sample": [r.asDict() for r in rows[:20]],
                 }
-                for r in ratios
-            }
-        if args.zone_overlap:
-            from bigdime_spark.operators.layout import zone_overlap_from_stats
+    finally:
+        for frame in frames.values():
+            if frame.is_cached:
+                frame.unpersist()
+    print(json.dumps(summary, default=str))
+    return 0
 
-            if len(frames) != 1:
-                print(
-                    "rollup: --zone-overlap needs exactly one stats dir — "
-                    "ranges are a property of one run's layout",
-                    file=sys.stderr,
-                )
-                return 2
-            try:
-                # parts-sized collect: bounded by partition count, same
-                # contract as the rollup/ratios collects above
-                prof = zone_overlap_from_stats(frames[0], args.zone_overlap).collect()
-            except ValueError as e:
-                print(f"rollup: {e}", file=sys.stderr)
-                return 2
-            ranged = [r for r in prof if r["overlap_depth"] is not None]
-            worst = sorted(
-                ranged, key=lambda r: (-r["overlap_depth"], str(r["part"]))
-            )[:20]
-            summary["zone_overlap"] = {
-                "column": args.zone_overlap,
-                "n_parts": len(prof),
-                "n_ranged": len(ranged),
-                "max_depth": max(
-                    (int(r["overlap_depth"]) for r in ranged), default=None
-                ),
-                "mean_fraction": (
-                    round(
-                        sum(r["overlap_fraction"] for r in ranged) / len(ranged), 6
-                    )
-                    if ranged
-                    else None
-                ),
-                "worst": [
-                    {
-                        "part": str(r["part"]),
-                        "depth": int(r["overlap_depth"]),
-                        "fraction": r["overlap_fraction"],
-                    }
-                    for r in worst
-                ],
-            }
-        print(json.dumps(summary))
-        return 0
 
-    if args.cmd == "drift":
-        from bigdime_spark.operators.drift import KS_ALPHA_COEFF, PSI_FAIL, drift_from_stats  # noqa: F401
+def _cmd_suggest(args) -> int:
+    from bigdime_spark.plans.suggest import (
+        suggest_constraints,
+        suggest_image_checks,
+        to_config,
+    )
 
-        if args.buckets_out and args.table_level:
-            print(
-                "drift: --buckets-out is per-part triage — it cannot "
-                "combine with --table-level",
-                file=sys.stderr,
-            )
-            return 2
-        spark = get_spark("bigdime-drift", master=args.master)
-        try:
-            stats_a = _collapse_streaming_sink(spark.read.parquet(args.stats_a))
-            stats_b = _collapse_streaming_sink(spark.read.parquet(args.stats_b))
-            scores = drift_from_stats(stats_a, stats_b, table_level=args.table_level)
-            bucket_top: dict[tuple, dict] = {}
-            if args.buckets_out:
-                from bigdime_spark.operators.drift import (
-                    drift_contributions_from_stats,
-                    top_drift_buckets,
-                )
-                from bigdime_spark.sources.tables import write_table
-
-                from pyspark.sql import functions as F
-
-                contrib = drift_contributions_from_stats(stats_a, stats_b)
-                ranked = top_drift_buckets(contrib, k=1_000_000)
-                write_table(ranked, args.buckets_out, partition_by=None)
-                # worst bucket per (part, column): bounded parts×columns.
-                # A (part, column) present in only ONE frame has NULL
-                # shares/gaps (n or m is 0) — surface null, don't crash
-                rnd = lambda v: None if v is None else round(v, 6)  # noqa: E731
-                for r in ranked.filter(F.col("rank") == 1).collect():
-                    bucket_top[(r["part"], r["column"])] = {
-                        "bucket": r["bucket"],
-                        "lo": r["lo"],
-                        "hi": r["hi"],
-                        "share_r": rnd(r["share_r"]),
-                        "share_c": rnd(r["share_c"]),
-                        "psi_term": rnd(r["psi_term"]),
-                    }
-        except ValueError as e:
-            # spec mismatch / duplicate per-part rows — operator error,
-            # not a crash: clean message + exit 2 (same contract as the
-            # rollup guard above)
-            print(f"drift: {e}", file=sys.stderr)
-            return 2
-        rows = [
+    spark = get_spark(master=args.master)
+    df = tables.read_table(spark, args.input)
+    sugg = suggest_constraints(
+        df,
+        columns=_cols(args.columns) if args.columns else None,
+        max_values=args.max_values,
+        tol_null=args.tol_null,
+        min_support=args.min_support,
+    )
+    cfg = to_config(sugg)
+    cfg.update(suggest_image_checks(df))
+    if args.out:
+        with open(args.out, "w") as fh:
+            json.dump(cfg, fh, indent=2, sort_keys=True)
+    print(
+        json.dumps(
             {
-                "part": r["part"],
-                "column": r["column"],
-                "ks_d": round(r["ks_d"], 6) if r["ks_d"] is not None else None,
-                "ks_exceeds": (
-                    None
-                    if r["ks_d"] is None or r["ks_threshold"] is None
-                    else bool(r["ks_d"] > r["ks_threshold"])
-                ),
-                "psi": round(r["psi"], 6) if r["psi"] is not None else None,
-                "psi_fail": None if r["psi"] is None else bool(r["psi"] >= PSI_FAIL),
+                "cmd": "suggest",
+                "n_suggestions": len(sugg),
+                "suggestions": sugg[:50],
+                "config": cfg,
+            }
+        )
+    )
+    return 0
+
+
+def _cmd_outliers(args) -> int:
+    from bigdime_spark.operators.outliers import (
+        numeric_stat_metrics,
+        robust_part_outliers,
+    )
+
+    spark = get_spark(master=args.master)
+    stats = _collapse_streaming_sink(tables.read_table(spark, args.stats))
+    metrics = _cols(args.metrics) if args.metrics else numeric_stat_metrics(stats)
+    with _cached(
+        robust_part_outliers(stats, metrics, threshold=args.threshold).persist()
+    ) as scores:
+        # flagged + not-scoreable rows are rare by construction;
+        # the full frame stays distributed. NOT_READY (NULL metric)
+        # must surface — a part whose profile could not be computed
+        # is exactly the part to look at, not one to hide.
+        def _rows(verdict: str) -> list[dict]:
+            return [
+                _pick(r, "part", "metric", "value", "med", "mad", "robust_z")
+                for r in scores.filter(F.col("verdict") == verdict).collect()
+            ]
+
+        flagged = _rows("OUTLIER")
+        not_ready = _rows("NOT_READY")
+        if args.out:
+            tables.write_table(scores, args.out, partition_by=None)
+        n_scored = scores.count()
+    print(
+        json.dumps(
+            {
+                "cmd": "outliers",
+                "stats": args.stats,
+                "metrics": metrics,
+                "scored": n_scored,
+                "outliers": flagged,
+                "not_ready": not_ready,
+            }
+        )
+    )
+    return 1 if (flagged or not_ready) else 0
+
+
+def _cmd_plan(args) -> int:
+    from bigdime_spark.plans.lineage import part_diff, plan_incremental
+
+    spark = get_spark(master=args.master)
+    cols = _cols(args.compare_cols) if args.compare_cols else None
+    prev = _collapse_streaming_sink(tables.read_table(spark, args.prev))
+    cur = _collapse_streaming_sink(tables.read_table(spark, args.cur))
+    diff = part_diff(prev, cur, args.part_col, cols)
+    statuses = _value_counts(diff, "status")
+    plan = plan_incremental(prev, cur, args.part_col, cols)
+    print(
+        json.dumps(
+            {
+                "cmd": "plan",
+                **plan,
+                "n_to_validate": len(plan["to_validate"]),
+                "unchanged": int(statuses.get("unchanged", 0)),
+            }
+        )
+    )
+    return 0
+
+
+def _cmd_files(args) -> int:
+    from bigdime_spark.operators.filelayout import (
+        file_layout_profile,
+        plan_compaction,
+    )
+
+    spark = get_spark(master=args.master)
+    prof_df = file_layout_profile(
+        spark,
+        args.input,
+        part_col=args.part_col,
+        small_file_bytes=int(args.small_file_mb * 1024 * 1024),
+    )
+    with _cached(prof_df.persist()) as prof_df:
+        prof = prof_df.collect()  # parts-sized
+        compaction = None
+        if args.plan_compaction:
+            compaction = [
+                _pick(r, "part", "n_files", "target_files")
+                for r in plan_compaction(
+                    prof_df, int(args.target_file_mb * 1024 * 1024)
+                )
+                .filter(F.col("action") == "compact")
+                .collect()
+            ]
+    worst = sorted(prof, key=lambda r: (-(r["small_frac"] or 0), r["part"]))
+    print(
+        json.dumps(
+            {
+                "cmd": "files",
+                "input": args.input,
+                "n_parts": len(prof),
+                "n_files": sum(r["n_files"] for r in prof),
+                "n_rows": sum(r["n_rows"] for r in prof),
+                "total_bytes": sum(r["total_bytes"] for r in prof),
+                "n_empty": sum(r["n_empty"] for r in prof),
                 **(
-                    {"bucket_top": bucket_top.get((r["part"], r["column"]))}
-                    if args.buckets_out
+                    {"compaction": compaction}
+                    if compaction is not None
                     else {}
                 ),
+                "worst": [
+                    _pick(r, "part", "n_files", "avg_file_bytes", "small_frac", "n_empty")
+                    for r in worst[:20]
+                ],
             }
-            for r in scores.collect()  # tiny: parts × columns rows
-        ]
-        print(json.dumps({"cmd": "drift", "a": args.stats_a, "b": args.stats_b,
-                          "scores": rows}))
-        # same exit contract as edrift/outliers/history: 1 when any
-        # score crosses its gate, so the nightly wrapper can page
-        return 1 if any(r["ks_exceeds"] or r["psi_fail"] for r in rows) else 0
-
-    if args.cmd == "edrift":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.operators.drift import PSI_FAIL, embedding_drift
-
-        spark = get_spark("bigdime-edrift", master=args.master)
-        raw = spark.read.parquet(args.raw).withColumn("part", F.lit("*"))
-        cur = spark.read.parquet(args.curated).withColumn("part", F.lit("*"))
-        scores = embedding_drift(
-            raw, cur, vec_col=args.vec_col, dim=args.dim,
-            nproj=args.nproj, nbins=args.nbins, seed=args.seed,
         )
-        rows = [
-            {
-                "proj": r["column"],
-                "ks_d": round(r["ks_d"], 6) if r["ks_d"] is not None else None,
-                "ks_exceeds": (
-                    None
-                    if r["ks_d"] is None or r["ks_threshold"] is None
-                    else bool(r["ks_d"] > r["ks_threshold"])
-                ),
-                "psi": round(r["psi"], 6) if r["psi"] is not None else None,
-                "psi_fail": None if r["psi"] is None else bool(r["psi"] >= PSI_FAIL),
-                "w1": round(r["w1"], 6) if r["w1"] is not None else None,
-                "js": round(r["js"], 6) if r["js"] is not None else None,
-            }
-            for r in scores.collect()  # tiny: nproj rows
-        ]
-        drifted = any(x["ks_exceeds"] or x["psi_fail"] for x in rows)
-        print(json.dumps({"cmd": "edrift", "raw": args.raw, "curated": args.curated,
-                          "scores": rows, "drifted": drifted}))
-        return 1 if drifted else 0
+    )
+    if args.max_small_frac is not None and any(
+        (r["small_frac"] or 0) > args.max_small_frac for r in prof
+    ):
+        return 1
+    return 0
 
-    if args.cmd == "profile":
-        from pyspark.sql import functions as F
 
-        from bigdime_spark.operators.stats import (
-            categorical_profile,
-            mutual_information,
-            numeric_correlation,
-        )
+def _cmd_history(args) -> int:
+    from bigdime_spark.plans.lineage import verdict_history
 
-        def _pairs(spec: str, flag: str) -> list[tuple[str, str]]:
-            out = []
-            for token in (t.strip() for t in spec.split(",") if t.strip()):
-                sides = token.split("~")
-                if len(sides) != 2 or not sides[0] or not sides[1]:
-                    raise ValueError(f"{flag}: expected x~y, got {token!r}")
-                out.append((sides[0], sides[1]))
-            return out
+    n_modes = sum(
+        x is not None for x in (args.verdicts, args.schemas, args.kmv)
+    )
+    if n_modes != 1:
+        raise ValueError("pass exactly one of --verdicts, --schemas or --kmv")
+    spark = get_spark(master=args.master)
+    if args.kmv is not None:
+        from bigdime_spark.operators.kmv import kmv_run_churn
 
-        try:
-            cats = [c.strip() for c in args.categorical.split(",") if c.strip()]
-            corr_pairs = _pairs(args.corr, "--corr")
-            mi_pairs = _pairs(args.mi, "--mi")
-            infer_cols = [c.strip() for c in args.infer_types.split(",") if c.strip()]
-            np_cols = [c.strip() for c in args.null_patterns.split(",") if c.strip()]
-            dv_cols = [c.strip() for c in args.distinctness.split(",") if c.strip()]
-            bf_cols = [c.strip() for c in args.benford.split(",") if c.strip()]
-            mask_cols = [c.strip() for c in args.masks.split(",") if c.strip()]
-            if not (cats or corr_pairs or mi_pairs or infer_cols or np_cols
-                    or dv_cols or bf_cols or mask_cols):
-                raise ValueError(
-                    "nothing to profile: pass --categorical, --corr, --mi, "
-                    "--infer-types, --null-patterns, --distinctness, "
-                    "--benford, or --masks"
-                )
-        except ValueError as e:
-            print(f"profile: {e}", file=sys.stderr)
-            return 2
-
-        spark = get_spark("bigdime-profile", master=args.master)
-        summary: dict[str, object] = {"cmd": "profile", "input": args.input}
-        try:  # analysis is eager — a missing column raises at build time
-            df = read_table(spark, args.input)
-            frames: dict[str, object] = {}
-            if cats:
-                frames["categorical"] = categorical_profile(
-                    df, tuple(cats), part_col=args.part_col
-                )
-            if corr_pairs:
-                frames["correlation"] = numeric_correlation(
-                    df, corr_pairs, part_col=args.part_col
-                )
-            if mi_pairs:
-                # one scan per pair (each has its own joint-count shape);
-                # tag rows so several pairs union into one frame
-                from functools import reduce
-
-                mis = [
-                    mutual_information(df, x, y, part_col=args.part_col)
-                    .withColumn("pair", F.lit(f"{x}~{y}"))
-                    for x, y in mi_pairs
-                ]
-                frames["mutual_info"] = reduce(lambda a, b: a.unionByName(b), mis)
-            if infer_cols:
-                from bigdime_spark.operators.stats import type_inference_profile
-
-                frames["type_inference"] = type_inference_profile(
-                    df, tuple(infer_cols), part_col=args.part_col
-                )
-            if np_cols:
-                from bigdime_spark.operators.completeness import (
-                    null_pattern_profile,
-                )
-
-                frames["null_patterns"] = null_pattern_profile(
-                    df, tuple(np_cols), part_col=args.part_col
-                )
-            if dv_cols:
-                from bigdime_spark.operators.stats import distinct_value_profile
-
-                frames["distinctness"] = distinct_value_profile(
-                    df, tuple(dv_cols), part_col=args.part_col
-                )
-            if bf_cols:
-                from bigdime_spark.operators.stats import (
-                    benford_mad,
-                    benford_profile,
-                )
-
-                # persist: benford_mad, the write and the count below all
-                # reuse one scan of the input instead of re-melting it
-                bf = benford_profile(
-                    df, tuple(bf_cols), part_col=args.part_col
-                ).persist()
-                frames["benford"] = bf
-                frames["benford_mad"] = benford_mad(bf)
-            if mask_cols:
-                from bigdime_spark.operators.stats import mask_profile
-
-                frames["masks"] = mask_profile(
-                    df, tuple(mask_cols), part_col=args.part_col
-                )
-
-            for name, frame in frames.items():
-                if args.out:
-                    write_table(frame, f"{args.out}/{name}", partition_by=None)
-                    # count the WRITTEN parquet (footer metadata, no
-                    # recompute) instead of re-running the profile plan
-                    n = spark.read.parquet(f"{args.out}/{name}").count()
-                    summary[name] = {"rows": n, "out": f"{args.out}/{name}"}
-                else:
-                    rows = frame.limit(21).collect()
-                    summary[name] = {
-                        "rows_shown": min(len(rows), 20),
-                        "truncated": len(rows) > 20,
-                        "sample": [r.asDict() for r in rows[:20]],
-                    }
-            for frame in frames.values():
-                if frame.is_cached:
-                    frame.unpersist()
-        except Exception as e:  # missing column etc. — operator error, not a crash
-            print(f"profile: {e}", file=sys.stderr)
-            return 2
-        print(json.dumps(summary, default=str))
-        return 0
-
-    if args.cmd == "suggest":
-        from bigdime_spark.plans.suggest import (
-            suggest_constraints,
-            suggest_image_checks,
-            to_config,
-        )
-
-        spark = get_spark("bigdime-suggest", master=args.master)
-        try:
-            df = read_table(spark, args.input)
-            cols = (
-                [c.strip() for c in args.columns.split(",") if c.strip()]
-                if args.columns
-                else None
-            )
-            sugg = suggest_constraints(
-                df,
-                columns=cols,
-                max_values=args.max_values,
-                tol_null=args.tol_null,
-                min_support=args.min_support,
-            )
-        except ValueError as e:
-            print(f"suggest: {e}", file=sys.stderr)
-            return 2
-        cfg = to_config(sugg)
-        cfg.update(suggest_image_checks(df))
-        if args.out:
-            with open(args.out, "w") as fh:
-                json.dump(cfg, fh, indent=2, sort_keys=True)
-        print(
-            json.dumps(
-                {
-                    "cmd": "suggest",
-                    "n_suggestions": len(sugg),
-                    "suggestions": sugg[:50],
-                    "config": cfg,
-                }
-            )
-        )
-        return 0
-
-    if args.cmd == "outliers":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.operators.outliers import (
-            numeric_stat_metrics,
-            robust_part_outliers,
-        )
-
-        spark = get_spark("bigdime-outliers", master=args.master)
-        stats = _collapse_streaming_sink(read_table(spark, args.stats))
-        if args.metrics:
-            metrics = [m.strip() for m in args.metrics.split(",") if m.strip()]
-        else:
-            metrics = numeric_stat_metrics(stats)
-        try:
-            scores = robust_part_outliers(
-                stats, metrics, threshold=args.threshold
-            ).persist()
-            # flagged + not-scoreable rows are rare by construction;
-            # the full frame stays distributed. NOT_READY (NULL metric)
-            # must surface — a part whose profile could not be computed
-            # is exactly the part to look at, not one to hide.
-            def _rows(verdict: str) -> list[dict]:
-                return [
-                    {
-                        "part": r["part"],
-                        "metric": r["metric"],
-                        "value": r["value"],
-                        "med": r["med"],
-                        "mad": r["mad"],
-                        "robust_z": r["robust_z"],
-                    }
-                    for r in scores.filter(F.col("verdict") == verdict).collect()
-                ]
-
-            flagged = _rows("OUTLIER")
-            not_ready = _rows("NOT_READY")
-            if args.out:
-                write_table(scores, args.out, partition_by=None)
-            n_scored = scores.count()
-        except ValueError as e:
-            # missing/empty/non-numeric metric columns — operator
-            # error, not a crash: same clean stderr + exit-2 contract
-            # as drift
-            print(f"outliers: {e}", file=sys.stderr)
-            return 2
-        finally:
-            try:
-                scores.unpersist()
-            except NameError:
-                pass
-        print(
-            json.dumps(
-                {
-                    "cmd": "outliers",
-                    "stats": args.stats,
-                    "metrics": metrics,
-                    "scored": n_scored,
-                    "outliers": flagged,
-                    "not_ready": not_ready,
-                }
-            )
-        )
-        return 1 if (flagged or not_ready) else 0
-
-    if args.cmd == "plan":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.plans.lineage import part_diff, plan_incremental
-
-        spark = get_spark("bigdime-plan", master=args.master)
-        cols = (
-            [c.strip() for c in args.compare_cols.split(",") if c.strip()]
-            if args.compare_cols
-            else None
-        )
-        prev = _collapse_streaming_sink(read_table(spark, args.prev))
-        cur = _collapse_streaming_sink(read_table(spark, args.cur))
-        try:
-            diff = part_diff(prev, cur, args.part_col, cols)
-            statuses = {
-                r["status"]: r["n"]
-                for r in diff.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            plan = plan_incremental(prev, cur, args.part_col, cols)
-        except ValueError as e:
-            print(f"plan: {e}", file=sys.stderr)
-            return 2
-        print(
-            json.dumps(
-                {
-                    "cmd": "plan",
-                    **plan,
-                    "n_to_validate": len(plan["to_validate"]),
-                    "unchanged": int(statuses.get("unchanged", 0)),
-                }
-            )
-        )
-        return 0
-
-    if args.cmd == "files":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.operators.filelayout import file_layout_profile
-
-        spark = get_spark("bigdime-files", master=args.master)
-        try:
-            prof_df = file_layout_profile(
-                spark,
-                args.input,
-                part_col=args.part_col,
-                small_file_bytes=int(args.small_file_mb * 1024 * 1024),
-            )
-            prof_df = prof_df.persist()
-            prof = prof_df.collect()  # parts-sized
-            compaction = None
-            if args.plan_compaction:
-                from bigdime_spark.operators.filelayout import plan_compaction
-
-                compaction = [
-                    {
-                        "part": r["part"],
-                        "n_files": r["n_files"],
-                        "target_files": r["target_files"],
-                    }
-                    for r in plan_compaction(
-                        prof_df, int(args.target_file_mb * 1024 * 1024)
-                    )
-                    .filter(F.col("action") == "compact")
-                    .collect()
-                ]
-            prof_df.unpersist()
-        except ValueError as e:
-            print(f"files: {e}", file=sys.stderr)
-            return 2
-        worst = sorted(prof, key=lambda r: (-(r["small_frac"] or 0), r["part"]))
-        print(
-            json.dumps(
-                {
-                    "cmd": "files",
-                    "input": args.input,
-                    "n_parts": len(prof),
-                    "n_files": sum(r["n_files"] for r in prof),
-                    "n_rows": sum(r["n_rows"] for r in prof),
-                    "total_bytes": sum(r["total_bytes"] for r in prof),
-                    "n_empty": sum(r["n_empty"] for r in prof),
-                    **(
-                        {"compaction": compaction}
-                        if compaction is not None
-                        else {}
-                    ),
-                    "worst": [
-                        {
-                            "part": r["part"],
-                            "n_files": r["n_files"],
-                            "avg_file_bytes": r["avg_file_bytes"],
-                            "small_frac": r["small_frac"],
-                            "n_empty": r["n_empty"],
-                        }
-                        for r in worst[:20]
-                    ],
-                }
-            )
-        )
-        if args.max_small_frac is not None and any(
-            (r["small_frac"] or 0) > args.max_small_frac for r in prof
-        ):
-            return 1
-        return 0
-
-    if args.cmd == "history":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.plans.lineage import verdict_history
-
-        n_modes = sum(
-            x is not None for x in (args.verdicts, args.schemas, args.kmv)
-        )
-        if n_modes != 1:
-            print(
-                "history: pass exactly one of --verdicts, --schemas or --kmv",
-                file=sys.stderr,
-            )
-            return 2
-        spark = get_spark("bigdime-history", master=args.master)
-        if args.kmv is not None:
-            from bigdime_spark.operators.kmv import kmv_run_churn
-
-            try:
-                churn = kmv_run_churn(read_table(spark, args.kmv)).persist()
-                # churn is (columns x parts) rows — metadata-sized at any
-                # corpus size (the sketches bound it by construction), but
-                # stdout still only carries the worst movers
-                worst = (
-                    churn.orderBy(
-                        F.desc("lost_est"), F.desc("new_est"), "column", "part"
-                    )
-                    .limit(args.max_rows)
-                    .collect()
-                )
-                gate_hit = (
-                    args.max_lost_frac is not None
-                    and churn.filter(
-                        (F.col("n_prev_est") > 0)
-                        & (
-                            F.col("lost_est")
-                            > args.max_lost_frac * F.col("n_prev_est")
-                        )
-                    ).limit(1).count()
-                    > 0
-                )
-                churn.unpersist()
-            except ValueError as e:
-                print(f"history: {e}", file=sys.stderr)
-                return 2
-            print(
-                json.dumps(
-                    {
-                        "cmd": "history",
-                        "mode": "kmv",
-                        "worst": [
-                            {
-                                "column": r["column"],
-                                "part": r["part"],
-                                "k": r["k"],
-                                "n_prev_est": r["n_prev_est"],
-                                "n_cur_est": r["n_cur_est"],
-                                "jaccard_est": r["jaccard_est"],
-                                "new_est": r["new_est"],
-                                "lost_est": r["lost_est"],
-                            }
-                            for r in worst
-                        ],
-                    }
-                )
-            )
-            return 1 if gate_hit else 0
-        if args.schemas is not None:
-            from bigdime_spark.schema import SCHEMA_BREAKING, schema_history
-
-            try:
-                hist = schema_history(
-                    read_table(spark, args.schemas)
-                ).persist()
-                counts = {
-                    r["status"]: r["n"]
-                    for r in hist.groupBy("status")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                changed = (
-                    hist.filter(F.col("status") != "stable")
-                    .orderBy("status", "column")
-                    .limit(args.max_rows)
-                    .collect()
-                )
-                hist.unpersist()
-            except ValueError as e:
-                print(f"history: {e}", file=sys.stderr)
-                return 2
-            print(
-                json.dumps(
-                    {
-                        "cmd": "history",
-                        "mode": "schemas",
-                        "statuses": dict(sorted(counts.items())),
-                        "changed": [
-                            {
-                                "column": r["column"],
-                                "status": r["status"],
-                                "n_runs": r["n_runs"],
-                                "first_run": r["first_run"],
-                                "last_run": r["last_run"],
-                                "latest_dtype": r["latest_dtype"],
-                                "detail": r["detail"],
-                            }
-                            for r in changed
-                        ],
-                    }
-                )
-            )
-            return (
-                1
-                if any(counts.get(s, 0) for s in SCHEMA_BREAKING)
-                else 0
-            )
-        try:
-            hist = verdict_history(read_table(spark, args.verdicts)).persist()
-            counts = {
-                r["status"]: r["n"]
-                for r in hist.groupBy("status")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            # worst rows only — the full profile is parts × constraints
-            # and belongs in a table, not stdout
-            order = F.when(F.col("status") == "flaky", 0).when(
-                F.col("status") == "regressed", 1
-            )
+        with _cached(
+            kmv_run_churn(tables.read_table(spark, args.kmv)).persist()
+        ) as churn:
+            # churn is (columns x parts) rows — metadata-sized at any
+            # corpus size (the sketches bound it by construction), but
+            # stdout still only carries the worst movers
             worst = (
-                hist.filter(F.col("status").isin("flaky", "regressed"))
-                .orderBy(order, F.desc("n_transitions"), "part", "constraint")
+                churn.orderBy(
+                    F.desc("lost_est"), F.desc("new_est"), "column", "part"
+                )
                 .limit(args.max_rows)
                 .collect()
             )
-            hist.unpersist()
-        except ValueError as e:
-            print(f"history: {e}", file=sys.stderr)
-            return 2
+            gate_hit = (
+                args.max_lost_frac is not None
+                and churn.filter(
+                    (F.col("n_prev_est") > 0)
+                    & (
+                        F.col("lost_est")
+                        > args.max_lost_frac * F.col("n_prev_est")
+                    )
+                ).limit(1).count()
+                > 0
+            )
         print(
             json.dumps(
                 {
                     "cmd": "history",
+                    "mode": "kmv",
+                    "worst": [
+                        _pick(r, "column", "part", "k", "n_prev_est", "n_cur_est",
+                              "jaccard_est", "new_est", "lost_est")
+                        for r in worst
+                    ],
+                }
+            )
+        )
+        return 1 if gate_hit else 0
+    if args.schemas is not None:
+        from bigdime_spark.schema import SCHEMA_BREAKING, schema_history
+
+        with _cached(
+            schema_history(tables.read_table(spark, args.schemas)).persist()
+        ) as hist:
+            counts = _value_counts(hist, "status")
+            changed = (
+                hist.filter(F.col("status") != "stable")
+                .orderBy("status", "column")
+                .limit(args.max_rows)
+                .collect()
+            )
+        print(
+            json.dumps(
+                {
+                    "cmd": "history",
+                    "mode": "schemas",
                     "statuses": dict(sorted(counts.items())),
-                    "worst": [
-                        {
-                            "part": r["part"],
-                            "constraint": r["constraint"],
-                            "status": r["status"],
-                            "n_runs": r["n_runs"],
-                            "n_transitions": r["n_transitions"],
-                            "last_verdict": r["last_verdict"],
-                        }
-                        for r in worst
+                    "changed": [
+                        _pick(r, "column", "status", "n_runs", "first_run",
+                              "last_run", "latest_dtype", "detail")
+                        for r in changed
                     ],
                 }
             )
         )
-        return (
-            1
-            if counts.get("flaky", 0) + counts.get("regressed", 0) > 0
-            else 0
+        return 1 if any(counts.get(s, 0) for s in SCHEMA_BREAKING) else 0
+    with _cached(
+        verdict_history(tables.read_table(spark, args.verdicts)).persist()
+    ) as hist:
+        counts = _value_counts(hist, "status")
+        # worst rows only — the full profile is parts × constraints
+        # and belongs in a table, not stdout
+        order = F.when(F.col("status") == "flaky", 0).when(
+            F.col("status") == "regressed", 1
         )
-
-    if args.cmd == "trend":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.operators.outliers import (
-            ANOMALY,
-            metric_cusum,
-            metric_ewma,
-            metric_holt_winters,
-            metric_trend,
-            metric_zscore,
-            numeric_stat_metrics,
+        worst = (
+            hist.filter(F.col("status").isin("flaky", "regressed"))
+            .orderBy(order, F.desc("n_transitions"), "part", "constraint")
+            .limit(args.max_rows)
+            .collect()
         )
-
-        zmode = args.zscore is not None
-        emode = args.ewma is not None
-        hmode = args.hw is not None
-        cmode = args.cusum is not None
-        if zmode + emode + hmode + cmode > 1:
-            print(
-                "trend: --zscore, --ewma, --hw and --cusum are mutually "
-                "exclusive (one baseline per invocation)",
-                file=sys.stderr,
-            )
-            return 2
-        spark = get_spark("bigdime-trend", master=args.master)
-        try:
-            hist = read_table(spark, args.history)
-            metrics = (
-                [m.strip() for m in args.metrics.split(",") if m.strip()]
-                if args.metrics
-                else numeric_stat_metrics(hist)
-            )
-            if zmode:
-                scored = metric_zscore(
-                    hist,
-                    metrics,
-                    threshold=args.zscore,
-                    min_history=args.min_history,
-                ).persist()
-                rank_col = "robust_z"
-            elif emode:
-                scored = metric_ewma(
-                    hist,
-                    metrics,
-                    alpha=args.ewma,
-                    threshold=args.ewma_threshold,
-                    min_history=args.min_history,
-                ).persist()
-                rank_col = "z"
-            elif hmode:
-                scored = metric_holt_winters(
-                    hist,
-                    metrics,
-                    season=args.hw,
-                    threshold=args.hw_threshold,
-                ).persist()
-                rank_col = "z"
-            elif cmode:
-                scored = metric_cusum(
-                    hist,
-                    metrics,
-                    k_sigma=args.cusum_k,
-                    h_sigma=args.cusum,
-                    baseline_n=args.cusum_baseline,
-                ).persist()
-                rank_col = None
-            else:
-                scored = metric_trend(
-                    hist, metrics, max_rel_change=args.max_rel_change
-                ).persist()
-                rank_col = "rel_change"
-            counts = {
-                r["verdict"]: r["n"]
-                for r in scored.groupBy("verdict")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
+    print(
+        json.dumps(
+            {
+                "cmd": "history",
+                "statuses": dict(sorted(counts.items())),
+                "worst": [
+                    _pick(r, "part", "constraint", "status", "n_runs",
+                          "n_transitions", "last_verdict")
+                    for r in worst
+                ],
             }
-            # cusum's two one-sided sums are both >= 0 — rank by the
-            # larger side; every other mode ranks by |score|
-            rank_expr = (
-                F.greatest("cusum_pos", "cusum_neg")
-                if rank_col is None
-                else F.abs(F.col(rank_col))
-            )
-            worst = (
-                scored.filter(F.col("verdict") == ANOMALY)
-                .orderBy(F.desc_nulls_first(rank_expr), "part", "metric")
-                .limit(20)
-                .collect()
-            )
-            scored.unpersist()
-        except ValueError as e:
-            print(f"trend: {e}", file=sys.stderr)
-            return 2
-        print(
-            json.dumps(
-                {
-                    "cmd": "trend",
-                    "mode": (
-                        "zscore"
-                        if zmode
-                        else "ewma"
-                        if emode
-                        else "holt_winters"
-                        if hmode
-                        else "cusum"
-                        if cmode
-                        else "rel_change"
-                    ),
-                    "verdicts": dict(sorted(counts.items())),
-                    "worst": [
-                        {
-                            "part": r["part"],
-                            "metric": r["metric"],
-                            "run_id": r["run_id"],
-                            "value": r["value"],
-                            **(
-                                {
-                                    "med": r["med"],
-                                    "mad": r["mad"],
-                                    "robust_z": r["robust_z"],
-                                }
-                                if zmode
-                                else {
-                                    "ewma": r["ewma"],
-                                    "ewmstd": r["ewmstd"],
-                                    "z": r["z"],
-                                }
-                                if emode
-                                else {
-                                    "forecast": r["forecast"],
-                                    "sigma": r["sigma"],
-                                    "z": r["z"],
-                                }
-                                if hmode
-                                else {
-                                    "mu": r["mu"],
-                                    "sigma": r["sigma"],
-                                    "cusum_pos": r["cusum_pos"],
-                                    "cusum_neg": r["cusum_neg"],
-                                }
-                                if cmode
-                                else {
-                                    "prev_value": r["prev_value"],
-                                    "rel_change": r["rel_change"],
-                                }
-                            ),
-                        }
-                        for r in worst
-                    ],
-                }
-            )
         )
-        return 1 if counts.get(ANOMALY, 0) > 0 else 0
+    )
+    return 1 if counts.get("flaky", 0) + counts.get("regressed", 0) > 0 else 0
 
-    if args.cmd == "curate":
-        from bigdime_spark.plans.curate import CurateConfig, curate
 
-        mix = None
-        if args.mix is not None:
-            try:
-                mix = {
-                    k.strip(): float(v)
-                    for k, v in (pair.split("=", 1) for pair in args.mix.split(","))
-                }
-            except ValueError:
-                print(f"curate: bad --mix spec {args.mix!r}", file=sys.stderr)
-                return 2
-        try:
-            cfg = CurateConfig(
-                id_col=args.id_col,
-                text_col=args.text_col,
-                domain_col=args.domain_col,
-                min_tokens=args.min_tokens,
-                max_dup_line_frac=args.max_dup_line_frac,
-                langs=tuple(args.langs.split(",")) if args.langs else None,
-                drop_pii=args.drop_pii,
-                exact_dedup=args.exact_dedup,
-                minhash_dedup=args.minhash_dedup,
-                minhash_threshold=args.minhash_threshold,
-                containment_dedup=args.containment_dedup,
-                containment_threshold=args.containment_threshold,
-                max_hot_fraction=args.max_hot_fraction,
-                hot_gram_n=args.hot_gram_n,
-                hot_gram_min_docs=args.hot_gram_min_docs,
-                max_span_coverage=args.max_span_coverage,
-                span_n=args.span_n,
-                span_min_docs=args.span_min_docs,
-                mix_weights=mix,
-                target_rows=args.target_rows,
-                sample_rate=args.sample_rate,
-                quality_weighted_rate=args.quality_weighted_rate,
-                seed=args.seed,
-                shard_budget=args.shard_budget,
-            )
-        except ValueError as e:
-            print(f"curate: {e}", file=sys.stderr)
-            return 2
-        spark = get_spark("bigdime-curate", master=args.master)
-        try:
-            result = curate(read_table(spark, args.input), cfg)
-        except ValueError as e:
-            print(f"curate: {e}", file=sys.stderr)
-            return 2
-        try:
-            write_table(result.curated, f"{args.out}/curated", partition_by=None)
-        finally:
-            result.release()
-        print(json.dumps({"cmd": "curate", **result.counts}))
-        return 0
+#: `trend` baseline → the score columns its worst rows carry; the last
+#: one is the score they rank by (cusum: the larger of its two sums)
+_TREND_FIELDS = {
+    "zscore": ("med", "mad", "robust_z"),
+    "ewma": ("ewma", "ewmstd", "z"),
+    "holt_winters": ("forecast", "sigma", "z"),
+    "cusum": ("mu", "sigma", "cusum_pos", "cusum_neg"),
+    "rel_change": ("prev_value", "rel_change"),
+}
 
-    if args.cmd == "decontam":
-        from pyspark.sql import functions as F
 
-        from bigdime_spark.operators.decontam import (
-            contamination_scan,
-            drop_contaminated,
+def _cmd_trend(args) -> int:
+    from bigdime_spark.operators.outliers import (
+        ANOMALY,
+        metric_cusum,
+        metric_ewma,
+        metric_holt_winters,
+        metric_trend,
+        metric_zscore,
+        numeric_stat_metrics,
+    )
+
+    chosen = [
+        mode
+        for mode, value in (("zscore", args.zscore), ("ewma", args.ewma),
+                            ("holt_winters", args.hw), ("cusum", args.cusum))
+        if value is not None
+    ]
+    if len(chosen) > 1:
+        raise ValueError(
+            "--zscore, --ewma, --hw and --cusum are mutually exclusive "
+            "(one baseline per invocation)"
         )
-
-        spark = get_spark("bigdime-decontam", master=args.master)
-        corpus = read_table(spark, args.input)
-        bench = read_table(spark, args.bench)
-        try:
-            flagged = contamination_scan(
-                corpus,
-                bench,
-                id_col=args.id_col,
-                text_col=args.text_col,
-                bench_text_col=args.bench_text_col,
-                n=args.n,
-                min_hits=args.min_hits,
-            ).persist()  # report-sized; sink + summary (+drop) share it
-            write_table(flagged, f"{args.out}/flagged", partition_by=None)
-            summary = flagged.agg(
-                F.count(F.lit(1)).alias("n_flagged"),
-                F.coalesce(F.sum("n_hits"), F.lit(0)).alias("hits_total"),
-                F.coalesce(F.max("n_hits"), F.lit(0)).alias("max_hits"),
-            ).collect()[0]
-            result = {
-                "cmd": "decontam",
-                "flagged": int(summary["n_flagged"]),
-                "hits_total": int(summary["hits_total"]),
-                "max_hits": int(summary["max_hits"]),
+    mode = chosen[0] if chosen else "rel_change"
+    spark = get_spark(master=args.master)
+    hist = tables.read_table(spark, args.history)
+    metrics = _cols(args.metrics) if args.metrics else numeric_stat_metrics(hist)
+    if mode == "zscore":
+        scored = metric_zscore(
+            hist, metrics, threshold=args.zscore, min_history=args.min_history
+        )
+    elif mode == "ewma":
+        scored = metric_ewma(
+            hist,
+            metrics,
+            alpha=args.ewma,
+            threshold=args.ewma_threshold,
+            min_history=args.min_history,
+        )
+    elif mode == "holt_winters":
+        scored = metric_holt_winters(
+            hist, metrics, season=args.hw, threshold=args.hw_threshold
+        )
+    elif mode == "cusum":
+        scored = metric_cusum(
+            hist,
+            metrics,
+            k_sigma=args.cusum_k,
+            h_sigma=args.cusum,
+            baseline_n=args.cusum_baseline,
+        )
+    else:
+        scored = metric_trend(hist, metrics, max_rel_change=args.max_rel_change)
+    # cusum's two one-sided sums are both >= 0 — rank by the larger
+    # side; every other mode ranks by |score|
+    rank_expr = (
+        F.greatest("cusum_pos", "cusum_neg")
+        if mode == "cusum"
+        else F.abs(F.col(_TREND_FIELDS[mode][-1]))
+    )
+    with _cached(scored.persist()) as scored:
+        counts = _value_counts(scored, "verdict")
+        worst = (
+            scored.filter(F.col("verdict") == ANOMALY)
+            .orderBy(F.desc_nulls_first(rank_expr), "part", "metric")
+            .limit(20)
+            .collect()
+        )
+    print(
+        json.dumps(
+            {
+                "cmd": "trend",
+                "mode": mode,
+                "verdicts": dict(sorted(counts.items())),
+                "worst": [
+                    _pick(r, "part", "metric", "run_id", "value", *_TREND_FIELDS[mode])
+                    for r in worst
+                ],
             }
-            if args.drop:
-                clean = drop_contaminated(corpus, flagged, id_col=args.id_col)
-                write_table(clean, f"{args.out}/clean", partition_by=None)
-                result["clean_rows"] = clean.count()
-            flagged.unpersist()
-        except ValueError as e:
-            print(f"decontam: {e}", file=sys.stderr)
-            return 2
-        print(json.dumps(result))
-        return 0
-
-    if args.cmd == "dedup":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.operators.dedup import (
-            hamming_pairs_on_column,
-            near_dup_clusters,
         )
+    )
+    return 1 if counts.get(ANOMALY, 0) > 0 else 0
 
-        spark = get_spark("bigdime-dedup", master=args.master)
-        table = read_table(spark, args.input)
-        pairs = hamming_pairs_on_column(
-            table.select(args.id_col, args.phash_col),
-            args.id_col,
-            args.phash_col,
-            bits=args.bits,
-            k=args.k,
-            max_bucket=args.max_bucket,
-        ).persist()  # rare by construction; pairs sink + clustering share it
-        write_table(pairs, f"{args.out}/pairs", partition_by=None)
+
+def _cmd_curate(args) -> int:
+    from bigdime_spark.plans.curate import CurateConfig, curate
+
+    mix = None
+    if args.mix is not None:
         try:
-            clusters = near_dup_clusters(
-                pairs, max_iter=args.max_iter, algo=args.cc_algo
-            )
-        except ValueError as e:
-            # non-convergence — operator error, not a crash: same clean
-            # stderr + exit-2 contract as the drift subcommand
-            print(f"dedup: {e}", file=sys.stderr)
-            pairs.unpersist()
-            return 2
-        write_table(clusters, f"{args.out}/clusters", partition_by=None)
-        summary = clusters.agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.coalesce(F.sum("n_members"), F.lit(0)).alias("members_total"),
-            F.coalesce(F.max("n_members"), F.lit(0)).alias("largest"),
-        ).collect()[0]
-        n_pairs = pairs.count()
-        pairs.unpersist()
-        clusters.unpersist()
-        print(
-            json.dumps(
-                {
-                    "cmd": "dedup",
-                    "pairs": n_pairs,
-                    "clusters": int(summary["n_clusters"]),
-                    "members_total": int(summary["members_total"]),
-                    "largest_cluster": int(summary["largest"]),
-                }
-            )
-        )
-        return 0
-
-    if args.cmd == "ann":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.operators import similarity
-
-        spark = get_spark("bigdime-ann", master=args.master)
-        table = read_table(spark, args.input)
-        if args.integrity:
-            integ = similarity.embedding_integrity(
-                table, args.id_col, args.vec_col
-            ).collect()[0]
-            defects = {
-                k: integ[k]
-                for k in ("n_null_vec", "n_nonfinite", "n_zero")
-                if integ[k] > 0
+            mix = {
+                k.strip(): float(v)
+                for k, v in (pair.split("=", 1) for pair in args.mix.split(","))
             }
-            if integ["n_dims"] > 1:
-                defects["n_dims"] = integ["n_dims"]
-            if defects:
-                print(
-                    "ann: embedding integrity pre-flight failed: "
-                    + ", ".join(f"{k}={v}" for k, v in sorted(defects.items()))
-                    + f" over {integ['n_rows']} rows — clean the table "
-                    "before searching it",
-                    file=sys.stderr,
-                )
-                return 2
-        qids = [q.strip() for q in args.queries.split(",") if q.strip()]
-        queries = table.filter(F.col(args.id_col).cast("string").isin(qids))
-        n_queries = queries.count()
-        if n_queries == 0:
-            print(f"ann: no rows match --queries {args.queries}", file=sys.stderr)
-            return 2
-        try:
-            if args.mode == "ivf":
-                centroids = similarity.ivf_train_centroids(
-                    table, k=args.train_k, iters=args.train_iters,
-                    id_col=args.id_col, vec_col=args.vec_col, seed=args.seed,
-                )
-                topk = similarity.ivf_topk(
-                    table, queries, centroids, args.id_col, args.vec_col,
-                    k=args.k, nprobe=args.nprobe,
-                )
-            elif args.mode == "hyperplane":
-                dim_row = (
-                    table.where(F.col(args.vec_col).isNotNull())
-                    .select(F.size(F.col(args.vec_col)).alias("d"))
-                    .first()
-                )
-                if dim_row is None:
-                    print(
-                        f"ann: no non-null {args.vec_col} values in "
-                        f"{args.input}", file=sys.stderr,
-                    )
-                    return 2
-                dim = dim_row["d"]
-                topk = similarity.hyperplane_topk(
-                    table, queries, args.id_col, args.vec_col,
-                    nbits=args.nbits, bands=args.bands, k=args.k,
-                    seed=args.seed, multiprobe=args.multiprobe, dim=dim,
-                )
-            elif args.mode == "sq":
-                bounds = similarity.sq_bounds(table, args.vec_col)
-                topk = similarity.sq_topk(
-                    table, queries, bounds, args.id_col, args.vec_col,
-                    k=args.k, refine=args.refine,
-                )
-            elif args.mode in ("pq", "ivfpq"):
-                cb = similarity.pq_codebooks(
-                    table, m=args.pq_m, ncodes=args.pq_codes,
-                    id_col=args.id_col, vec_col=args.vec_col,
-                )
-                if args.pq_iters:
-                    cb = similarity.pq_refine(
-                        table, cb, iters=args.pq_iters,
-                        id_col=args.id_col, vec_col=args.vec_col,
-                    )
-                if args.mode == "pq":
-                    topk = similarity.pq_topk(
-                        table, queries, cb, args.id_col, args.vec_col,
-                        k=args.k, refine=args.refine,
-                    )
-                else:
-                    centroids = similarity.ivf_train_centroids(
-                        table, k=args.train_k, iters=args.train_iters,
-                        id_col=args.id_col, vec_col=args.vec_col,
-                        seed=args.seed,
-                    )
-                    topk = similarity.ivfpq_topk(
-                        table, queries, centroids, cb,
-                        args.id_col, args.vec_col,
-                        k=args.k, nprobe=args.nprobe, refine=args.refine,
-                    )
-            else:
-                topk = similarity.brute_force_topk(
-                    table, queries, args.id_col, args.vec_col, k=args.k
-                )
-        except ValueError as e:
-            print(f"ann: {e}", file=sys.stderr)
-            return 2
-        write_table(topk, f"{args.out}/topk", partition_by=None)
-        written = spark.read.parquet(f"{args.out}/topk")
-        n_rows = written.count()
-        summary = {
-            "cmd": "ann",
-            "mode": args.mode,
-            "queries": n_queries,
-            "k": args.k,
-            "rows": n_rows,
-        }
-        if args.recall and args.mode == "brute":
-            # brute IS the ground truth — recall is 1.0 by definition;
-            # re-running the full-corpus scan to prove it would double
-            # the command's most expensive stage
-            summary["recall_at_k"] = 1.0
-        elif args.recall:
-            # ground truth from one brute pass over the SAME queries;
-            # ANN results read back from the written sink (no ANN
-            # recompute). recall@k = |ANN ∩ brute| / |brute| per
-            # query, macro-averaged.
-            brute = similarity.brute_force_topk(
-                table, queries, args.id_col, args.vec_col, k=args.k
-            )
-            hits = brute.join(
-                written.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
-                "left_semi",
-            )
-            per_q = (
-                brute.groupBy("query_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .join(
-                    hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("h")),
-                    "query_id",
-                    "left",
-                )
-                .agg(
-                    F.avg(
-                        F.coalesce(F.col("h"), F.lit(0)) / F.col("n")
-                    ).alias("r")
-                )
-                .collect()[0]
-            )
-            summary["recall_at_k"] = (
-                round(per_q["r"], 4) if per_q["r"] is not None else None
-            )
-        print(json.dumps(summary))
-        return 0
-
-    if args.cmd == "stream":
-        from pyspark.sql import functions as F
-
-        from bigdime_spark.schema import IMAGE_SCHEMA_PARTITIONED
-        from bigdime_spark.streaming.incremental import StreamingValidator
-        from bigdime_spark.streaming.stateful import run_uniqueness_to_completion
-
-        gb = None
-        if args.grouped_bound:
-            try:
-                gb = _parse_grouped_bound(args.grouped_bound)
-                if gb.metric == "n_distinct":
-                    raise ValueError(
-                        "--grouped-bound: metric n_distinct needs "
-                        "unbounded per-group state — run it in batch "
-                        "(`run --grouped-bound`)"
-                    )
-                stream_cols = [f.name for f in IMAGE_SCHEMA_PARTITIONED.fields]
-                missing = [
-                    c for c in (gb.target, gb.group_by) if c not in stream_cols
-                ]
-                if missing:
-                    raise ValueError(
-                        "--grouped-bound: not in the stream schema: "
-                        + ", ".join(missing)
-                    )
-            except ValueError as e:
-                print(f"stream: {e}", file=sys.stderr)
-                return 2
-        spark = get_spark("bigdime-stream", master=args.master)
-        manifest = read_table(spark, args.manifest) if args.manifest else None
-        validator = StreamingValidator(manifest=manifest)
-        validator.suite.check_decode = args.decode
-        q = validator.start(
-            spark,
-            args.source,
-            args.out,
-            f"{args.checkpoint}/validate",
-            available_now=True,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-        q.awaitTermination()
-        dup_keys = None
-        if args.key_uniqueness:
-            run_uniqueness_to_completion(
-                spark,
-                args.source,
-                IMAGE_SCHEMA_PARTITIONED,
-                f"{args.checkpoint}/uniqueness",
-                f"{args.out}/dup_keys",
-                ttl_ms=(
-                    int(args.uniqueness_ttl_sec * 1000)
-                    if args.uniqueness_ttl_sec is not None
-                    else None
-                ),
-            )
-            try:
-                dup_keys = (
-                    spark.read.parquet(f"{args.out}/dup_keys")
-                    .select("image_id").distinct().count()
-                )
-            except Exception:
-                dup_keys = 0  # no duplicates ever emitted → no sink files
-        hist_parts = None
-        if args.histograms:
-            from bigdime_spark.streaming.stateful import (
-                latest_histograms,
-                run_histograms_to_completion,
-            )
-
-            run_histograms_to_completion(
-                spark,
-                args.source,
-                IMAGE_SCHEMA_PARTITIONED,
-                f"{args.checkpoint}/histograms",
-                f"{args.out}/hist_sink",
-            )
-            # collapse the append sink to one CURRENT row per part —
-            # the exact persisted-stats shape the drift subcommand
-            # (drift_from_stats) consumes
-            try:
-                cur = latest_histograms(
-                    spark.read.parquet(f"{args.out}/hist_sink")
-                )
-                cur.write.mode("overwrite").parquet(f"{args.out}/stats")
-                hist_parts = spark.read.parquet(f"{args.out}/stats").count()
-            except Exception:
-                hist_parts = 0  # rowless source → sink has no data files
-        grouped_fails = None
-        if gb is not None:
-            from bigdime_spark.streaming.stateful import (
-                latest_grouped,
-                run_grouped_to_completion,
-            )
-
-            run_grouped_to_completion(
-                spark,
-                args.source,
-                IMAGE_SCHEMA_PARTITIONED,
-                f"{args.checkpoint}/grouped",
-                f"{args.out}/grouped_sink",
-                gb.target,
-                gb.group_by,
-            )
-            grouped_fails = 0
-            try:
-                prof = latest_grouped(
-                    spark.read.parquet(f"{args.out}/grouped_sink")
-                )
-            except Exception:
-                prof = None  # rowless source → sink has no data files
-            if prof is not None:
-                import uuid as _uuid
-
-                from bigdime_spark.operators.grouped import (
-                    composed_grouped_frame,
-                )
-
-                run_id = args.run_id or f"stream-{_uuid.uuid4().hex[:12]}"
-                found, _ = gb.verdicts_from_profile(prof)
-                found.withColumn("run_id", F.lit(run_id)).write.mode(
-                    "overwrite"
-                ).parquet(f"{args.out}/grouped_verdicts")
-                grouped_fails = (
-                    spark.read.parquet(f"{args.out}/grouped_verdicts")
-                    .filter(F.col("verdict") == "FAIL")
-                    .count()
-                )
-                # C73 trend-ready composed shape, same projection as
-                # `run` (shared helper) incl. the run_id stamp `trend`
-                # hard-requires
-                composed_grouped_frame(
-                    prof, gb.target, gb.group_by
-                ).withColumn("run_id", F.lit(run_id)).write.mode(
-                    "overwrite"
-                ).parquet(f"{args.out}/grouped")
-        try:
-            verdict_counts = {
-                r["verdict"]: r["n"]
-                for r in spark.read.parquet(f"{args.out}/verdicts")
-                .groupBy("verdict").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-        except Exception:
-            verdict_counts = {}  # stream drained zero batches
-        print(
-            json.dumps(
-                {
-                    "cmd": "stream",
-                    "batches": len(validator.results),
-                    "verdict_counts": verdict_counts,
-                    "dup_keys": dup_keys,
-                    "hist_parts": hist_parts,
-                    **(
-                        {"grouped_fails": grouped_fails}
-                        if gb is not None
-                        else {}
-                    ),
-                }
-            )
-        )
-        return (
-            1
-            if verdict_counts.get("FAIL") or dup_keys or grouped_fails
-            else 0
-        )
-
-    if args.cmd == "synth":
-        from bigdime_spark.sources.synth import build_fixture
-
-        from bigdime_spark.sources.synth import InjectionSpec, near_pair_ids
-
-        spark = get_spark("bigdime-synth")
-        drift = tuple(int(x) for x in args.drift_parts.split(",") if x != "")
-        spec = InjectionSpec(phash_near_pair=near_pair_ids(args.phash_near_pairs))
-        fx = build_fixture(
-            spark, n_rows=args.rows, n_parts=args.parts, seed=args.seed,
-            drift_parts=drift, spec=spec,
-        )
-        write_table(fx.raw, f"{args.out}/raw")
-        write_table(fx.curated, f"{args.out}/curated")
-        write_table(fx.manifest, f"{args.out}/manifest", partition_by=None)
-        print(json.dumps({"cmd": "synth", "rows": args.rows, "parts": args.parts, "out": args.out}))
-        return 0
-
-    from pyspark.sql import functions as F
-
-    from bigdime_spark.plans.config import load_suite_config, suite_from_config
-
+        except ValueError:
+            raise ValueError(f"bad --mix spec {args.mix!r}") from None
+    cfg = CurateConfig(
+        id_col=args.id_col,
+        text_col=args.text_col,
+        domain_col=args.domain_col,
+        min_tokens=args.min_tokens,
+        max_dup_line_frac=args.max_dup_line_frac,
+        langs=tuple(args.langs.split(",")) if args.langs else None,
+        drop_pii=args.drop_pii,
+        exact_dedup=args.exact_dedup,
+        minhash_dedup=args.minhash_dedup,
+        minhash_threshold=args.minhash_threshold,
+        containment_dedup=args.containment_dedup,
+        containment_threshold=args.containment_threshold,
+        max_hot_fraction=args.max_hot_fraction,
+        hot_gram_n=args.hot_gram_n,
+        hot_gram_min_docs=args.hot_gram_min_docs,
+        max_span_coverage=args.max_span_coverage,
+        span_n=args.span_n,
+        span_min_docs=args.span_min_docs,
+        mix_weights=mix,
+        target_rows=args.target_rows,
+        sample_rate=args.sample_rate,
+        quality_weighted_rate=args.quality_weighted_rate,
+        seed=args.seed,
+        shard_budget=args.shard_budget,
+    )
+    spark = get_spark(master=args.master)
+    result = curate(tables.read_table(spark, args.input), cfg)
     try:
-        if args.config is None:
-            cfg = _suite_config_from_flags(args)
-        elif moved := _moved_shape_flags(args):
-            # the config is the reviewed contract; a flag silently
-            # overriding it is exactly the drift checks-as-config
-            # exists to prevent
+        tables.write_table(result.curated, f"{args.out}/curated", partition_by=None)
+    finally:
+        result.release()
+    print(json.dumps({"cmd": "curate", **result.counts}))
+    return 0
+
+
+def _cmd_decontam(args) -> int:
+    from bigdime_spark.operators.decontam import (
+        contamination_scan,
+        drop_contaminated,
+    )
+
+    spark = get_spark(master=args.master)
+    corpus = tables.read_table(spark, args.input)
+    bench = tables.read_table(spark, args.bench)
+    flagged = contamination_scan(
+        corpus,
+        bench,
+        id_col=args.id_col,
+        text_col=args.text_col,
+        bench_text_col=args.bench_text_col,
+        n=args.n,
+        min_hits=args.min_hits,
+    )
+    # report-sized; sink + summary (+drop) share it
+    with _cached(flagged.persist()) as flagged:
+        tables.write_table(flagged, f"{args.out}/flagged", partition_by=None)
+        summary = flagged.agg(
+            F.count(F.lit(1)).alias("n_flagged"),
+            F.coalesce(F.sum("n_hits"), F.lit(0)).alias("hits_total"),
+            F.coalesce(F.max("n_hits"), F.lit(0)).alias("max_hits"),
+        ).collect()[0]
+        result = {
+            "cmd": "decontam",
+            "flagged": int(summary["n_flagged"]),
+            "hits_total": int(summary["hits_total"]),
+            "max_hits": int(summary["max_hits"]),
+        }
+        if args.drop:
+            clean = drop_contaminated(corpus, flagged, id_col=args.id_col)
+            tables.write_table(clean, f"{args.out}/clean", partition_by=None)
+            result["clean_rows"] = clean.count()
+    print(json.dumps(result))
+    return 0
+
+
+def _cmd_dedup(args) -> int:
+    from bigdime_spark.operators.dedup import (
+        hamming_pairs_on_column,
+        near_dup_clusters,
+    )
+
+    spark = get_spark(master=args.master)
+    table = tables.read_table(spark, args.input)
+    pairs = hamming_pairs_on_column(
+        table.select(args.id_col, args.phash_col),
+        args.id_col,
+        args.phash_col,
+        bits=args.bits,
+        k=args.k,
+        max_bucket=args.max_bucket,
+    )
+    # rare by construction; pairs sink + clustering share it
+    with _cached(pairs.persist()) as pairs:
+        tables.write_table(pairs, f"{args.out}/pairs", partition_by=None)
+        # raises ValueError on non-convergence: exit 2
+        clusters = near_dup_clusters(
+            pairs, max_iter=args.max_iter, algo=args.cc_algo
+        )
+        with _cached(clusters):
+            tables.write_table(clusters, f"{args.out}/clusters", partition_by=None)
+            summary = clusters.agg(
+                F.count(F.lit(1)).alias("n_clusters"),
+                F.coalesce(F.sum("n_members"), F.lit(0)).alias("members_total"),
+                F.coalesce(F.max("n_members"), F.lit(0)).alias("largest"),
+            ).collect()[0]
+            n_pairs = pairs.count()
+    print(
+        json.dumps(
+            {
+                "cmd": "dedup",
+                "pairs": n_pairs,
+                "clusters": int(summary["n_clusters"]),
+                "members_total": int(summary["members_total"]),
+                "largest_cluster": int(summary["largest"]),
+            }
+        )
+    )
+    return 0
+
+
+def _cmd_ann(args) -> int:
+    from bigdime_spark.operators import similarity
+
+    spark = get_spark(master=args.master)
+    table = tables.read_table(spark, args.input)
+    if args.integrity:
+        integ = similarity.embedding_integrity(
+            table, args.id_col, args.vec_col
+        ).collect()[0]
+        defects = {
+            k: integ[k]
+            for k in ("n_null_vec", "n_nonfinite", "n_zero")
+            if integ[k] > 0
+        }
+        if integ["n_dims"] > 1:
+            defects["n_dims"] = integ["n_dims"]
+        if defects:
             raise ValueError(
-                "--config is authoritative for suite shape; drop "
-                + ", ".join(moved) + " (edit the config instead)"
+                "embedding integrity pre-flight failed: "
+                + ", ".join(f"{k}={v}" for k, v in sorted(defects.items()))
+                + f" over {integ['n_rows']} rows — clean the table "
+                "before searching it"
+            )
+    queries = table.filter(F.col(args.id_col).cast("string").isin(_cols(args.queries)))
+    n_queries = queries.count()
+    if n_queries == 0:
+        raise ValueError(f"no rows match --queries {args.queries}")
+    if args.mode == "ivf":
+        centroids = similarity.ivf_train_centroids(
+            table, k=args.train_k, iters=args.train_iters,
+            id_col=args.id_col, vec_col=args.vec_col, seed=args.seed,
+        )
+        topk = similarity.ivf_topk(
+            table, queries, centroids, args.id_col, args.vec_col,
+            k=args.k, nprobe=args.nprobe,
+        )
+    elif args.mode == "hyperplane":
+        dim_row = (
+            table.where(F.col(args.vec_col).isNotNull())
+            .select(F.size(F.col(args.vec_col)).alias("d"))
+            .first()
+        )
+        if dim_row is None:
+            raise ValueError(
+                f"no non-null {args.vec_col} values in {args.input}"
+            )
+        topk = similarity.hyperplane_topk(
+            table, queries, args.id_col, args.vec_col,
+            nbits=args.nbits, bands=args.bands, k=args.k,
+            seed=args.seed, multiprobe=args.multiprobe, dim=dim_row["d"],
+        )
+    elif args.mode == "sq":
+        bounds = similarity.sq_bounds(table, args.vec_col)
+        topk = similarity.sq_topk(
+            table, queries, bounds, args.id_col, args.vec_col,
+            k=args.k, refine=args.refine,
+        )
+    elif args.mode in ("pq", "ivfpq"):
+        cb = similarity.pq_codebooks(
+            table, m=args.pq_m, ncodes=args.pq_codes,
+            id_col=args.id_col, vec_col=args.vec_col,
+        )
+        if args.pq_iters:
+            cb = similarity.pq_refine(
+                table, cb, iters=args.pq_iters,
+                id_col=args.id_col, vec_col=args.vec_col,
+            )
+        if args.mode == "pq":
+            topk = similarity.pq_topk(
+                table, queries, cb, args.id_col, args.vec_col,
+                k=args.k, refine=args.refine,
             )
         else:
-            cfg = load_suite_config(args.config)
-    except ValueError as exc:
-        print(f"run: {exc}", file=sys.stderr)
-        return 2
+            centroids = similarity.ivf_train_centroids(
+                table, k=args.train_k, iters=args.train_iters,
+                id_col=args.id_col, vec_col=args.vec_col,
+                seed=args.seed,
+            )
+            topk = similarity.ivfpq_topk(
+                table, queries, centroids, cb,
+                args.id_col, args.vec_col,
+                k=args.k, nprobe=args.nprobe, refine=args.refine,
+            )
+    else:
+        topk = similarity.brute_force_topk(
+            table, queries, args.id_col, args.vec_col, k=args.k
+        )
+    tables.write_table(topk, f"{args.out}/topk", partition_by=None)
+    written = spark.read.parquet(f"{args.out}/topk")
+    n_rows = written.count()
+    summary = {
+        "cmd": "ann",
+        "mode": args.mode,
+        "queries": n_queries,
+        "k": args.k,
+        "rows": n_rows,
+    }
+    if args.recall and args.mode == "brute":
+        # brute IS the ground truth — recall is 1.0 by definition;
+        # re-running the full-corpus scan to prove it would double
+        # the command's most expensive stage
+        summary["recall_at_k"] = 1.0
+    elif args.recall:
+        # ground truth from one brute pass over the SAME queries;
+        # ANN results read back from the written sink (no ANN
+        # recompute). recall@k = |ANN ∩ brute| / |brute| per
+        # query, macro-averaged.
+        brute = similarity.brute_force_topk(
+            table, queries, args.id_col, args.vec_col, k=args.k
+        )
+        hits = brute.join(
+            written.select("query_id", "neighbor_id"),
+            ["query_id", "neighbor_id"],
+            "left_semi",
+        )
+        per_q = (
+            brute.groupBy("query_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .join(
+                hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("h")),
+                "query_id",
+                "left",
+            )
+            .agg(
+                F.avg(
+                    F.coalesce(F.col("h"), F.lit(0)) / F.col("n")
+                ).alias("r")
+            )
+            .collect()[0]
+        )
+        summary["recall_at_k"] = (
+            round(per_q["r"], 4) if per_q["r"] is not None else None
+        )
+    print(json.dumps(summary))
+    return 0
 
-    spark = get_spark("bigdime-validate", master=args.master)
+
+def _cmd_stream(args) -> int:
+    from bigdime_spark.schema import IMAGE_SCHEMA_PARTITIONED
+    from bigdime_spark.streaming.incremental import StreamingValidator
+    from bigdime_spark.streaming.stateful import run_uniqueness_to_completion
+
+    gb = None
+    if args.grouped_bound:
+        gb = _parse_grouped_bound(args.grouped_bound)
+        if gb.metric == "n_distinct":
+            raise ValueError(
+                "--grouped-bound: metric n_distinct needs "
+                "unbounded per-group state — run it in batch "
+                "(`run --grouped-bound`)"
+            )
+        stream_cols = [f.name for f in IMAGE_SCHEMA_PARTITIONED.fields]
+        missing = [
+            c for c in (gb.target, gb.group_by) if c not in stream_cols
+        ]
+        if missing:
+            raise ValueError(
+                "--grouped-bound: not in the stream schema: "
+                + ", ".join(missing)
+            )
+    spark = get_spark(master=args.master)
+    manifest = tables.read_table(spark, args.manifest) if args.manifest else None
+    validator = StreamingValidator(manifest=manifest)
+    validator.suite.check_decode = args.decode
+    q = validator.start(
+        spark,
+        args.source,
+        args.out,
+        f"{args.checkpoint}/validate",
+        available_now=True,
+        max_files_per_trigger=args.max_files_per_trigger,
+    )
+    q.awaitTermination()
+    dup_keys = None
+    if args.key_uniqueness:
+        run_uniqueness_to_completion(
+            spark,
+            args.source,
+            IMAGE_SCHEMA_PARTITIONED,
+            f"{args.checkpoint}/uniqueness",
+            f"{args.out}/dup_keys",
+            ttl_ms=(
+                int(args.uniqueness_ttl_sec * 1000)
+                if args.uniqueness_ttl_sec is not None
+                else None
+            ),
+        )
+        try:
+            dup_keys = (
+                spark.read.parquet(f"{args.out}/dup_keys")
+                .select("image_id").distinct().count()
+            )
+        except Exception:
+            dup_keys = 0  # no duplicates ever emitted → no sink files
+    hist_parts = None
+    if args.histograms:
+        from bigdime_spark.streaming.stateful import (
+            latest_histograms,
+            run_histograms_to_completion,
+        )
+
+        run_histograms_to_completion(
+            spark,
+            args.source,
+            IMAGE_SCHEMA_PARTITIONED,
+            f"{args.checkpoint}/histograms",
+            f"{args.out}/hist_sink",
+        )
+        # collapse the append sink to one CURRENT row per part —
+        # the exact persisted-stats shape the drift subcommand
+        # (drift_from_stats) consumes
+        try:
+            cur = latest_histograms(
+                spark.read.parquet(f"{args.out}/hist_sink")
+            )
+            cur.write.mode("overwrite").parquet(f"{args.out}/stats")
+            hist_parts = spark.read.parquet(f"{args.out}/stats").count()
+        except Exception:
+            hist_parts = 0  # rowless source → sink has no data files
+    grouped_fails = None
+    if gb is not None:
+        from bigdime_spark.streaming.stateful import (
+            latest_grouped,
+            run_grouped_to_completion,
+        )
+
+        run_grouped_to_completion(
+            spark,
+            args.source,
+            IMAGE_SCHEMA_PARTITIONED,
+            f"{args.checkpoint}/grouped",
+            f"{args.out}/grouped_sink",
+            gb.target,
+            gb.group_by,
+        )
+        grouped_fails = 0
+        try:
+            prof = latest_grouped(
+                spark.read.parquet(f"{args.out}/grouped_sink")
+            )
+        except Exception:
+            prof = None  # rowless source → sink has no data files
+        if prof is not None:
+            import uuid as _uuid
+
+            from bigdime_spark.operators.grouped import (
+                composed_grouped_frame,
+            )
+
+            run_id = args.run_id or f"stream-{_uuid.uuid4().hex[:12]}"
+            found, _ = gb.verdicts_from_profile(prof)
+            found.withColumn("run_id", F.lit(run_id)).write.mode(
+                "overwrite"
+            ).parquet(f"{args.out}/grouped_verdicts")
+            grouped_fails = (
+                spark.read.parquet(f"{args.out}/grouped_verdicts")
+                .filter(F.col("verdict") == "FAIL")
+                .count()
+            )
+            # C73 trend-ready composed shape, same projection as
+            # `run` (shared helper) incl. the run_id stamp `trend`
+            # hard-requires
+            composed_grouped_frame(
+                prof, gb.target, gb.group_by
+            ).withColumn("run_id", F.lit(run_id)).write.mode(
+                "overwrite"
+            ).parquet(f"{args.out}/grouped")
     try:
-        # after get_spark: domain_checks predicates compile via F.expr,
-        # which needs the live session
-        suite = suite_from_config(cfg)
-    except ValueError as exc:
-        print(f"run: {exc}", file=sys.stderr)
-        return 2
+        verdict_counts = _value_counts(
+            spark.read.parquet(f"{args.out}/verdicts"), "verdict"
+        )
+    except Exception:
+        verdict_counts = {}  # stream drained zero batches
+    print(
+        json.dumps(
+            {
+                "cmd": "stream",
+                "batches": len(validator.results),
+                "verdict_counts": verdict_counts,
+                "dup_keys": dup_keys,
+                "hist_parts": hist_parts,
+                **(
+                    {"grouped_fails": grouped_fails}
+                    if gb is not None
+                    else {}
+                ),
+            }
+        )
+    )
+    return (
+        1
+        if verdict_counts.get("FAIL") or dup_keys or grouped_fails
+        else 0
+    )
+
+
+def _cmd_synth(args) -> int:
+    from bigdime_spark.sources.synth import (
+        InjectionSpec,
+        build_fixture,
+        near_pair_ids,
+    )
+
+    drift = tuple(int(x) for x in args.drift_parts.split(",") if x != "")
+    spec = InjectionSpec(phash_near_pair=near_pair_ids(args.phash_near_pairs))
+    spark = get_spark(master=args.master)
+    fx = build_fixture(
+        spark, n_rows=args.rows, n_parts=args.parts, seed=args.seed,
+        drift_parts=drift, spec=spec,
+    )
+    tables.write_table(fx.raw, f"{args.out}/raw")
+    tables.write_table(fx.curated, f"{args.out}/curated")
+    tables.write_table(fx.manifest, f"{args.out}/manifest", partition_by=None)
+    print(json.dumps({"cmd": "synth", "rows": args.rows, "parts": args.parts, "out": args.out}))
+    return 0
+
+
+def _cmd_run(args) -> int:
+    from bigdime_spark.plans.config import load_suite_config, suite_from_config
+    from bigdime_spark.schema import schema_fingerprint
+
+    if args.config is None:
+        cfg = _suite_config_from_flags(args)
+    elif moved := _moved_shape_flags(args):
+        # the config is the reviewed contract; a flag silently
+        # overriding it is exactly the drift checks-as-config
+        # exists to prevent
+        raise ValueError(
+            "--config is authoritative for suite shape; drop "
+            + ", ".join(moved) + " (edit the config instead)"
+        )
+    else:
+        cfg = load_suite_config(args.config)
+    slice_dims: list[str] = []
+    if args.slice_dims is not None:
+        slice_dims = _cols(args.slice_dims)
+        if not slice_dims:
+            raise ValueError("--slice-dims: no columns given")
+        if args.slice_min_support < 1:
+            raise ValueError(
+                f"--slice-min-support must be >= 1, got {args.slice_min_support}"
+            )
+
+    spark = get_spark(master=args.master)
+    # after get_spark: domain_checks predicates compile via F.expr,
+    # which needs the live session
+    suite = suite_from_config(cfg)
 
     t0 = time.monotonic()
-    raw = read_table(spark, args.raw)
-    curated = read_table(spark, args.curated) if args.curated else None
-    manifest = read_table(spark, args.manifest) if args.manifest else None
+    raw = tables.read_table(spark, args.raw)
+    curated = tables.read_table(spark, args.curated) if args.curated else None
+    manifest = tables.read_table(spark, args.manifest) if args.manifest else None
     if args.parts:
-        sel = [p.strip() for p in args.parts.split(",") if p.strip()]
+        sel = _cols(args.parts)
         raw = raw.filter(F.col("part").isin(sel))
         if curated is not None:
             curated = curated.filter(F.col("part").isin(sel))
         if manifest is not None:
             manifest = manifest.filter(F.col("part").isin(sel))
-    slice_dims: list[str] = []
-    try:
-        if args.slice_dims is not None:
-            slice_dims = [c.strip() for c in args.slice_dims.split(",") if c.strip()]
-            if not slice_dims:
-                raise ValueError("--slice-dims: no columns given")
-            missing = [d for d in slice_dims if d not in raw.columns]
-            if missing:
-                raise ValueError(
-                    f"--slice-dims: not in the raw schema: {', '.join(missing)}"
-                )
-            if args.slice_min_support < 1:
-                raise ValueError(
-                    f"--slice-min-support must be >= 1, got {args.slice_min_support}"
-                )
-    except ValueError as exc:
-        print(f"run: {exc}", file=sys.stderr)
-        return 2
+    missing = [d for d in slice_dims if d not in raw.columns]
+    if missing:
+        raise ValueError(f"--slice-dims: not in the raw schema: {', '.join(missing)}")
 
-    try:
-        res = suite.run(
-            spark,
-            raw,
-            curated,
-            manifest,
-            run_id=args.run_id,
-            lineage_path=args.lineage,
-            resume=not args.no_resume,
-        )
-    except ValueError as exc:
-        # declared-constraint misconfiguration surfacing at run time
-        # (e.g. sequence_continuity on a non-integral column from a
-        # config file) — the operator-error contract, not a traceback
-        print(f"run: {exc}", file=sys.stderr)
-        return 2
+    # a declared-constraint misconfiguration surfacing at run time
+    # (e.g. sequence_continuity on a non-integral column from a
+    # config file) raises ValueError: exit 2
+    res = suite.run(
+        spark,
+        raw,
+        curated,
+        manifest,
+        run_id=args.run_id,
+        lineage_path=args.lineage,
+        resume=not args.no_resume,
+    )
     # every read of the run's persisted frames happens inside the try;
     # an in-process caller must not keep them (SuiteResult.release)
     try:
         # run_id-stamped so many runs' verdicts union into the exact shape
         # `history` (plans/lineage.verdict_history) consumes
-        write_table(
+        tables.write_table(
             res.verdicts.withColumn("run_id", F.lit(res.run_id)),
             f"{args.out}/verdicts",
             partition_by=None,
         )
-        write_table(res.violations, f"{args.out}/violations", partition_by=None)
+        tables.write_table(res.violations, f"{args.out}/violations", partition_by=None)
         # the binary __hll sketch columns are persisted ON PURPOSE: they are
         # what makes `rollup` a metadata-sized aggregation instead of a
         # rescan (B6 mergeable-sketch requirement); run_id-stamped so many
         # runs' stats union into the `trend` (metric_trend) history shape
-        write_table(
+        tables.write_table(
             res.stats.withColumn("run_id", F.lit(res.run_id)),
             f"{args.out}/stats",
             partition_by=None,
         )
         # observed-schema fingerprint (C59): run_id-stamped so many runs'
         # frames union into the `history --schemas` evolution shape
-        from bigdime_spark.schema import schema_fingerprint
-
-        write_table(
+        tables.write_table(
             schema_fingerprint(raw).withColumn("run_id", F.lit(res.run_id)),
             f"{args.out}/schema",
             partition_by=None,
@@ -2761,7 +2514,7 @@ def main(argv: list[str] | None = None) -> int:
                     if stamped is None
                     else stamped.unionByName(frame, allowMissingColumns=True)
                 )
-            write_table(
+            tables.write_table(
                 stamped.withColumn("run_id", F.lit(res.run_id)),
                 f"{args.out}/grouped",
                 partition_by=None,
@@ -2772,14 +2525,10 @@ def main(argv: list[str] | None = None) -> int:
             # runs' frames union into the `history --kmv` churn shape
             from bigdime_spark.operators.kmv import kmv_stamp
 
-            try:
-                stamped = kmv_stamp(
-                    raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
-                )
-            except ValueError as exc:
-                print(f"run: {exc}", file=sys.stderr)
-                return 2
-            write_table(
+            stamped = kmv_stamp(
+                raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
+            )
+            tables.write_table(
                 stamped.withColumn("run_id", F.lit(res.run_id)),
                 f"{args.out}/kmv",
                 partition_by=None,
@@ -2820,28 +2569,23 @@ def main(argv: list[str] | None = None) -> int:
                 slice_dims,
                 min_support=args.slice_min_support,
                 include_pairs=args.slice_pairs,
-            ).persist()
-            write_table(
-                slices.withColumn("run_id", F.lit(res.run_id)),
-                f"{args.out}/slices",
-                partition_by=None,
             )
-            top = (
-                slices.filter(F.col("lift").isNotNull())
-                .orderBy(
-                    F.desc("lift"), F.desc("n_viol"), F.asc("dim"), F.asc("value")
+            with _cached(slices.persist()) as slices:
+                tables.write_table(
+                    slices.withColumn("run_id", F.lit(res.run_id)),
+                    f"{args.out}/slices",
+                    partition_by=None,
                 )
-                .limit(1)
-                .collect()
-            )
-            slices.unpersist()
+                top = (
+                    slices.filter(F.col("lift").isNotNull())
+                    .orderBy(
+                        F.desc("lift"), F.desc("n_viol"), F.asc("dim"), F.asc("value")
+                    )
+                    .limit(1)
+                    .collect()
+                )
             if top:
-                slice_top = {
-                    "dim": top[0]["dim"],
-                    "value": top[0]["value"],
-                    "lift": top[0]["lift"],
-                    "n_viol": top[0]["n_viol"],
-                }
+                slice_top = _pick(top[0], "dim", "value", "lift", "n_viol")
 
         # reference lifecycle parity: a FAILED validation quarantines the
         # offending input unit [PK, SURVEY A10/A14]. The engine's analogue
@@ -2857,7 +2601,7 @@ def main(argv: list[str] | None = None) -> int:
                 .agg(F.sort_array(F.collect_set("constraint")).alias("failed_constraints"))
                 .select(F.lit(res.run_id).alias("run_id"), "part", "failed_constraints")
             )
-            write_table(q, f"{args.out}/quarantine", partition_by=None)
+            tables.write_table(q, f"{args.out}/quarantine", partition_by=None)
             quarantined = n_failed
 
         wall = time.monotonic() - t0
@@ -2881,6 +2625,44 @@ def main(argv: list[str] | None = None) -> int:
         return 1 if (n_failed or res.schema_violations) else 0
     finally:
         res.release()
+
+
+#: subcommand → handler(args) → exit code. A handler checks its own
+#: arguments before it starts Spark (get_spark).
+_HANDLERS = {
+    "synth": _cmd_synth,
+    "run": _cmd_run,
+    "report": _cmd_report,
+    "rollup": _cmd_rollup,
+    "dedup": _cmd_dedup,
+    "ann": _cmd_ann,
+    "stream": _cmd_stream,
+    "drift": _cmd_drift,
+    "edrift": _cmd_edrift,
+    "outliers": _cmd_outliers,
+    "profile": _cmd_profile,
+    "suggest": _cmd_suggest,
+    "plan": _cmd_plan,
+    "history": _cmd_history,
+    "files": _cmd_files,
+    "trend": _cmd_trend,
+    "curate": _cmd_curate,
+    "decontam": _cmd_decontam,
+}
+
+
+def main(argv: list[str] | None = None) -> int:
+    """Run one subcommand; the exit code is 0 (clean), 1 (the command's
+    gate found something) or 2 (operator error). An operator error is a
+    ``ValueError`` or an ``AnalysisException`` (say, a missing column
+    or path), printed as ``<cmd>: <message>`` on stderr, never as a
+    traceback."""
+    args = _build_parser().parse_args(argv)
+    try:
+        return _HANDLERS[args.cmd](args)
+    except (ValueError, AnalysisException) as exc:
+        print(f"{args.cmd}: {exc}", file=sys.stderr)
+        return 2
 
 
 if __name__ == "__main__":

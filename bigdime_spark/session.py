@@ -91,16 +91,28 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
+    """The engine SparkSession: the running one as it is, else a new one.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
-    ``local[*]``. In a cluster deployment the caller passes no master
-    and ``spark-submit`` supplies it (BASELINE.json:14).
+    A running session belongs to its caller (a test fixture, perfbench,
+    a notebook), so none of the arguments below touch it.
+
+    A new session gets ``ENGINE_CONFS`` plus ``shuffle_partitions`` and
+    ``extra_confs``. Under ``spark-submit`` (which sets
+    ``PYSPARK_GATEWAY_PORT``) the launcher's ``--master`` and ``--name``
+    stand unless ``master`` is passed (BASELINE.json:14); plain
+    ``python`` gets ``app_name`` and ``master``, which defaults to
+    ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
     """
-    if master is None:
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    builder = SparkSession.builder
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = SparkSession.builder.appName(app_name).master(master)
+        master = master or (f"local[{cpus}]" if cpus else "local[*]")
+        builder = builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     confs = dict(ENGINE_CONFS)
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
