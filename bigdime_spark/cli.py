@@ -1155,7 +1155,9 @@ def _build_parser() -> argparse.ArgumentParser:
         help="also write the decontaminated corpus to <out>/clean",
     )
     for name, parser in sub.choices.items():
-        if name != "report":  # report reads its parquet with DuckDB
+        # report reads its parquet with DuckDB; synth's tiny fixture
+        # runs wherever the launcher (or the local default) puts it
+        if name not in ("report", "synth"):
             parser.add_argument(
                 "--master",
                 default=None,
@@ -2398,7 +2400,7 @@ def _cmd_synth(args) -> int:
 
     drift = tuple(int(x) for x in args.drift_parts.split(",") if x != "")
     spec = InjectionSpec(phash_near_pair=near_pair_ids(args.phash_near_pairs))
-    spark = get_spark(master=args.master)
+    spark = get_spark()
     fx = build_fixture(
         spark, n_rows=args.rows, n_parts=args.parts, seed=args.seed,
         drift_parts=drift, spec=spec,
@@ -2452,9 +2454,13 @@ def _cmd_run(args) -> int:
             curated = curated.filter(F.col("part").isin(sel))
         if manifest is not None:
             manifest = manifest.filter(F.col("part").isin(sel))
-    missing = [d for d in slice_dims if d not in raw.columns]
-    if missing:
-        raise ValueError(f"--slice-dims: not in the raw schema: {', '.join(missing)}")
+    # checked before suite.run appends lineage and writes outputs: a
+    # refusal after that would leave a run a rerun resume-skips
+    kmv_keys = tuple(args.kmv_keys.split(",")) if args.kmv_keys else ()
+    for flag, cols in (("--slice-dims", slice_dims), ("--kmv-keys", kmv_keys)):
+        missing = [c for c in cols if c not in raw.columns]
+        if missing:
+            raise ValueError(f"{flag}: not in the raw schema: {', '.join(missing)}")
 
     # a declared-constraint misconfiguration surfacing at run time
     # (e.g. sequence_continuity on a non-integral column from a
@@ -2520,14 +2526,12 @@ def _cmd_run(args) -> int:
                 partition_by=None,
             )
 
-        if args.kmv_keys:
+        if kmv_keys:
             # per-part bottom-k key sketches (C68): run_id-stamped so many
             # runs' frames union into the `history --kmv` churn shape
             from bigdime_spark.operators.kmv import kmv_stamp
 
-            stamped = kmv_stamp(
-                raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
-            )
+            stamped = kmv_stamp(raw, "part", kmv_keys, k=args.kmv_k)
             tables.write_table(
                 stamped.withColumn("run_id", F.lit(res.run_id)),
                 f"{args.out}/kmv",

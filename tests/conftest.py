@@ -2,32 +2,12 @@ from __future__ import annotations
 
 import pytest
 
-from bigdime_spark.session import ENGINE_CONFS, get_spark
-
-#: JVM settings for the one test-session JVM only; neither changes a
-#: result or a plan. The suite runs thousands of short, mostly distinct
-#: queries, so the C2 compiler never pays back: on a 4-core host it
-#: spent ~160 of the JVM's ~340 CPU s over test_metric_trend +
-#: test_cross_run_drift, and C1 alone (TieredStopAtLevel=1) cut that
-#: JVM's CPU by a third. Spark's codegen cache (default 100 entries)
-#: evicted classes that later tests compiled again; 10,000 entries cut
-#: the Janino compiles over those files from ~2,340 to ~840.
-TEST_SESSION_CONFS = {
-    "spark.driver.extraJavaOptions": (
-        ENGINE_CONFS["spark.driver.extraJavaOptions"] + " -XX:TieredStopAtLevel=1"
-    ),
-    "spark.sql.codegen.cache.maxEntries": "10000",
-}
+from bigdime_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(
-        app_name="bigdime-tests",
-        master="local[4]",
-        shuffle_partitions=4,
-        extra_confs=TEST_SESSION_CONFS,
-    )
+    spark = get_spark(app_name="bigdime-tests", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

@@ -10,7 +10,7 @@ import os
 import subprocess
 import sys
 
-import pyspark
+from pyspark.find_spark_home import _find_spark_home
 
 from bigdime_spark import cli
 
@@ -28,7 +28,7 @@ def test_every_subcommand_has_a_handler_and_spark_ones_take_master():
     assert set(cli._HANDLERS) == set(subs)
     for name, parser in subs.items():
         flags = {s for a in parser._actions for s in a.option_strings}
-        assert ("--master" in flags) == (name != "report"), name
+        assert ("--master" in flags) == (name not in ("report", "synth")), name
 
 
 def test_spark_submit_master_and_name_stand(tmp_path):
@@ -44,7 +44,7 @@ def test_spark_submit_master_and_name_stand(tmp_path):
         [ROOT] + [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
     env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
-    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
     proc = subprocess.run(
         [submit, "--master", "local[2]", "--name", "session-probe", str(script)],
         capture_output=True, text=True, env=env, timeout=600,
@@ -91,3 +91,19 @@ def test_missing_column_exits_2_not_a_traceback(spark, tmp_path, capsys):
     )
     assert rc == 2
     assert "\ndedup: [UNRESOLVED_COLUMN" in "\n" + capsys.readouterr().err
+
+
+def test_run_refuses_a_missing_kmv_key_before_writing(spark, tmp_path, capsys):
+    """A refusal after the run appended lineage would leave a run that a
+    rerun resume-skips, so a bad --kmv-keys entry is refused before any
+    output."""
+    fx = tmp_path / "fx"
+    assert cli.main(["synth", "--rows", "64", "--parts", "2", "--out", str(fx)]) == 0
+    out = tmp_path / "o"
+    rc = cli.main(
+        ["run", "--raw", str(fx / "raw"), "--out", str(out), "--lineage",
+         str(out / "lineage"), "--run-id", "r1", "--kmv-keys", "image_id,nope"]
+    )
+    assert rc == 2
+    assert "\nrun: --kmv-keys: not in the raw schema: nope\n" in "\n" + capsys.readouterr().err
+    assert not out.exists()
