@@ -19,10 +19,12 @@ from __future__ import annotations
 import argparse
 import contextlib
 import json
+import logging
 import sys
 import time
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import functions as F
 
 from bigdime_spark.session import get_spark
@@ -2655,6 +2657,9 @@ _HANDLERS = {
 }
 
 
+_QUERY_CONTEXT_LOGGERS = ("DataFrameQueryContextLogger", "SQLQueryContextLogger")
+
+
 def main(argv: list[str] | None = None) -> int:
     """Run one subcommand; the exit code is 0 (clean), 1 (the command's
     gate found something) or 2 (operator error). An operator error is a
@@ -2662,11 +2667,22 @@ def main(argv: list[str] | None = None) -> int:
     or path), printed as ``<cmd>: <message>`` on stderr, never as a
     traceback."""
     args = _build_parser().parse_args(argv)
+    # pyspark logs an AnalysisException with a query context as one JSON
+    # ERROR line, JVM stack included, when the exception is built; the
+    # message printed below is the whole report. PySparkLogger.getLogger,
+    # since pyspark passes it keywords a plain Logger refuses
+    quiet = [PySparkLogger.getLogger(n) for n in _QUERY_CONTEXT_LOGGERS]
+    levels = [lg.level for lg in quiet]
+    for lg in quiet:
+        lg.setLevel(logging.CRITICAL)
     try:
         return _HANDLERS[args.cmd](args)
     except (ValueError, AnalysisException) as exc:
         print(f"{args.cmd}: {exc}", file=sys.stderr)
         return 2
+    finally:
+        for lg, level in zip(quiet, levels):
+            lg.setLevel(level)
 
 
 if __name__ == "__main__":

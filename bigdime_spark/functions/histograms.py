@@ -1,4 +1,4 @@
-"""Fixed-bin histograms + ECDFs (SURVEY B9/B18 building blocks).
+"""Fixed-bin histograms (SURVEY B9/B18 building blocks).
 
 Bucketing uses explicit floor arithmetic rather than ``width_bucket``
 so the *identical* formula is expressible in the DuckDB oracle SQL:
@@ -12,7 +12,7 @@ so the *identical* formula is expressible in the DuckDB oracle SQL:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,13 +34,4 @@ def histogram(df: DataFrame, column: str, lo: float, hi: float, nbins: int) -> D
         .where(F.col("bucket").isNotNull())
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def ecdf_from_histogram(hist: DataFrame) -> DataFrame:
-    """→ (bucket, cnt, ecdf) via a running sum window (tiny: nbins rows)."""
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    total = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return hist.withColumn(
-        "ecdf", F.sum("cnt").over(w) / F.sum("cnt").over(total)
     )

@@ -168,13 +168,6 @@ def _check_row(
     )
 
 
-def decode_check(
-    df: DataFrame, seed: int | None = None, snapshot: str = "raw"
-) -> DataFrame:
-    """Single-snapshot decode → (snapshot, part, image_id, ok, psnr, reason)."""
-    return decode_check_multi({snapshot: df}, seed=seed)
-
-
 def decode_check_multi(
     frames: dict[str, DataFrame],
     seed: int | None = None,

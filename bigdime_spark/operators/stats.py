@@ -1179,7 +1179,7 @@ class DistinctnessBound(TableConstraint):
     ):
         if metric not in self._METRICS:
             raise ValueError(
-                f"metric={metric!r} unsupported: one of {self._METRICS}"
+                f"metric must be one of {self._METRICS}, got {metric!r}"
             )
         self.column = column
         self.lo, self.hi = float(lo), float(hi)

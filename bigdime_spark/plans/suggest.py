@@ -81,8 +81,6 @@ to additionally skip long-text columns where distinct-profiling a
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -564,7 +562,3 @@ def suggest_image_checks(df: DataFrame) -> dict:
     if all(dtypes.get(k) == t for k, t in need.items()):
         return {"check_payload_conformance": True}
     return {}
-
-
-def config_json(suggestions: list[dict]) -> str:
-    return json.dumps(to_config(suggestions), indent=2, sort_keys=True)

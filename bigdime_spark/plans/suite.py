@@ -131,7 +131,7 @@ class ValidationSuite:
     #: and curated beyond the caption (operators/keyed._content).
     #: Payload bytes deliberately excluded (checksum owns them).
     check_content: bool = False
-    content_cols: tuple = ("w", "h", "fmt", "phash")
+    content_cols: tuple[str, ...] = ("w", "h", "fmt", "phash")
     check_drift: bool = True
     check_domains: bool = True
     #: optional near-duplicate IMAGE detection: pigeonhole band join on
@@ -233,13 +233,13 @@ class ValidationSuite:
     #: (operators/drift.CategoricalDriftCheck, verdict family
     #: drift_cat.<col>) — empty by default; ("fmt",) is the natural
     #: image-table choice
-    categorical_drift_cols: tuple = ()
+    categorical_drift_cols: tuple[str, ...] = ()
     #: high-cardinality id/code columns to drift-test over format
     #: MASKS (operators/drift.mask_drift, verdict family
     #: drift_mask.<col>) — every value unique on both sides is
     #: invisible to drift_cat; a scheme switch moves the mask
     #: population massively
-    mask_drift_cols: tuple = ()
+    mask_drift_cols: tuple[str, ...] = ()
     stats: StatsProfile | None = None
     topk_violations: int | None = None
     extra_agg_constraints: list = field(default_factory=list)
@@ -288,6 +288,11 @@ class ValidationSuite:
                     f"{name} requires check_decode=True ({flag} requires "
                     "--decode): it rides the decode pass"
                 )
+        if self.check_decode:
+            # the operator states its own invariants (stratify needs a
+            # sample, min_n needs stratify, the rate-gate geometry, ...):
+            # building it over the declared snapshots meets them now
+            self._decode_integrity(self.decode_snapshots)
         if raw_columns is None:
             return
         from bigdime_spark.operators.grouped import GroupedBound
@@ -306,6 +311,29 @@ class ValidationSuite:
                 raise ValueError(
                     f"{name}: not in the raw schema: {', '.join(missing)}"
                 )
+
+    def _decode_integrity(
+        self, snapshots: tuple[str, ...], ride: Checksum | None = None
+    ) -> DecodeIntegrity:
+        """The suite's decode pass over ``snapshots``; ``ride`` is the
+        Checksum whose row hash rides its scan, over the SAME column
+        set that Checksum (and its manifest) uses."""
+        return DecodeIntegrity(
+            seed=self.decode_seed,
+            snapshots=snapshots,
+            carry_checksum=ride is not None,
+            checksum_columns=ride.columns if ride is not None else None,
+            sample_rate=self.decode_sample_rate,
+            pixel_drift=self.decode_pixel_drift,
+            pixel_bins=self.decode_pixel_bins,
+            quality_min_std=self.decode_quality_min_std,
+            quality_mean_lo=self.decode_quality_mean_lo,
+            quality_mean_hi=self.decode_quality_mean_hi,
+            quality_max_flagged=self.decode_quality_max_flagged,
+            rate_gate=self.decode_rate_gate,
+            sample_stratify=self.decode_sample_stratify,
+            sample_min_n=self.decode_sample_min_n,
+        )
 
     # ------------------------------------------------------------ wiring
 
@@ -506,23 +534,8 @@ class ValidationSuite:
         decode_found = None
         decode_viol = None
         if decode_snaps:
-            decode_tc = DecodeIntegrity(
-                seed=self.decode_seed,
-                snapshots=decode_snaps,
-                carry_checksum=ride,
-                # the riding hash must cover the SAME column set the
-                # Checksum constraint (and its manifest) uses
-                checksum_columns=heavy[0].columns if ride else None,
-                sample_rate=self.decode_sample_rate,
-                pixel_drift=self.decode_pixel_drift,
-                pixel_bins=self.decode_pixel_bins,
-                quality_min_std=self.decode_quality_min_std,
-                quality_mean_lo=self.decode_quality_mean_lo,
-                quality_mean_hi=self.decode_quality_mean_hi,
-                quality_max_flagged=self.decode_quality_max_flagged,
-                rate_gate=self.decode_rate_gate,
-                sample_stratify=self.decode_sample_stratify,
-                sample_min_n=self.decode_sample_min_n,
+            decode_tc = self._decode_integrity(
+                decode_snaps, heavy[0] if ride else None
             )
         if ride:
             decode_found, decode_viol = decode_tc.run(ctx)

@@ -98,22 +98,3 @@ class StreamingValidator:
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
-
-
-def windowed_arrival_stats(
-    stream: DataFrame, ts_col: str = "ts", watermark: str = "10 minutes", window: str = "5 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window arrival statistics — the
-    Structured-Streaming-native aggregation shape (late data dropped
-    past the watermark). Provided for event-shaped sources carrying an
-    event-time column; returns (window, n_rows, n_parts)."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.approx_count_distinct("part").alias("n_parts"),
-        )
-    )

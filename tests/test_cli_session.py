@@ -6,11 +6,13 @@ without leaving a cached frame behind."""
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import subprocess
 import sys
 
 from pyspark.find_spark_home import _find_spark_home
+from pyspark.logger import PySparkLogger
 
 from bigdime_spark import cli
 
@@ -91,6 +93,42 @@ def test_missing_column_exits_2_not_a_traceback(spark, tmp_path, capsys):
     )
     assert rc == 2
     assert "\ndedup: [UNRESOLVED_COLUMN" in "\n" + capsys.readouterr().err
+
+
+class _Records(logging.Handler):
+    def __init__(self):
+        super().__init__()
+        self.records = []
+
+    def emit(self, record):
+        self.records.append(record)
+
+
+def test_exit_2_logs_no_query_context(spark, tmp_path, capsys):
+    """pyspark logs an AnalysisException's query context, JVM stack
+    included, as a JSON ERROR line when it builds the exception; under
+    `main` the operator reads the `<cmd>: <message>` line alone, and
+    the loggers' levels are back as they were once `main` returns."""
+    src = str(tmp_path / "t")
+    spark.range(4).selectExpr("cast(id as string) as image_id", "id as phash").write.parquet(src)
+    loggers = [PySparkLogger.getLogger(n) for n in cli._QUERY_CONTEXT_LOGGERS]
+    levels = [lg.level for lg in loggers]
+    seen = _Records()
+    for lg in loggers:
+        lg.addHandler(seen)
+    try:
+        rc = cli.main(
+            ["dedup", "--input", src, "--out", str(tmp_path / "o"), "--id-col", "nope"]
+        )
+    finally:
+        for lg in loggers:
+            lg.removeHandler(seen)
+    err = capsys.readouterr().err
+    assert rc == 2
+    assert seen.records == []
+    assert err.startswith("dedup: [UNRESOLVED_COLUMN")
+    assert '"level": "ERROR"' not in err and "JVM" not in err
+    assert [lg.level for lg in loggers] == levels
 
 
 def test_run_refuses_a_missing_kmv_key_before_writing(spark, tmp_path, capsys):

@@ -4,7 +4,9 @@ and the CLI `run --config` path end-to-end."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import typing
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +16,12 @@ from bigdime_spark.operators.drift import DriftColumn
 from bigdime_spark.operators.freshness import Freshness
 from bigdime_spark.operators.row_checks import DomainCheck, TypeConformance
 from bigdime_spark.operators.stats import CorrelationBound
-from bigdime_spark.plans.config import load_suite_config, suite_from_config
+from bigdime_spark.plans.config import (
+    _PROGRAMMATIC_ONLY,
+    load_suite_config,
+    suite_from_config,
+)
+from bigdime_spark.plans.suite import ValidationSuite
 
 
 def test_scalar_and_list_fields_map(spark):
@@ -270,6 +277,65 @@ def test_completeness_sections_build_table_constraints(spark):
 def test_bad_configs_raise(cfg, frag):
     with pytest.raises(ValueError, match=frag):
         suite_from_config(cfg)
+
+
+#: a field's annotation (``| None`` dropped) -> JSON values of the wrong
+#: type for it; a field of a type missing here fails the test below
+_WRONG_VALUES = {
+    bool: [1, "true", None],
+    int: [True, 2.5, "2", None],
+    float: [True, "0.5", None],
+    str: [5, ["a"], None],
+    tuple[str, ...]: ["a", [1], None],
+    tuple[float, float]: [[0.1], [0.1, "z"], [0.1, True], 0.1, None],
+    tuple: [{"column": "w"}, None],  # drift_specs, an array section
+}
+
+
+@pytest.mark.parametrize(
+    "field", dataclasses.fields(ValidationSuite), ids=lambda f: f.name
+)
+def test_every_suite_field_is_config_vocabulary(field):
+    """Every ValidationSuite field is either set by the config key of
+    its own name, typed from its annotation, or refused by name as
+    programmatic-only."""
+    if field.name in _PROGRAMMATIC_ONLY:
+        with pytest.raises(ValueError, match="live Python objects"):
+            suite_from_config({field.name: {}})
+        return
+    hint = typing.get_type_hints(ValidationSuite)[field.name]
+    if type(None) in typing.get_args(hint):
+        (hint,) = (a for a in typing.get_args(hint) if a is not type(None))
+    for bad in _WRONG_VALUES[hint]:
+        with pytest.raises(ValueError, match=f"'{field.name}' must be"):
+            suite_from_config({field.name: bad})
+    if field.default is not None:  # the default, written as JSON, builds it
+        value = field.default
+        if field.name == "drift_specs":
+            value = [dataclasses.asdict(d) for d in value]
+        elif isinstance(value, tuple):
+            value = list(value)
+        assert getattr(suite_from_config({field.name: value}), field.name) == field.default
+
+
+@pytest.mark.parametrize(
+    "cfg,frag",
+    [
+        ({"decode_sample_stratify": "fmt"}, "requires sample_rate < 1"),
+        ({"decode_sample_rate": 0.5, "decode_sample_min_n": 5},
+         "requires sample_stratify"),
+        ({"decode_rate_gate": [1.5, 2.0]}, "max_rate must be in"),
+        ({"decode_rate_gate": [0.1, 2.0], "decode_snapshots": ["curated"]},
+         "certifies the raw snapshot"),
+        ({"decode_pixel_drift": True, "decode_snapshots": ["raw"]},
+         "must cover both snapshots"),
+    ],
+)
+def test_decode_invariants_refused_at_config_load(cfg, frag):
+    """DecodeIntegrity's own rules hold when the config loads, before
+    `run` reads a table."""
+    with pytest.raises(ValueError, match=frag):
+        suite_from_config({"check_decode": True, **cfg})
 
 
 def test_load_suite_config_errors(tmp_path):
