@@ -2540,17 +2540,13 @@ def _cmd_run(args) -> int:
                 partition_by=None,
             )
 
-        # one row per partition can be 10^6+ at scale — the four summary
-        # numbers are a single aggregate, never a full-frame collect
-        summary = res.lineage.agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.coalesce(F.sum("rows_scanned"), F.lit(0)).alias("rows_scanned"),
-            F.count_if(F.col("status") == "FAILED").alias("n_failed"),
-        ).collect()[0]
-        n_parts = summary["n_parts"]
-        rows_scanned = summary["rows_scanned"]
-        n_failed = summary["n_failed"]
-        n_violations = res.violations.count()
+        # the lineage is a LocalRelation built on the driver (one row
+        # per validated part): reading it back runs no Spark job
+        lineage = res.lineage.select("status", "rows_scanned").collect()
+        n_parts = len(lineage)
+        rows_scanned = sum(r["rows_scanned"] for r in lineage)
+        n_failed = sum(r["status"] == "FAILED" for r in lineage)
+        n_violations = res.n_violations
 
         # violation-slice triage (C69): WHICH value segments concentrate
         # the run's row violations. The violating-id set is bounded

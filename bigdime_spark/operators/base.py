@@ -184,6 +184,25 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
     return spark.createDataFrame(table, schema)
 
 
+def collect_local(df: DataFrame) -> DataFrame:
+    """Run a bounded ``df`` once and return its rows as a JVM
+    ``LocalRelation`` under the same schema.
+
+    For a small frame that several later plans read: the rows are
+    collected on the JVM (``collectAsList``, bounded by
+    ``spark.driver.maxResultSize``) and rebuilt there, so nothing is
+    pickled to Python, and each later plan starts from a
+    ``LocalTableScan`` instead of carrying ``df``'s whole plan (or a
+    cache of it). ``collect()`` on the result, and on a projection or
+    filter of it, runs no Spark job."""
+    spark = df.sparkSession
+    jdf = df._jdf  # noqa: SLF001
+    local = spark._jsparkSession.createDataFrame(  # noqa: SLF001
+        jdf.collectAsList(), jdf.schema()
+    )
+    return DataFrame(local, spark)
+
+
 def fill_pass_for_missing_parts(verdicts: DataFrame, parts: DataFrame, constraint: str) -> DataFrame:
     """Table constraints emit explicit rows only for failing parts; this
     left-joins against the full part list so every (part × constraint)

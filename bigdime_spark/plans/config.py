@@ -25,7 +25,8 @@ table ONCE):
                          predicate is a SQL BOOLEAN expression
                          (``F.expr``: stays JVM-side codegen inside
                          the fused stats pass; a config file is code
-                         and gets the same review). Predicates must
+                         and gets the same review), parsed by the
+                         live session at load. Predicates must
                          reference NON-BINARY columns only: the fused
                          stats pass never reads payload pages (SURVEY
                          B0b — payload integrity belongs to checksum
@@ -106,6 +107,8 @@ from __future__ import annotations
 import json
 import typing
 
+from pyspark.errors import ParseException
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from bigdime_spark.operators.caption import CaptionLangShareBound, CaptionQualityBound
@@ -248,7 +251,16 @@ def _value(section: str, key: str, kind: str, v):
     if kind in ("txt", "expr"):
         if not isinstance(v, str) or not v:
             raise _fail(section, f"{key} must be a non-empty string")
-        return F.expr(v) if kind == "expr" else v
+        if kind == "txt":
+            return v
+        # F.expr parses lazily: the live parser refuses a malformed
+        # predicate now, not when the run plans the fused aggregation
+        spark = SparkSession.getActiveSession()
+        try:
+            spark._jsparkSession.sessionState().sqlParser().parseExpression(v)  # noqa: SLF001
+        except ParseException as exc:
+            raise _fail(section, f"{key} is not a SQL expression: {exc}") from exc
+        return F.expr(v)
     if not _is_num(v) or (kind == "int" and type(v) is not int):
         raise _fail(section, f"{key} must be "
                              f"{'an integer' if kind == 'int' else 'a number'}")

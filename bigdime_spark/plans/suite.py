@@ -9,14 +9,26 @@ loop with a handful of declarative Spark plans:
           when checksum and decode both cover raw, the per-row xxhash64
           rides this scan so raw's payload pages are read ONCE per run
   pass 3  STATS+CONSTRAINTS             ONE groupBy(part).agg(<everything>)
-          (bytes-free projection → parquet never reads image pages)
+          (bytes-free projection → parquet never reads image pages),
+          collected once into a LocalRelation of one row per part; the
+          violation-rescan gate sums its counters on the driver
   pass 3b CHECKSUM (decode off)         groupBy(part).agg(xor/sum of xxhash64)
           shares the stats scan (the only full-content scan then)
   pass 4  cross-table constraints       uniqueness / referential / caption / drift
-  pass 6  verdicts + violations + lineage append
+  pass 5  verdict union collected once into a LocalRelation; violations
+          persisted, materialized and counted per part by one job
+  pass 6  lineage rows built on the driver, appended
 
 Verdict enum preserved from the reference's ValidationResult:
 PASS / FAIL / SKIPPED_CONFIG (≈ INCOMPLETE_SETUP) / NOT_READY.
+
+Scale posture: the fused per-part rows and the verdicts (parts ×
+constraints) are collected on the driver once per run, bounded by
+``spark.driver.maxResultSize``, and every later plan reads them as a
+``LocalTableScan``. Both collects run before the lineage append, so a
+run that aborts on them leaves no part VALIDATED. A backfill over more
+parts than the driver holds is split with ``run --parts``. Violations
+stay a persisted frame: only ``topk_violations`` bounds their size.
 """
 
 from __future__ import annotations
@@ -35,6 +47,7 @@ from bigdime_spark.operators.base import (
     AggConstraint,
     SuiteContext,
     TableConstraint,
+    collect_local,
     local_frame,
 )
 from bigdime_spark.operators.bitbalance import BitBalance
@@ -52,6 +65,7 @@ from bigdime_spark.plans import lineage as lin
 from bigdime_spark.schema import (
     FAIL,
     IMAGE_SCHEMA_PARTITIONED,
+    LINEAGE_SCHEMA,
     PASS,
     VIOLATION_SCHEMA,
     diff_schema,
@@ -85,10 +99,12 @@ class SuiteResult:
     lineage: DataFrame
     schema_violations: list
     wall_ms: int = 0
-    #: every frame the run persisted (fused agg, keyed rare rows,
-    #: decode failures, verdicts, violations) — release() drops them
-    #: so a subsequent run recomputes instead of silently reusing
-    #: plan-matched caches.
+    #: rows in ``violations`` (schema rows with part "*" included)
+    n_violations: int = 0
+    #: the fused per-part frame (a LocalRelation, nothing to free)
+    #: and every frame the run persisted (keyed rare rows, decode
+    #: failures, violations) — release() drops them so a subsequent
+    #: run recomputes instead of silently reusing plan-matched caches.
     persisted: list = field(default_factory=list)
     #: (target, group_by) → the per-(part, group) metric profile each
     #: GroupedBound computed (C72) — already persisted (released with
@@ -618,17 +634,16 @@ class ValidationSuite:
         elif any(c.needs_manifest() for c in agg_constraints):
             for col in ("expected_rows", "expected_xor", "expected_sum"):
                 fused = fused.withColumn(col, F.lit(None))
-        fused = fused.cache()  # tiny: one row per partition
+        # collect NOW, once (one row per part): a dozen verdict
+        # branches, the rescan gate, stats_out and the lineage read
+        # this frame, and each would otherwise plan the stats+checksum
+        # scans and aggregate again (or the cache holding them)
+        fused = collect_local(fused)
         persisted.append(fused)
-        # the cached per-part stats double as the ProfileOutliers input
-        # (and any extra table constraint that wants them) — zero rescan
+        # the per-part stats double as the ProfileOutliers input (and
+        # any extra table constraint that wants them) — zero rescan
         ctx.extras["fused_stats"] = fused
-        # materialize NOW: a dozen verdict branches reference this
-        # frame inside one union action, and branches hitting a
-        # not-yet-materialized cache each recompute its plan (the
-        # stats+checksum scans) — eager materialization runs it once.
-        fused.count()
-        mark("pass3 fused stats+constraints agg")
+        mark("pass3 fused stats+constraints agg collected")
 
         # long-format verdicts via inline(array(struct(...)))
         structs = [
@@ -670,7 +685,7 @@ class ValidationSuite:
         ]
         fusable = [(n, s, cc) for n, s, cc in specs if s is not None]
         if fusable:
-            # rescan gate: the fused agg (cached, one row per part)
+            # rescan gate: the fused agg (collected, one row per part)
             # already counts each fusable constraint's violating rows —
             # drop every spec whose counter totals ZERO before the
             # row-level rescan (a provably-clean constraint contributes
@@ -680,13 +695,12 @@ class ValidationSuite:
             # rescan itself is provably empty and skipped entirely; the
             # common clean run at 10^12 rows pays ONE scan, not two.
             if all(cc is not None for _, _, cc in fusable):
-                totals = fused.agg(
-                    *[F.sum(cc).alias(cc) for _, _, cc in fusable]
-                ).collect()[0]
+                # a LocalTableScan: summed on the driver, no job
+                counts = fused.select(*[cc for _, _, cc in fusable]).collect()
                 fusable = [
-                    (n, s, cc) for n, s, cc in fusable if (totals[cc] or 0) > 0
+                    (n, s, cc) for n, s, cc in fusable
+                    if sum(r[cc] or 0 for r in counts) > 0
                 ]
-            mark("pass3b violation-rescan gate")
         if fusable:
             structs = [
                 F.when(
@@ -793,6 +807,11 @@ class ValidationSuite:
         verdicts = verdict_frames[0]
         for fdf in verdict_frames[1:]:
             verdicts = verdicts.unionByName(fdf)
+        # the union runs ONCE here (parts × constraints rows): the
+        # partition-level violations, the lineage and the writes read
+        # its LocalTableScan
+        verdicts = collect_local(verdicts)
+        mark("pass5 verdicts collected (keyed+drift+decode+assembly)")
 
         # partition-level constraints (no single offending row) still owe
         # "one row per failed constraint with partition lineage"
@@ -823,19 +842,16 @@ class ValidationSuite:
                 .drop("_rn")
             )
 
-        # verdicts/violations feed multiple downstream actions (lineage,
-        # writes, counts) — persist so the whole constraint DAG runs ONCE.
-        # Verdicts are tiny (parts × constraints); violations are bounded
-        # by topk_violations at scale.
-        verdicts = verdicts.persist()
+        # violations feed the lineage counts and the writes — persist so
+        # their plan runs ONCE; only topk_violations bounds their size,
+        # so they stay distributed. ONE job materializes them and counts
+        # them per part.
         violations = violations.persist()
-        persisted += [verdicts, violations]
-        # ONE job materializes both persisted frames (separate counts
-        # would pay a second scheduling barrier)
-        verdicts.select(F.lit(1).alias("x")).unionByName(
-            violations.select(F.lit(1).alias("x"))
-        ).count()
-        mark("pass5 verdicts+violations materialized (drift+decode+assembly)")
+        persisted.append(violations)
+        viol_per_part = {
+            r["part"]: r["count"] for r in violations.groupBy("part").count().collect()
+        }
+        mark("pass5 violations materialized and counted")
 
         # pass 6 — stats projection + lineage
         stats_out = fused.select(
@@ -864,26 +880,34 @@ class ValidationSuite:
             # loudly — the C18 null-mix convention, never silent)
             stats_out = stats_out.join(pixel_frame, "part", "left")
 
-        part_status = (
-            verdicts.filter(F.col("part") != "*")
-            .groupBy("part")
-            .agg(
-                F.count_if(F.col("verdict") == FAIL).alias("_fails"),
-            )
-            .join(fused.select("part", F.col("stat__rows").alias("rows_scanned")), "part", "left")
-        )
-        viol_per_part = violations.groupBy("part").agg(F.count(F.lit(1)).alias("violations"))
+        # one lineage row per validated part, from the collected
+        # verdicts and fused rows (reading them back runs no job)
+        fails: dict = {}
+        for r in verdicts.filter(F.col("part") != "*").select("part", "verdict").collect():
+            fails[r["part"]] = fails.get(r["part"], 0) + (r["verdict"] == FAIL)
+        rows_scanned = {
+            r["part"]: r["stat__rows"]
+            for r in fused.select(F.col("part").cast("string").alias("part"), "stat__rows").collect()
+        }
         wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage = part_status.join(viol_per_part, "part", "left").select(
-            F.lit(run_id).alias("run_id"),
-            "part",
-            F.when(F.col("_fails") == 0, F.lit(lin.VALIDATED)).otherwise(F.lit(lin.FAILED)).alias("status"),
-            F.coalesce(F.col("rows_scanned"), F.lit(0)).cast("long").alias("rows_scanned"),
-            F.coalesce(F.col("violations"), F.lit(0)).cast("long").alias("violations"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
+        lineage = local_frame(
+            spark,
+            [
+                (
+                    run_id,
+                    part,
+                    lin.VALIDATED if n_fails == 0 else lin.FAILED,
+                    rows_scanned.get(part, 0),
+                    viol_per_part.get(part, 0),
+                    wall_ms,
+                )
+                for part, n_fails in fails.items()
+            ],
+            LINEAGE_SCHEMA,
         )
         if store is not None:
             store.append(lineage)
+            mark("pass6 lineage appended")
 
         return SuiteResult(
             run_id=run_id,
@@ -893,6 +917,7 @@ class ValidationSuite:
             lineage=lineage,
             schema_violations=schema_viol,
             wall_ms=int((time.monotonic() - t0) * 1000),
+            n_violations=sum(viol_per_part.values()),
             persisted=persisted,
             grouped_profiles=ctx.extras.get("grouped_bound_profiles", {}),
         )

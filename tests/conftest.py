@@ -11,3 +11,24 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def sql_executions(spark):
+    """``run(fn)`` → (``fn()``, the SQL executions it started), read
+    from the session's SQL status store once its listener bus has
+    drained; each carries its final ``physicalPlanDescription()``."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+
+    def executions():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def run(fn):
+        before = {e.executionId() for e in executions()}
+        out = fn()
+        return out, [e for e in executions() if e.executionId() not in before]
+
+    return run

@@ -616,7 +616,9 @@ def test_run_zone_clustering_cli(spark, tmp_path_factory, capsys):
     """run --zone-clustering: the synth fixture's w is random per part
     (every range overlaps every other), so the layout gate FAILs all
     parts and the run exits 1; at --zone-max-overlap 1.0 nothing can
-    exceed the bound and the same fixture passes."""
+    exceed the bound and the same fixture passes. The first run's raw
+    carries an extra column, so its violations also hold schema rows
+    (part "*"), and the summary counts every violation row."""
     fx = str(tmp_path_factory.mktemp("zc"))
     out1 = str(tmp_path_factory.mktemp("zc_out1"))
     out2 = str(tmp_path_factory.mktemp("zc_out2"))
@@ -624,12 +626,20 @@ def test_run_zone_clustering_cli(spark, tmp_path_factory, capsys):
         capsys, ["synth", "--rows", "128", "--parts", "4", "--out", fx]
     )
     assert rc == 0
+    spark.read.parquet(f"{fx}/raw").withColumn("exif_json", F.lit("{}")).write.partitionBy(
+        "part"
+    ).parquet(f"{fx}/raw_extra")
 
     rc, summary, _ = _run_cli(
         capsys,
-        ["run", "--raw", f"{fx}/raw", "--out", out1, "--zone-clustering", "w"],
+        ["run", "--raw", f"{fx}/raw_extra", "--out", out1, "--zone-clustering", "w"],
     )
     assert rc == 1
+    assert summary["schema_mismatches"] >= 1
+    violations = spark.read.parquet(f"{out1}/violations")
+    assert violations.filter(F.col("part") == "*").count() >= 1
+    assert violations.filter(F.col("part") != "*").count() >= 1
+    assert summary["violations"] == violations.count()
     fails = {
         r["part"]
         for r in spark.read.parquet(f"{out1}/verdicts")

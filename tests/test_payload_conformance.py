@@ -25,10 +25,12 @@ from bigdime_spark.sources.synth import build_fixture, encode, make_pixels
 SCHEMA = "part string, image_id string, bytes binary, w int, h int, fmt string"
 
 
-def _explain(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+def _fused_plans(executions) -> list[str]:
+    """Physical plans of the executions that computed a suite's fused
+    ``groupBy(part)`` rows: the only ones that alias ``stat__rows``
+    (every later plan reads the collected rows)."""
+    plans = [e.physicalPlanDescription() for e in executions]
+    return [p for p in plans if " AS stat__rows#" in p]
 
 
 def _px(w: int = 4, h: int = 3) -> np.ndarray:
@@ -218,13 +220,17 @@ def test_suite_verdicts_and_violations(spark):
     res.release()
 
 
-def test_fuses_into_checksum_scan(spark):
+def test_fuses_into_checksum_scan(spark, sql_executions):
     """With a (non-riding) checksum present, conformance must ride the
     SAME full-payload aggregation — the stats plan gets no extra join
     for it. Without a checksum it joins its own payload agg instead."""
     fx = build_fixture(spark, n_rows=64, n_parts=2)
-    with_cs = _suite().run(spark, fx.raw, manifest=fx.manifest, run_id="pc-cs")
-    plan = _explain(with_cs.stats)
+    with_cs, ran = sql_executions(
+        lambda: _suite().run(spark, fx.raw, manifest=fx.manifest, run_id="pc-cs")
+    )
+    fused = _fused_plans(ran)
+    assert len(fused) == 1, [e.description() for e in ran]
+    plan = fused[0]
     # pc__bad computed in the same aggregate as the checksum fold: the
     # fused stats frame plans exactly zero joins beyond the broadcast
     # manifest join
@@ -236,8 +242,12 @@ def test_fuses_into_checksum_scan(spark):
     assert r["verdict"] == PASS
     with_cs.release()
 
-    no_cs = _suite(check_checksum=False).run(spark, fx.raw, run_id="pc-nocs")
-    plan2 = _explain(no_cs.stats)
+    no_cs, ran = sql_executions(
+        lambda: _suite(check_checksum=False).run(spark, fx.raw, run_id="pc-nocs")
+    )
+    fused = _fused_plans(ran)
+    assert len(fused) == 1, [e.description() for e in ran]
+    plan2 = fused[0]
     assert "pc__bad" in plan2
     no_cs.release()
 

@@ -31,20 +31,31 @@ def _explain(df) -> str:
     )
 
 
-def test_stats_scan_never_reads_bytes(spark, parquet_fixture):
+def _fused_plans(executions) -> list[str]:
+    """Physical plans of the executions that computed a suite's fused
+    ``groupBy(part)`` rows: the only ones that alias ``stat__rows``
+    (every later plan reads the collected rows)."""
+    plans = [e.physicalPlanDescription() for e in executions]
+    return [p for p in plans if " AS stat__rows#" in p]
+
+
+def test_stats_scan_never_reads_bytes(spark, parquet_fixture, sql_executions):
     """B0b: with checksum off, the fused stats pass must not project
     the binary column — parquet page reads for `bytes` are the
     dominant I/O and belong to checksum/decode only."""
     raw = spark.read.parquet(f"{parquet_fixture}/raw")
-    res = ValidationSuite(
+    res, ran = sql_executions(lambda: ValidationSuite(
         check_checksum=False,
         check_record_count=False,
         check_uniqueness=False,
         check_drift=False,
         check_caption=False,
         check_referential=False,
-    ).run(spark, raw, run_id="plan1")
-    plan = _explain(res.stats)
+    ).run(spark, raw, run_id="plan1"))
+    res.release()
+    fused = _fused_plans(ran)
+    assert len(fused) == 1, [e.description() for e in ran]
+    plan = fused[0]
     scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scans, plan
     for ln in scans:
@@ -63,28 +74,34 @@ def test_resume_filter_reaches_scan(spark, parquet_fixture):
     assert "p0000" in seg.split("PushedFilters")[0] or "part" in seg.split("PushedFilters")[0]
 
 
-def test_manifest_join_broadcasts(spark, parquet_fixture):
+def test_manifest_join_broadcasts(spark, parquet_fixture, sql_executions):
     raw = spark.read.parquet(f"{parquet_fixture}/raw")
     man = spark.read.parquet(f"{parquet_fixture}/manifest")
-    res = ValidationSuite(
+    res, ran = sql_executions(lambda: ValidationSuite(
         check_uniqueness=False, check_drift=False,
         check_caption=False, check_referential=False,
-    ).run(spark, raw, manifest=man, run_id="plan2")
-    plan = _explain(res.verdicts)
+    ).run(spark, raw, manifest=man, run_id="plan2"))
+    res.release()
+    fused = _fused_plans(ran)
+    assert len(fused) == 1, [e.description() for e in ran]
+    plan = fused[0]
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_fused_agg_has_partial_aggregation(spark, parquet_fixture):
+def test_fused_agg_has_partial_aggregation(spark, parquet_fixture, sql_executions):
     """The one groupBy(part) pass must do map-side partial aggregation
     (HashAggregate appears twice per agg: partial then final after the
     exchange) — at scale the shuffle carries one row per (task, part),
     not per input row."""
     raw = spark.read.parquet(f"{parquet_fixture}/raw")
-    res = ValidationSuite(
+    res, ran = sql_executions(lambda: ValidationSuite(
         check_uniqueness=False, check_drift=False,
         check_caption=False, check_referential=False,
-    ).run(spark, raw, run_id="plan3")
-    plan = _explain(res.stats)
+    ).run(spark, raw, run_id="plan3"))
+    res.release()
+    fused = _fused_plans(ran)
+    assert len(fused) == 1, [e.description() for e in ran]
+    plan = fused[0]
     assert plan.count("HashAggregate") >= 2
     assert "Exchange" in plan
 
@@ -267,7 +284,7 @@ def test_suggest_pass1_is_expand_free_two_level_agg(spark, parquet_fixture):
     assert n_exchanges == 2, plan
 
 
-def test_compliance_rides_fused_agg_single_exchange(spark, parquet_fixture):
+def test_compliance_rides_fused_agg_single_exchange(spark, parquet_fixture, sql_executions):
     """C55 fuses into the suite's stats pass: adding three Compliance
     constraints must not add a single exchange beyond the baseline
     suite plan."""
@@ -293,10 +310,11 @@ def test_compliance_rides_fused_agg_single_exchange(spark, parquet_fixture):
             ),
             extra_agg_constraints=extra,
         )
-        res = suite.run(spark, raw, run_id="plan-comp")
-        plan = _explain(res.verdicts)
+        res, ran = sql_executions(lambda: suite.run(spark, raw, run_id="plan-comp"))
         res.release()
-        return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
+        fused = _fused_plans(ran)
+        assert len(fused) == 1, [e.description() for e in ran]
+        return len(re.findall(r"^\(\d+\) Exchange", fused[0], re.M))
 
     base = n_exchanges([])
     cons = [
@@ -523,7 +541,7 @@ _PYTHON_NODES = (
 )
 
 
-def test_decode_off_run_plans_no_python_node(spark, tmp_path):
+def test_decode_off_run_plans_no_python_node(spark, tmp_path, sql_executions):
     """With decode off, nothing in a ``run`` needs Python on the
     executors: the driver-built constants (schema verdicts, the
     partial-verdict grid, the empty lineage, the schema fingerprint)
@@ -544,16 +562,7 @@ def test_decode_off_run_plans_no_python_node(spark, tmp_path):
         local_frame(spark, [("nightly-0", "p0000", VALIDATED, 100, 0, 0)], LINEAGE_SCHEMA)
     )
 
-    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
-    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
-
-    def executions():
-        bus.waitUntilEmpty()
-        seq = store.executionsList()
-        return [seq.apply(i) for i in range(seq.size())]
-
-    before = {e.executionId() for e in executions()}
-    rc = cli.main(
+    rc, ran = sql_executions(lambda: cli.main(
         [
             "run",
             "--raw", str(tmp_path / "raw"),
@@ -563,9 +572,8 @@ def test_decode_off_run_plans_no_python_node(spark, tmp_path):
             "--lineage", lineage,
             "--run-id", "nightly-1",
         ]
-    )
+    ))
     assert rc == 0
-    ran = [e for e in executions() if e.executionId() not in before]
     assert ran
     python_backed = [
         (e.description(), [n for n in _PYTHON_NODES if n in e.physicalPlanDescription()])
@@ -573,3 +581,58 @@ def test_decode_off_run_plans_no_python_node(spark, tmp_path):
         if any(n in e.physicalPlanDescription() for n in _PYTHON_NODES)
     ]
     assert python_backed == [], python_backed
+
+
+def test_resumed_run_tail_plans_over_local_relations(spark, tmp_path, sql_executions):
+    """The fused per-part rows and the verdict union are collected once,
+    so after a decode-off resumed run the verdicts and the lineage are
+    each one ``LocalRelation`` (every later plan starts from a
+    ``LocalTableScan``), the per-part frame in ``persisted`` is one too,
+    and the violation-rescan gate sums the collected counters on the
+    driver: no SQL execution of the run aggregates them."""
+    from bigdime_spark.operators.base import local_frame
+    from bigdime_spark.plans.lineage import VALIDATED, LineageStore
+    from bigdime_spark.schema import LINEAGE_SCHEMA
+    from bigdime_spark.sources.tables import read_table, write_table
+
+    fx = build_fixture(spark, n_rows=200, n_parts=2)
+    for name in ("raw", "curated"):
+        write_table(getattr(fx, name), str(tmp_path / name))
+    write_table(fx.manifest, str(tmp_path / "manifest"), partition_by=None)
+    lineage = str(tmp_path / "lineage")
+    LineageStore(lineage).append(
+        local_frame(spark, [("nightly-0", "p0000", VALIDATED, 100, 0, 0)], LINEAGE_SCHEMA)
+    )
+    suite = ValidationSuite()
+    res, ran = sql_executions(lambda: suite.run(
+        spark,
+        *(read_table(spark, str(tmp_path / n)) for n in ("raw", "curated", "manifest")),
+        run_id="nightly-1",
+        lineage_path=lineage,
+    ))
+    try:
+        fused = [
+            df for df in res.persisted
+            if any(c.startswith("stat__") for c in df.columns)
+        ]
+        assert len(fused) == 1
+        for df in (res.verdicts, res.lineage, fused[0]):
+            plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+            assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+            assert plan.children().isEmpty()
+        assert [(r["part"], r["status"]) for r in res.lineage.collect()] == [
+            ("p0001", VALIDATED)
+        ]
+        counters = [
+            c.violation_count_col()
+            for c in suite._agg_constraints()  # noqa: SLF001
+            if c.violation_count_col() is not None
+        ]
+        assert counters
+        gate = [
+            e.description() for e in ran
+            if any(f"sum({cc}#" in e.physicalPlanDescription() for cc in counters)
+        ]
+        assert gate == []
+    finally:
+        res.release()

@@ -272,9 +272,15 @@ def test_completeness_sections_build_table_constraints(spark):
         ({"decode_sample_rate": 0.5}, "requires check_decode"),
         ({"decode_sample_stratify": "fmt"}, "requires check_decode"),
         ({"decode_sample_min_n": 5}, "requires check_decode"),
+        # a malformed SQL predicate is refused by the live parser at load
+        ({"domain_checks": [{"name": "x", "column": "v", "predicate": "v >"}]},
+         "'domain_checks' predicate is not a SQL expression"),
+        ({"compliance": [{"name": "x", "column": "v", "predicate": "v >",
+                          "min_fraction": 0.5}]},
+         "'compliance' predicate is not a SQL expression"),
     ],
 )
-def test_bad_configs_raise(cfg, frag):
+def test_bad_configs_raise(spark, cfg, frag):
     with pytest.raises(ValueError, match=frag):
         suite_from_config(cfg)
 
