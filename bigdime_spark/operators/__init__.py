@@ -2,8 +2,5 @@ from bigdime_spark.operators.base import AggConstraint, TableConstraint, SuiteCo
 from bigdime_spark.operators.row_checks import NotNull, DomainCheck  # noqa: F401
 from bigdime_spark.operators.record_count import RecordCount  # noqa: F401
 from bigdime_spark.operators.checksum import Checksum  # noqa: F401
-from bigdime_spark.operators.uniqueness import Uniqueness  # noqa: F401
-from bigdime_spark.operators.referential import Referential  # noqa: F401
-from bigdime_spark.operators.caption import CaptionEquality  # noqa: F401
 from bigdime_spark.operators.drift import DriftCheck  # noqa: F401
 from bigdime_spark.operators.decode import DecodeIntegrity  # noqa: F401

@@ -12,9 +12,10 @@ SURVEY §0]. Here a constraint is *declarative*: it contributes
   over the fused-agg row (after the broadcast manifest join), plus
 - ``violations(df)`` — the row-level violation DataFrame.
 
-Constraints that inherently need their own shuffle (uniqueness,
-referential, caption equality, drift, decode) implement
-``TableConstraint.run`` instead and return (verdicts, violations).
+Constraints that inherently need their own shuffle (drift, decode,
+near-dup, ...) implement ``TableConstraint.run`` instead and return
+(found verdicts, violations). The keyed uniqueness / referential /
+caption checks run in ``operators/keyed.KeyedSnapshotPass``.
 """
 
 from __future__ import annotations
@@ -93,22 +94,24 @@ class AggConstraint:
 
 
 class TableConstraint:
-    """Cross-partition / cross-snapshot constraint with its own plan."""
+    """Cross-partition / cross-snapshot constraint with its own plan.
+
+    ``run`` returns only the verdict rows it found — every non-PASS
+    verdict, and PASS rows only where it computed them — each with a
+    ``constraint`` column naming one of ``verdict_names()``. The suite
+    fills the rest of the (part × verdict_names()) grid with PASS in
+    ONE shared full-outer join, so a found row for a part that only
+    curated holds survives.
+    """
 
     name: str
-
-    #: when True, run() returns only found/failing verdict rows (with a
-    #: `constraint` column) and the suite fills the remaining
-    #: (part × verdict_names()) grid with PASS in ONE shared join
-    #: instead of one broadcast join per constraint.
-    partial_verdicts: bool = False
 
     def verdict_names(self) -> list[str]:
         return [self.name]
 
     def run(self, ctx: SuiteContext) -> tuple[DataFrame, DataFrame | None]:
-        """→ (verdicts[part, constraint, verdict, observed, expected],
-        violations | None)."""
+        """→ (found verdicts[part, constraint, verdict, observed,
+        expected], violations | None)."""
         raise NotImplementedError
 
 
@@ -202,18 +205,3 @@ def collect_local(df: DataFrame) -> DataFrame:
     )
     return DataFrame(local, spark)
 
-
-def fill_pass_for_missing_parts(verdicts: DataFrame, parts: DataFrame, constraint: str) -> DataFrame:
-    """Table constraints emit explicit rows only for failing parts; this
-    left-joins against the full part list so every (part × constraint)
-    gets a verdict (missing → PASS)."""
-    return (
-        parts.join(verdicts, "part", "left")
-        .select(
-            "part",
-            F.lit(constraint).alias("constraint"),
-            F.coalesce(F.col("verdict"), F.lit("PASS")).alias("verdict"),
-            F.col("observed").cast("string").alias("observed"),
-            F.col("expected").cast("string").alias("expected"),
-        )
-    )

@@ -182,7 +182,6 @@ class BloomReferential:
 
     # TableConstraint protocol (duck-typed to avoid a circular import
     # with operators.base at module load; the suite only calls these)
-    partial_verdicts = False
     name = "referential_bloom"
 
     def __init__(
@@ -198,10 +197,7 @@ class BloomReferential:
         return [self.name]
 
     def run(self, ctx):
-        from bigdime_spark.operators.base import (
-            fill_pass_for_missing_parts,
-            violation_rows,
-        )
+        from bigdime_spark.operators.base import violation_rows
         from bigdime_spark.schema import FAIL
 
         raw_keys = ctx.raw.select(self.key, "part")
@@ -236,6 +232,7 @@ class BloomReferential:
             .agg(F.count(F.lit(1)).alias("orphans"))
             .select(
                 "part",
+                F.lit(self.name).alias("constraint"),
                 F.lit(FAIL).alias("verdict"),
                 F.concat(
                     F.lit("definite_orphans="), F.col("orphans").cast("string")
@@ -245,10 +242,7 @@ class BloomReferential:
                 ),
             )
         )
-        return (
-            fill_pass_for_missing_parts(failed_parts, ctx.parts, self.name),
-            violations,
-        )
+        return failed_parts, violations
 
 
 def bloom_definite_misses(

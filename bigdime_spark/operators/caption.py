@@ -1,63 +1,20 @@
-"""Caption byte-equality raw vs curated (SURVEY B21; BASELINE.json:15)
-plus within-corpus caption↔image CONSISTENCY profiles (SURVEY C62).
+"""Within-corpus caption↔image CONSISTENCY profiles (SURVEY C62) and
+caption quality gates (C75, C76).
 
-Inner join on image_id; a mismatch is ``NOT (raw.caption <=>
-curated.caption)`` — Spark string comparison is exact UTF-8
-byte-equality, and the null-safe operator keeps (null, null) pairs
-out of this constraint (nulls belong to not_null). JVM-side, no UDF.
+Cross-snapshot caption byte-equality (SURVEY B21) is not here: it
+rides the keyed pass (``operators/keyed.KeyedSnapshotPass``), which
+compares each key's raw and curated captions with exact UTF-8
+byte-equality, null-safely, from the same shuffle as uniqueness and
+referential.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark.sql import Column
-
-from bigdime_spark.operators.base import (
-    AggConstraint,
-    SuiteContext,
-    TableConstraint,
-    fill_pass_for_missing_parts,
-    violation_rows,
-)
+from bigdime_spark.operators.base import AggConstraint
 from bigdime_spark.schema import FAIL
-
-
-class CaptionEquality(TableConstraint):
-    name = "caption_equality"
-
-    def __init__(self, key: str = "image_id", column: str = "caption"):
-        self.key = key
-        self.column = column
-
-    def run(self, ctx: SuiteContext) -> tuple[DataFrame, DataFrame]:
-        raw = ctx.raw.select(self.key, "part", F.col(self.column).alias("_raw_val"))
-        cur = ctx.curated.select(self.key, F.col(self.column).alias("_cur_val"))
-        mism = raw.join(cur, self.key).filter(~F.col("_raw_val").eqNullSafe(F.col("_cur_val")))
-        violations = violation_rows(
-            mism,
-            self.name,
-            self.column,
-            F.concat_ws(
-                " != ",
-                F.coalesce(F.col("_raw_val"), F.lit("∅")),
-                F.coalesce(F.col("_cur_val"), F.lit("∅")),
-            ),
-            "curated",
-            image_id_col=self.key,
-        )
-        failed_parts = (
-            mism.groupBy("part")
-            .agg(F.count(F.lit(1)).alias("mismatches"))
-            .select(
-                "part",
-                F.lit(FAIL).alias("verdict"),
-                F.concat(F.lit("mismatches="), F.col("mismatches").cast("string")).alias("observed"),
-                F.lit("mismatches=0").alias("expected"),
-            )
-        )
-        return fill_pass_for_missing_parts(failed_parts, ctx.parts, self.name), violations
 
 
 # ---------------------------------- caption↔image consistency (C62)

@@ -172,7 +172,7 @@ class SequenceContinuity(TableConstraint):
     undefined sequence is a part to look at, not a pass).
 
     Needs its own keyed aggregation (exact distinct), so it cannot
-    ride the fused stats pass — same disposition as Uniqueness, whose
+    ride the fused stats pass — same disposition as keyed uniqueness, whose
     per-key copy counts it deliberately does NOT duplicate: uniqueness
     attributes individual duplicate keys; continuity reads the id
     space as a whole (gaps have no row to point at).
@@ -180,8 +180,6 @@ class SequenceContinuity(TableConstraint):
     Partial-verdicts convention (DriftCheck's): emits rows only for
     parts present in the profile; parts absent from raw get PASS from
     the suite's shared grid join."""
-
-    partial_verdicts = True
 
     def __init__(self, id_col: str = "image_seq", max_gaps: int = 0):
         if int(max_gaps) < 0:
@@ -348,8 +346,6 @@ class FunctionalDependency(TableConstraint):
     (det, part, dep) — everything after is key-sized. The violating-det
     relation joins back AQE-planned (it can be large when the feed is
     badly broken; a broadcast hint would gamble on health)."""
-
-    partial_verdicts = True
 
     def __init__(self, det_col: str, dep_col: str, max_violations: int = 100):
         self.det_col = det_col

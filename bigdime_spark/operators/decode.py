@@ -956,10 +956,6 @@ class DecodeIntegrity(TableConstraint):
         # partial frame: suite grid join fills the PASS rows (pass 6)
         return failed_parts, violations
 
-    @property
-    def partial_verdicts(self) -> bool:
-        return True
-
     def verdict_names(self) -> list[str]:
         names = [_constraint_name(s) for s in self.snapshots]
         if self._quality_spec is not None:

@@ -694,8 +694,6 @@ class PhashNearDup:
     frame is pairs-sized (rare) and registered for release with the
     other persisted frames."""
 
-    partial_verdicts = True
-
     def __init__(
         self,
         k: int = 2,

@@ -726,10 +726,6 @@ class DriftCheck(TableConstraint):
         # (part × drift constraint) missing here (pass 6)
         return found, None
 
-    @property
-    def partial_verdicts(self) -> bool:
-        return True
-
     def verdict_names(self) -> list[str]:
         return [
             f"drift_{kind}.{s.column}" for s in self.specs for kind in ("ks", "psi")
@@ -775,10 +771,6 @@ class CategoricalDriftCheck(TableConstraint):
             F.lit(f"psi<{PSI_FAIL}").alias("expected"),
         )
         return found, None
-
-    @property
-    def partial_verdicts(self) -> bool:
-        return True
 
     def verdict_names(self) -> list[str]:
         return [f"{self._family}.{c}" for c in self.cols]

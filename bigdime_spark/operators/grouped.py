@@ -69,8 +69,6 @@ class GroupedBound(TableConstraint):
     detail (image_id NULL), bounded by the declared group cardinality.
     """
 
-    partial_verdicts = True
-
     def __init__(
         self,
         target: str,

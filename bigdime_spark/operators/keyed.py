@@ -39,11 +39,13 @@ per-part dup_copies are exact for keys spanning up to ``max_parts``
 partitions (default 100k — beyond any sane layout); violation DETAIL
 is one row per (key, part), the same per-part granularity B25 caps.
 
-Verdicts are bit-identical to the standalone operators in
-uniqueness.py / referential.py / caption.py for 1-copy-per-side keys
-(the healthy case and every contract fixture); for multi-copy keys
-the caption ``observed`` counts mismatching (key, raw-part) entries
-instead of m×n pairs.
+This is the engine's only implementation of these checks. The suite
+runs one pass per distinct key: uniqueness under its ``unique_key``,
+referential / caption / content under its ``ref_key`` — with equal
+keys (the default) that is this single fused pass. For a key with
+more than one copy on a side, violations are one row per (key, part)
+entry and the caption ``observed`` counts mismatching (key, raw-part)
+entries, not m×n copy pairs.
 """
 
 from __future__ import annotations
@@ -164,10 +166,16 @@ class KeyedSnapshotPass:
         return kp.groupBy(self.key).agg(*lvl2)
 
     def _joined(self, ctx: SuiteContext) -> DataFrame:
-        need_caption = self.check_caption and ctx.curated is not None
-        need_content = self.check_content and ctx.curated is not None
+        """The raw side's key aggregate, full-outer joined with the
+        curated side's only when a cross-snapshot check is on — a
+        uniqueness-only pass reads raw alone (one exchange, no join)."""
+        cross = ctx.curated is not None and (
+            self.check_referential or self.check_caption or self.check_content
+        )
+        need_caption = self.check_caption and cross
+        need_content = self.check_content and cross
         ragg = self._side(ctx.raw, need_caption, need_content, "r")
-        if ctx.curated is None:
+        if not cross:
             return ragg
         cagg = self._side(ctx.curated, need_caption, need_content, "c")
         return ragg.join(cagg, self.key, "full_outer")
@@ -231,8 +239,8 @@ class KeyedSnapshotPass:
             raise ValueError(
                 "KeyedSnapshotPass constructed with all checks disabled "
                 "(uniqueness/referential/caption) — nothing to run; the "
-                "suite guards this via _keyed_fusable, direct callers "
-                "must enable at least one check"
+                "suite builds a pass only for a key with a check on, "
+                "direct callers must enable at least one check"
             )
         interesting = preds[0]
         for p in preds[1:]:
@@ -446,29 +454,3 @@ class KeyedSnapshotPass:
         )
         return name, failed, violations
 
-
-class ContentEquality:
-    """Standalone TableConstraint adapter for the content diff — used
-    by the suite only when the keyed trio cannot fuse (unique_key ≠
-    ref_key); otherwise the digest rides the fused pass for free."""
-
-    partial_verdicts = True
-    name = "content_equality"
-
-    def __init__(self, key: str = "image_id", content_cols: tuple[str, ...] = ("w", "h", "fmt", "phash")):
-        self.key, self.content_cols = key, tuple(content_cols)
-
-    def verdict_names(self) -> list[str]:
-        return [self.name]
-
-    def run(self, ctx: SuiteContext):
-        kp = KeyedSnapshotPass(
-            key=self.key,
-            check_uniqueness=False,
-            check_referential=False,
-            check_caption=False,
-            check_content=True,
-            content_cols=self.content_cols,
-        )
-        (_, failed, violations), = kp.run(ctx)
-        return failed, violations

@@ -259,7 +259,7 @@ def zone_overlap_from_stats(
 
 
 class ZoneClustering(TableConstraint):
-    """Suite integration (partial_verdicts): FAIL partitions whose
+    """Suite integration: FAIL partitions whose
     [min, max] range of ``column`` overlaps more than ``max_fraction``
     of all partitions' ranges — the layout-health gate, computed from
     the suite's ALREADY-CACHED fused stats frame (``ctx.extras
@@ -307,10 +307,6 @@ class ZoneClustering(TableConstraint):
             F.lit(f"overlap_fraction<={self.max_fraction}").alias("expected"),
         )
         return found, None
-
-    @property
-    def partial_verdicts(self) -> bool:
-        return True
 
     def verdict_names(self) -> list[str]:
         return [self.name]

@@ -161,7 +161,7 @@ def numeric_stat_metrics(stats: DataFrame) -> list[str]:
 
 
 class ProfileOutliers(TableConstraint):
-    """Suite integration (partial_verdicts): one
+    """Suite integration: one
     ``profile_outlier.<metric>`` FAIL per flagged (part × metric) out
     of the ALREADY-CACHED fused stats frame (``ctx.extras
     ["fused_stats"]``) — the scorer adds two metadata-scale
@@ -207,10 +207,6 @@ class ProfileOutliers(TableConstraint):
             ).alias("expected"),
         )
         return found, None
-
-    @property
-    def partial_verdicts(self) -> bool:
-        return True
 
     def verdict_names(self) -> list[str]:
         return [f"profile_outlier.{m}" for m in self._resolved]

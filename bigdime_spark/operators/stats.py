@@ -1119,8 +1119,6 @@ class MutualInfoBound(TableConstraint):
     grid join — pair with not_null constraints on x/y when absence
     itself must fail."""
 
-    partial_verdicts = True
-
     def __init__(self, x: str, y: str, lo: float = 0.0, hi: float = 1.0):
         self.x, self.y = x, y
         self.lo, self.hi = float(lo), float(hi)
@@ -1165,8 +1163,6 @@ class DistinctnessBound(TableConstraint):
     that are SUPPOSED to repeat (a lang column at uniqueness 1.0
     means the tagger started emitting garbage). NOT_READY when the
     ratio is undefined (zero non-null values in the part)."""
-
-    partial_verdicts = True
 
     _METRICS = ("distinctness", "uniqueness", "unique_value_ratio")
 
@@ -1227,8 +1223,6 @@ class CategoricalBound(TableConstraint):
 
     NOT_READY when the part has zero non-null values (the profile
     emits no row; the suite's partial-verdict grid fills the gap)."""
-
-    partial_verdicts = True
 
     _METRICS = ("entropy", "top_frac", "n_distinct")
 
@@ -1320,8 +1314,6 @@ class BenfordBound(TableConstraint):
     Partial-verdicts convention (same as DriftCheck): parts absent
     from the profile get PASS from the suite's shared grid join —
     pair with not_null constraints when absence itself must fail."""
-
-    partial_verdicts = True
 
     def __init__(
         self, column: str, max_mad: float = 0.015, min_eligible: int = 100

@@ -14,7 +14,10 @@ loop with a handful of declarative Spark plans:
           violation-rescan gate sums its counters on the driver
   pass 3b CHECKSUM (decode off)         groupBy(part).agg(xor/sum of xxhash64)
           shares the stats scan (the only full-content scan then)
-  pass 4  cross-table constraints       uniqueness / referential / caption / drift
+  pass 4  cross-table constraints       one KeyedSnapshotPass per distinct key
+          (uniqueness on unique_key; referential / caption / content on
+          ref_key), then drift and the other table constraints; each
+          returns only the verdict rows it found, ONE grid join fills PASS
   pass 5  verdict union collected once into a LocalRelation; violations
           persisted, materialized and counted per part by one job
   pass 6  lineage rows built on the driver, appended
@@ -33,8 +36,6 @@ stay a persisted frame: only ``topk_violations`` bounds their size.
 
 from __future__ import annotations
 
-import os
-import sys
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -51,16 +52,13 @@ from bigdime_spark.operators.base import (
     local_frame,
 )
 from bigdime_spark.operators.bitbalance import BitBalance
-from bigdime_spark.operators.caption import CaptionEquality
 from bigdime_spark.operators.checksum import Checksum
 from bigdime_spark.operators.decode import DecodeIntegrity
 from bigdime_spark.operators.drift import DEFAULT_DRIFT_COLUMNS, DriftCheck
 from bigdime_spark.operators.keyed import KeyedSnapshotPass
 from bigdime_spark.operators.record_count import RecordCount
-from bigdime_spark.operators.referential import Referential
 from bigdime_spark.operators.row_checks import NotNull, default_image_domain_checks
 from bigdime_spark.operators.stats import StatsProfile, default_image_stats
-from bigdime_spark.operators.uniqueness import Uniqueness
 from bigdime_spark.plans import lineage as lin
 from bigdime_spark.schema import (
     FAIL,
@@ -70,24 +68,6 @@ from bigdime_spark.schema import (
     VIOLATION_SCHEMA,
     diff_schema,
 )
-
-
-def _profiler(t0: float):
-    """BIGDIME_PROFILE=1 → per-phase wall marks on stderr."""
-    if not os.environ.get("BIGDIME_PROFILE"):
-        return lambda label: None
-    last = [t0]
-
-    def mark(label: str) -> None:
-        now = time.monotonic()
-        print(
-            f"[suite-profile] {label}: +{now - last[0]:.1f}s (t={now - t0:.1f}s)",
-            file=sys.stderr,
-            flush=True,
-        )
-        last[0] = now
-
-    return mark
 
 
 @dataclass
@@ -236,6 +216,8 @@ class ValidationSuite:
     #: decode_rate_gate, certification is per stratum.
     decode_sample_stratify: str | None = None
     decode_sample_min_n: int = 0
+    #: uniqueness runs on unique_key; exact referential, caption and
+    #: content on ref_key — one keyed pass per distinct key
     unique_key: str = "image_id"
     ref_key: str = "image_id"
     #: True when raw/curated are BUCKETED tables on the keyed-pass key
@@ -373,11 +355,11 @@ class ValidationSuite:
     def _table_constraints(
         self, has_curated: bool, decode_tc: TableConstraint | None = None
     ) -> list[TableConstraint]:
-        """Constraints with their own plan, EXCLUDING the keyed trio
-        (uniqueness/referential/caption), which fuse into one shuffle
-        via KeyedSnapshotPass when the keys coincide. ``decode_tc`` is
-        the prebuilt decode constraint — None when it already ran in
-        pass 3a (checksum riding its scan)."""
+        """Constraints with their own plan, EXCLUDING the keyed checks
+        (uniqueness/referential/caption/content), which run in
+        ``_keyed_passes``. ``decode_tc`` is the prebuilt decode
+        constraint — None when it already ran in pass 3a (checksum
+        riding its scan)."""
         out: list[TableConstraint] = []
         if has_curated and self.check_referential and self.referential_mode == "bloom":
             from bigdime_spark.operators.bloom import BloomReferential
@@ -389,17 +371,6 @@ class ValidationSuite:
                     k=self.referential_bloom_k,
                 )
             )
-        if not self._keyed_fusable(has_curated):
-            if has_curated and self.check_content:
-                from bigdime_spark.operators.keyed import ContentEquality
-
-                out.append(ContentEquality(self.ref_key, self.content_cols))
-            if self.check_uniqueness:
-                out.append(Uniqueness(self.unique_key))
-            if has_curated and self._ref_exact:
-                out.append(Referential(self.ref_key))
-            if has_curated and self.check_caption:
-                out.append(CaptionEquality())
         if has_curated and self.check_drift:
             out.append(DriftCheck(self.drift_specs))
         if has_curated and self.categorical_drift_cols:
@@ -441,14 +412,28 @@ class ValidationSuite:
     def _ref_exact(self) -> bool:
         return self.check_referential and self.referential_mode == "exact"
 
-    def _keyed_fusable(self, has_curated: bool) -> bool:
-        wants_ref = has_curated and (
+    def _keyed_passes(self, has_curated: bool) -> list[KeyedSnapshotPass]:
+        """One KeyedSnapshotPass per distinct key: uniqueness runs
+        under ``unique_key``; exact referential, caption and content
+        run under ``ref_key`` (they need a curated snapshot). Equal
+        keys make one pass, one shuffle per side for every check."""
+        cross = has_curated and (
             self._ref_exact or self.check_caption or self.check_content
         )
-        if not (self.check_uniqueness or wants_ref):
-            return False
-        # fuse only when all requested keyed constraints share one key
-        return (not wants_ref) or (self.unique_key == self.ref_key) or not self.check_uniqueness
+        keys = [self.unique_key] if self.check_uniqueness else []
+        keys += [self.ref_key] if cross else []
+        return [
+            KeyedSnapshotPass(
+                key=key,
+                check_uniqueness=self.check_uniqueness and key == self.unique_key,
+                check_referential=self._ref_exact and key == self.ref_key,
+                check_caption=self.check_caption and key == self.ref_key,
+                check_content=self.check_content and key == self.ref_key,
+                content_cols=self.content_cols,
+                assume_clustered=self.keyed_assume_clustered,
+            )
+            for key in dict.fromkeys(keys)
+        ]
 
     # -------------------------------------------------------------- run
 
@@ -464,7 +449,6 @@ class ValidationSuite:
     ) -> SuiteResult:
         self.check_config(raw.columns)
         t0 = time.monotonic()
-        mark = _profiler(t0)
         run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
         declared = self.declared_schema or IMAGE_SCHEMA_PARTITIONED
 
@@ -556,7 +540,6 @@ class ValidationSuite:
         if ride:
             decode_found, decode_viol = decode_tc.run(ctx)
             cs_frame = ctx.extras.pop("decode_checksum_frame")
-            mark("pass3a decode scan (checksum riding)")
 
         # bytes (any binary column) never scanned in the stats pass —
         # SURVEY B0b; Catalyst further prunes to the columns the fused
@@ -643,7 +626,6 @@ class ValidationSuite:
         # the per-part stats double as the ProfileOutliers input (and
         # any extra table constraint that wants them) — zero rescan
         ctx.extras["fused_stats"] = fused
-        mark("pass3 fused stats+constraints agg collected")
 
         # long-format verdicts via inline(array(struct(...)))
         structs = [
@@ -737,37 +719,27 @@ class ValidationSuite:
                 if v is not None:
                     violation_frames.append(v)
 
-        # pass 4 — fused keyed trio (uniqueness/referential/caption):
-        # ONE shuffle on the key serves all three (operators/keyed.py).
-        # Keyed/drift/decode return PARTIAL verdict frames (failing
-        # rows only, with a constraint column); the full
+        # pass 4 — keyed checks (uniqueness/referential/caption/
+        # content): ONE shuffle per side per distinct key
+        # (operators/keyed.py). Every table constraint returns only
+        # the verdict rows it found, with a constraint column; the full
         # (part × constraint) grid is completed with PASS rows by ONE
-        # shared join below instead of a broadcast join per constraint.
+        # shared join below instead of a join per constraint.
         verdict_frames = verdict_frames_head + [agg_verdicts]
-        partial_frames: list[DataFrame] = []
-        partial_names: list[str] = []
-        if self._keyed_fusable(curated is not None):
-            keyed = KeyedSnapshotPass(
-                key=self.unique_key if self.check_uniqueness else self.ref_key,
-                check_uniqueness=self.check_uniqueness,
-                check_referential=self._ref_exact,
-                check_caption=self.check_caption,
-                check_content=self.check_content,
-                content_cols=self.content_cols,
-                assume_clustered=self.keyed_assume_clustered,
-            )
+        found_frames: list[DataFrame] = []
+        grid_names: list[str] = []
+        for keyed in self._keyed_passes(curated is not None):
             for name, v_df, viol in keyed.run(ctx):
-                partial_frames.append(v_df)
-                partial_names.append(name)
+                found_frames.append(v_df)
+                grid_names.append(name)
                 if viol is not None:
                     violation_frames.append(viol)
-            mark("pass4 keyed trio (eager rare frame)")
 
         # the decode pass that ran early (pass 3a, checksum riding its
         # scan) still owes its verdict/violation frames here
         if ride:
-            partial_frames.append(decode_found)
-            partial_names.extend(decode_tc.verdict_names())
+            found_frames.append(decode_found)
+            grid_names.extend(decode_tc.verdict_names())
             if decode_viol is not None:
                 violation_frames.append(decode_viol)
 
@@ -776,20 +748,17 @@ class ValidationSuite:
             curated is not None, decode_tc=None if ride else decode_tc
         ):
             v_df, viol = tc.run(ctx)
-            if getattr(tc, "partial_verdicts", False):
-                partial_frames.append(v_df)
-                partial_names.extend(tc.verdict_names())
-            else:
-                verdict_frames.append(v_df)
+            found_frames.append(v_df)
+            grid_names.extend(tc.verdict_names())
             if viol is not None:
                 violation_frames.append(viol)
 
-        if partial_frames:
-            found = partial_frames[0]
-            for fdf in partial_frames[1:]:
+        if found_frames:
+            found = found_frames[0]
+            for fdf in found_frames[1:]:
                 found = found.unionByName(fdf)
             grid = parts.crossJoin(
-                local_frame(spark, [(n,) for n in partial_names], "constraint string")
+                local_frame(spark, [(n,) for n in grid_names], "constraint string")
             )
             # FULL outer: the grid is built from raw-side parts, but
             # curated-side checks (decode.curated, spurious_curated)
@@ -811,7 +780,6 @@ class ValidationSuite:
         # partition-level violations, the lineage and the writes read
         # its LocalTableScan
         verdicts = collect_local(verdicts)
-        mark("pass5 verdicts collected (keyed+drift+decode+assembly)")
 
         # partition-level constraints (no single offending row) still owe
         # "one row per failed constraint with partition lineage"
@@ -851,7 +819,6 @@ class ValidationSuite:
         viol_per_part = {
             r["part"]: r["count"] for r in violations.groupBy("part").count().collect()
         }
-        mark("pass5 violations materialized and counted")
 
         # pass 6 — stats projection + lineage
         stats_out = fused.select(
@@ -907,7 +874,6 @@ class ValidationSuite:
         )
         if store is not None:
             store.append(lineage)
-            mark("pass6 lineage appended")
 
         return SuiteResult(
             run_id=run_id,

@@ -148,3 +148,39 @@ def test_suite_referential_bloom_screen(spark):
         and p not in {x["part"] for x in viol}
     )
     res.release()
+
+
+def test_suite_bloom_fails_curated_only_part(spark):
+    """A part only curated holds (every key in it spurious) gets a
+    referential_bloom FAIL row, as the exact referential check gives
+    it: the suite's grid join keeps found rows for parts raw lacks."""
+    from bigdime_spark.plans.suite import ValidationSuite
+    from bigdime_spark.schema import FAIL
+    from bigdime_spark.sources.synth import build_fixture
+
+    fx = build_fixture(spark, n_rows=64 * 4, n_parts=4)
+    extra = (
+        fx.curated.filter(F.col("part") == "p0000")
+        .limit(3)
+        .withColumn("image_id", F.concat(F.lit("cur-only-"), F.col("image_id")))
+        .withColumn("part", F.lit("p0009"))
+    )
+    curated = fx.curated.unionByName(extra)
+    got = {}
+    for mode, name in (("bloom", "referential_bloom"), ("exact", "referential")):
+        res = ValidationSuite(
+            check_drift=False,
+            check_caption=False,
+            check_uniqueness=False,
+            referential_mode=mode,
+            referential_bloom_bits=1 << 17,
+        ).run(spark, fx.raw, curated, manifest=None, resume=False)
+        got[mode] = [
+            (r["verdict"], r["observed"])
+            for r in res.verdicts.filter(
+                (F.col("part") == "p0009") & (F.col("constraint") == name)
+            ).collect()
+        ]
+        res.release()
+    assert got["exact"] == [(FAIL, "orphans=3")]
+    assert got["bloom"] == [(FAIL, "definite_orphans=3")]

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from bigdime_spark.operators.base import SuiteContext
 from bigdime_spark.operators.keyed import KeyedSnapshotPass
-from bigdime_spark.operators.uniqueness import Uniqueness
 
 STORM_COPIES = 100_000
 N_PARTS = 4
@@ -100,19 +99,22 @@ def test_keyed_pass_single_exchange_per_side(spark):
 def test_standalone_uniqueness_bounded_and_exact(spark):
     raw = _storm_frame(spark)
     ctx = SuiteContext(spark=spark, raw=raw, curated=None, manifest=None, parts=None)
-    ctx.parts = raw.select("part").distinct()
-    verdicts, violations = Uniqueness("image_id", max_parts=100).run(ctx)
+    ((_, verdicts, violations),) = KeyedSnapshotPass(
+        max_parts=100, check_referential=False, check_caption=False
+    ).run(ctx)
     hot_viol = violations.filter(F.col("image_id") == "hot-key").collect()
     assert len(hot_viol) == N_PARTS  # one per involved part, not per copy
     assert all(f"({STORM_COPIES} copies)" in r["detail"] for r in hot_viol)
     vmap = {r["part"]: (r["verdict"], r["observed"]) for r in verdicts.collect()}
     assert all(vmap[f"p{i}"] == ("FAIL", "dup_copies=25000") for i in range(N_PARTS))
+    for df in ctx.extras["persisted"]:
+        df.unpersist()
 
 
 def test_keyed_pass_all_checks_off_raises(spark):
     """Constructing the pass with every check disabled is a caller bug
-    (the suite guards it via _keyed_fusable) — it must be a loud
-    ValueError, not an IndexError in _rare."""
+    (the suite builds a pass only for a key with a check on) — it must
+    be a loud ValueError, not an IndexError in _rare."""
     import pytest as _pytest
 
     raw = _storm_frame(spark)
@@ -161,3 +163,64 @@ def test_content_diff_flags_changed_rows_only(spark):
     ctx2 = SuiteContext(spark=spark, raw=fx.raw, curated=fx.curated)
     results2 = {name: (v, viol) for name, v, viol in kp.run(ctx2)}
     assert results2["content_equality"][1].count() == 0
+
+
+def test_suite_differing_keys_match_single_key_pass(spark):
+    """unique_key ≠ ref_key (``suggest`` promotes "caption" on synth
+    tables) runs one keyed pass per key: uniqueness under caption, and
+    referential / caption / content under image_id with exactly the
+    verdicts and violations of the equal-key run — a two-copy orphan
+    key included, which gives one violation per (key, part) entry."""
+    from bigdime_spark.plans.suite import ValidationSuite
+    from bigdime_spark.sources.synth import InjectionSpec, build_fixture
+
+    orphan = "img-000000000005"  # p0001
+    fx = build_fixture(
+        spark,
+        n_rows=64 * 4,
+        n_parts=4,
+        spec=InjectionSpec(
+            dup_image_id=((orphan, "p0001"),),  # its second copy, same part
+            orphan_raw=(orphan, "img-000000000010"),
+            spurious_curated=2,
+            caption_edit=("img-000000000007",),
+        ),
+    )
+
+    def run(unique_key):
+        res = ValidationSuite(
+            unique_key=unique_key, check_content=True, check_drift=False
+        ).run(spark, fx.raw, fx.curated, resume=False)
+        verdicts = {
+            (r["part"], r["constraint"]): (r["verdict"], r["observed"])
+            for r in res.verdicts.collect()
+        }
+        violations = sorted(
+            (r["constraint"], r["part"], r["image_id"], r["detail"], r["snapshot"])
+            for r in res.violations.collect()
+        )
+        res.release()
+        return verdicts, violations
+
+    by_caption, viol_caption = run("caption")
+    by_id, viol_id = run("image_id")
+
+    uniq = {p: v for (p, c), v in by_caption.items() if c == "uniqueness.caption"}
+    assert uniq == {
+        "p0000": ("PASS", None),
+        "p0001": ("FAIL", "dup_copies=2"),
+        "p0002": ("PASS", None),
+        "p0003": ("PASS", None),
+    }
+    cross = ("referential", "caption_equality", "content_equality")
+    assert {k: v for k, v in by_caption.items() if k[1] in cross} == {
+        k: v for k, v in by_id.items() if k[1] in cross
+    }
+    assert [v for v in viol_caption if v[0] in cross] == [
+        v for v in viol_id if v[0] in cross
+    ]
+    assert by_id[("p0001", "referential")] == ("FAIL", "orphans=3")
+    assert [v[1] for v in viol_id if v[0] == "referential" and v[2] == orphan] == [
+        "p0001"
+    ]
+    assert by_id[("p0003", "caption_equality")] == ("FAIL", "mismatches=1")

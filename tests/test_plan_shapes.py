@@ -129,6 +129,22 @@ def test_keyed_pass_single_exchange_pair(spark, parquet_fixture):
     assert "FullOuter" in plan
 
 
+def test_keyed_uniqueness_only_reads_raw_alone(spark, parquet_fixture):
+    """A uniqueness-only keyed pass given a curated snapshot builds the
+    raw side alone: one exchange, no join against curated."""
+    from bigdime_spark.operators.base import SuiteContext
+    from bigdime_spark.operators.keyed import KeyedSnapshotPass
+
+    raw = spark.read.parquet(f"{parquet_fixture}/raw")
+    ctx = SuiteContext(spark=spark, raw=raw, curated=raw)
+    j = KeyedSnapshotPass(check_referential=False, check_caption=False)._joined(ctx)
+    plan = _explain(j)
+    import re
+
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
+    assert "Join" not in plan, plan
+
+
 def test_bounded_dup_groups_single_exchange(spark, parquet_fixture):
     """The round-4 bounded dup_ids sample (row_number window +
     conditional collect_list) must not buy its memory bound with an
